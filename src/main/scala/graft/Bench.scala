@@ -1,31 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 import graft.queries.QueryDef
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // ≥3 runs per query, report the MEDIAN (and min): single-shot numbers
     // at this scale carry ±15% JVM/GC noise, which masks real plan
     // regressions round-over-round.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    // AQE's post-shuffle coalescing floor: with the 1m default, any
-    // shuffle under cores×1 MB coalesces to a handful of partitions —
-    // correct when stages are byte-bound, but it re-serializes CPU-bound
-    // kernels over small-byte rows (candidate-pair edit distance, ANN
-    // scoring). 64k only changes shuffles smaller than cores×1 MB — at
-    // production bytes-per-core the two values behave identically, so
-    // this is not a local-only tune (optimization guide §2.2/§2.5);
-    // parameterized for cluster experiments.
-    val minCoalesce = sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", minCoalesce)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // JVM/codegen + parquet-reader warmup so the first timed query doesn't
     // absorb classloading or scan-path initialization.
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()

@@ -31,7 +31,4 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(o => q.name -> o.trim)).toMap
-
-  /** Headline queries Bench.scala times at sf0.1. */
-  def benchQueries: Seq[QueryDef] = registry.filter(_.bench)
 }

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
@@ -55,19 +55,9 @@ object Verify {
         val subs = args(2).split(',').filter(_.nonEmpty)
         (n: String) => subs.exists(n.contains)
       } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same coalescing floor as Bench (see there): correctness is
-      // verified under the partitioning the bench actually runs
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val selected = SparkEntry.queries.toSeq.filter(kv => only(kv._1))
+    val spark = LocalSession()
+    val selected = SparkEntry.registry.collect {
+      case q if only(q.name) => q.name -> q.fn }
     val failed = dump(spark, sfDir, outDir, selected)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 
 /** The ONE materialization barrier every multi-consumer query site
   * routes through (CorpusOps q86's scrub output, TextAnalytics' tf and
@@ -59,4 +63,17 @@ object Barrier {
       case None => df.localCheckpoint()
     }
   }
+
+  /** Read an [[Observation]] whose metrics ride a job that has already
+    * run (typically the materialization job of a [[cut]] over the
+    * observed frame) — a driver value with no extra action. The wait is
+    * bounded at 30 s and `fallback` (usually one explicit action that
+    * recomputes the same value) runs only when the metrics never
+    * arrive, so a metrics regression can never hang a query or change
+    * its result. */
+  def observed[T](obs: Observation)(read: Row => T)(fallback: => T): T =
+    Try(Await.result(obs.future, Duration(30, "s"))).toOption match {
+      case Some(row) => read(row)
+      case None => fallback
+    }
 }

@@ -212,12 +212,8 @@ object Dedup {
       val obs = org.apache.spark.sql.Observation()
       val materialized = cut(updated.observe(obs,
         coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L)).as("n_chg")))
-      changed = scala.util.Try(scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(30, "s")))
-        .toOption match {
-        case Some(row) => row.getLong(0)
-        case None => materialized.filter(col("chg")).count()
-      }
+      changed = Barrier.observed(obs)(_.getLong(0))(
+        materialized.filter(col("chg")).count())
       labels = materialized.select("id", "comp")
       iter += k
     }

@@ -96,7 +96,7 @@ object GraphAlgos {
     // the update as a driver literal (1/n, (1−d)/n and dm/n divide the
     // same IEEE operands wherever the division runs, so every rank
     // float is unchanged — the oracle replays the same formula).
-    // Bounded wait + count fallback (the Observation convention).
+    // Bounded wait + count fallback ([[Barrier.observed]]).
     val obs = org.apache.spark.sql.Observation()
     val nodes = Barrier.cut(nodesL.observe(obs, count(lit(1)).as("n")))
     val ew = Barrier.cut(edges.join(deg, "src"))
@@ -104,12 +104,7 @@ object GraphAlgos {
       deg.select(col("src").as("node")), Seq("node"), "left_anti"))
       else null
     val n: Double =
-      scala.util.Try(scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(30, "s")))
-        .toOption match {
-        case Some(row) => row.getLong(0).toDouble
-        case None => nodes.count().toDouble
-      }
+      Barrier.observed(obs)(_.getLong(0).toDouble)(nodes.count().toDouble)
     var ranks = nodes.select(col("node"), (lit(1.0) / lit(n)).as("rank"))
     var prevRdd: Option[org.apache.spark.rdd.RDD[_]] = None
     // Cut cadence: on the sink-free shape each rank frame feeds the next

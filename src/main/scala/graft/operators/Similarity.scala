@@ -1709,17 +1709,13 @@ object Similarity {
       coarseResiduals(corpus, coarse).observe(obs,
         collect_list(when(col("id").isin(seedIds: _*),
           struct(col("id"), col("r")))).as("seed_rows")))
-    val seedRows: Seq[(Long, Seq[Double])] =
-      scala.util.Try(scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(30, "s")))
-        .toOption match {
-        case Some(row) =>
-          row.getSeq[Row](0).map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-        case None => // fallback: one cheap scan of the checkpointed blocks
-          assigned.filter(col("id").isin(seedIds: _*))
-            .select(col("id"), col("r")).collect()
-            .toSeq.map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-      }
+    val seedRows: Seq[(Long, Seq[Double])] = Barrier.observed(obs)(
+        _.getSeq[Row](0).map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))) {
+      // fallback: one cheap scan of the checkpointed blocks
+      assigned.filter(col("id").isin(seedIds: _*))
+        .select(col("id"), col("r")).collect()
+        .toSeq.map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
+    }
     val resid = assigned.select(col("id"), col("r").as("e"))
     val bk = pqTrainSeeded(resid, m, dim, seedIds, seedRows, iters)
     // c_id travels THROUGH the encode projection instead of being

@@ -238,8 +238,7 @@ object CorpusOps {
              ${bucketSql("order3", "doc_id")} AS train_bucket
       FROM capped
       ORDER BY train_bucket, doc_id
-    """),
-    bench = true)
+    """))
 
   /** GPT-style sequence packing ([[Sampling.packSequences]]): the corpus
     * concatenates in 8 hash-sharded deterministic streams and cuts every
@@ -275,8 +274,7 @@ object CorpusOps {
              (("tok_offset" + greatest(n_tokens, 1) - 1) // 512) - ("tok_offset" // 512) + 1 AS n_bins
       FROM o
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** C4-style boilerplate-span removal
     * ([[graft.operators.CorpusStats.dropRepeatedSpans]], 8-word spans,
@@ -324,8 +322,7 @@ object CorpusOps {
       FROM spans s JOIN freq f USING (span)
       GROUP BY s.doc_id
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** The pack manifest ([[Sampling.packManifest]]): the (shard, bin) →
     * ordered member docs layout a training-file writer materializes from
@@ -362,8 +359,7 @@ object CorpusOps {
       FROM spans
       GROUP BY shard, bin
       ORDER BY shard, bin
-    """),
-    bench = true)
+    """))
 
   /** Temperature-T=2 source mixing
     * ([[graft.operators.Sampling.temperatureMixSqrt]]): per-source keep
@@ -561,8 +557,7 @@ object CorpusOps {
              len(ws)::BIGINT AS n_tokens
       FROM mixed WHERE len(ws) > 0
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** The round-7 STATELESS hygiene composition
     * ([[graft.streaming.CorpusStreams.hygieneStateless]]) run on the
@@ -613,8 +608,8 @@ object CorpusOps {
       // the distinct-source set rides the vocab job as an observed
       // metric (every doc row flows through the scrub subtree anyway)
       // instead of a second collect re-running the fan-out exchange —
-      // one driver action fewer. Bounded wait + explicit fallback (the
-      // Observation convention).
+      // one driver action fewer. Bounded wait + explicit fallback
+      // ([[graft.operators.Barrier.observed]]).
       val obs = org.apache.spark.sql.Observation()
       val weights = graft.operators.PiiScrub.scrub(
           docs.observe(obs, collect_set(col("source").cast("string"))
@@ -630,11 +625,8 @@ object CorpusOps {
           t -> (if (h % 3 == 0) 0L else (h % 17) - 8) }
         .filter(_._2 != 0L).toMap
       val sources: Seq[String] =
-        scala.util.Try(scala.concurrent.Await.result(obs.future,
-            scala.concurrent.duration.Duration(30, "s")))
-          .toOption match {
-          case Some(row) => row.getSeq[String](0)
-          case None => docs.select(col("source").cast("string")).distinct()
+        graft.operators.Barrier.observed(obs)(_.getSeq[String](0)) {
+          docs.select(col("source").cast("string")).distinct()
             .collect().iterator.map(_.getString(0)).toSeq
         }
       val thresholds = sources
@@ -714,8 +706,7 @@ object CorpusOps {
              array_to_string(ws[(chunk_idx*24+1)::INT : (chunk_idx*24+32)::INT], ' ') AS chunk_text
       FROM chunks
       ORDER BY doc_id, chunk_idx
-    """),
-    bench = true)
+    """))
 
   /** Epoch-replication mixing ([[graft.operators.Sampling.epochMix]]):
     * per-source epoch rates (floor = full copies, fraction = a
@@ -756,8 +747,7 @@ object CorpusOps {
       SELECT doc_id, source, unnest(range(0, n))::BIGINT AS epoch
       FROM n WHERE n > 0
       ORDER BY doc_id, epoch
-    """),
-    bench = true)
+    """))
 
   /** Deterministic weighted reservoir (Efraimidis–Spirakis A-Res): 10
     * docs per source, selection probability ∝ n_chars — the "prefer
@@ -781,8 +771,7 @@ object CorpusOps {
                    / n_chars::DOUBLE DESC,
                  doc_id) <= 10
       ORDER BY source, doc_id
-    """),
-    bench = true)
+    """))
 
   /** Leakage-safe train/val/test split: the assignment hashes the GROUP
     * (here `source`, standing in for url-host/domain), so near-dups

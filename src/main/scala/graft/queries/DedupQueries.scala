@@ -111,8 +111,7 @@ object DedupQueries {
       JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
                   AND a.doc_id < b.doc_id
       ORDER BY id_a, id_b
-    """),
-    bench = true)
+    """))
 
   /** Exact 3-gram Jaccard verification of the LSH candidates — the verify
     * stage that makes LSH dedup precise. Only candidate pairs pay the
@@ -310,8 +309,7 @@ object DedupQueries {
       FROM pc p JOIN assigned a ON a.c_id = p.c_id
       WHERE list_dot_product(p.up, a.ue) >= 0.8
       ORDER BY probe_id, vec_id
-    """),
-    bench = true)
+    """))
 
   /** q26b against the MATERIALIZED index
     * ([[graft.operators.Similarity.ivfRangeSearchIndexed]]) — the
@@ -408,8 +406,7 @@ object DedupQueries {
       FROM near
       WHERE hamming <= 3
       ORDER BY id_a, id_b
-    """),
-    bench = true)
+    """))
 
   /** Train/eval split-leakage audit — the hygiene gate a pipeline runs
     * AFTER splitting and BEFORE shipping an eval set: near-duplicate
@@ -480,8 +477,7 @@ object DedupQueries {
       SELECT eval_id, train_id, hamming
       FROM leaked
       ORDER BY eval_id, train_id
-    """),
-    bench = true)
+    """))
 
   /** Leakage REMEDIATION — the operator a pipeline runs on q131's
     * output: emit the CLEANED eval assignment, i.e. every eval doc with
@@ -528,8 +524,7 @@ object DedupQueries {
              % 1000000) >= 800000
         AND c.doc_id NOT IN (SELECT eval_id FROM leaked)
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** The near-dup eval-set GUARD's kernel under the cross-engine oracle
     * — [[graft.streaming.CorpusStreams.nearDupGuard]] run on batch
@@ -595,8 +590,7 @@ object DedupQueries {
       FROM near
       WHERE hamming <= 3
       ORDER BY doc_id, protected_id
-    """),
-    bench = true)
+    """))
 
   /** q132's DEAD-LETTER mode under the cross-engine oracle — the
     * configuration a production stream actually runs
@@ -668,8 +662,7 @@ object DedupQueries {
              NULL::BIGINT AS hamming
       FROM documents WHERE doc_id % 100 = 0
       ORDER BY doc_id, protected_id
-    """),
-    bench = true)
+    """))
 
   /** The GUARDED near-dup clustering contract under a full oracle —
     * [[graft.operators.Dedup.nearDupClusters]] end-to-end: simhash
@@ -734,8 +727,7 @@ object DedupQueries {
       SELECT id AS sid, min(r)::BIGINT AS cluster
       FROM reach GROUP BY id
       ORDER BY sid
-    """),
-    bench = true)
+    """))
 
   /** Benchmark decontamination under an exact-join oracle: the "benchmark"
     * set is the middle 20-word slice of every 50th document (so
@@ -761,8 +753,7 @@ object DedupQueries {
           bench, col("btext"), col("bench_id"))
         .orderBy("doc_id")
     },
-    Some(decontOracleSql),
-    bench = true)
+    Some(decontOracleSql))
 
   /** The Bloom-prefiltered decontamination
     * ([[graft.operators.Dedup.decontaminateBloom]]): benchmark grams
@@ -780,8 +771,7 @@ object DedupQueries {
           expectedGrams = 100000L, fpp = 0.01)
         .orderBy("doc_id")
     },
-    Some(decontOracleSql),
-    bench = true)
+    Some(decontOracleSql))
 
   private lazy val decontOracleSql: String = ("""
       WITH toks AS (
@@ -904,8 +894,7 @@ object DedupQueries {
       FROM corpus c LEFT JOIN l6 l ON l.id = c.id
       WHERE l.comp IS NULL OR l.comp = c.id
       ORDER BY c.id
-    """),
-    bench = true)
+    """))
 
   /** Exact duplicated-substring spans (Lee et al. 2021) over the raw
     * documents table — the natural cross-document repetition in the
@@ -952,8 +941,7 @@ object DedupQueries {
              (max(pos) + 13)::BIGINT AS span_end, count(*)::BIGINT AS n_grams
       FROM isl GROUP BY doc_id, island
       ORDER BY doc_id, span_start
-    """),
-    bench = true)
+    """))
 
   /** The cut half of Lee et al. substring dedup
     * ([[graft.operators.Dedup.cutDuplicateSpans]]): every duplicated
@@ -1011,8 +999,7 @@ object DedupQueries {
       LEFT JOIN kept k ON d.doc_id = k.doc_id
       LEFT JOIN ncut n ON d.doc_id = n.doc_id
       ORDER BY d.doc_id
-    """),
-    bench = true)
+    """))
 
   /** Incremental cross-version dedup — the daily crawl shape: a standing
     * fingerprint INDEX (yesterday's corpus, 16 bytes/doc, never re-read
@@ -1066,8 +1053,7 @@ object DedupQueries {
       SELECT doc_id, fp FROM firsts
       WHERE fp NOT IN (SELECT fp FROM index_fp)
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** Fuzzy-match verification: LSH candidate pairs (the q23 generator)
     * verified by BOUNDED edit distance — the entity-resolution /
@@ -1184,8 +1170,7 @@ object DedupQueries {
       WHERE abs(len(ca.text) - len(cb.text)) <= 60
         AND levenshtein(ca.text, cb.text) <= 60
       ORDER BY id_a, id_b
-    """),
-    bench = true)
+    """))
 
   val all: Seq[QueryDef] = Seq(
     q100IncrementalDedup, q117FuzzyVerify,

@@ -76,8 +76,7 @@ object GraphQueries {
       SELECT node, round(rank, 9) AS rank FROM r10
       ORDER BY node
       """
-    },
-    bench = true)
+    })
 
   /** PageRank on a graph WITH sinks: dropping every out-edge of nodes
     * ≡ 0 (mod 17) makes them DANGLING (they keep in-edges — real host
@@ -131,8 +130,7 @@ object GraphQueries {
       SELECT node, round(rank, 9) AS rank FROM r10
       ORDER BY node
       """
-    },
-    bench = true)
+    })
 
   /** Multi-source BFS hop distances ([[GraphAlgos.bfsDistances]]) — the
     * frontier-expansion workload: sources are the nodes ≡ 0 (mod 97),
@@ -173,8 +171,7 @@ object GraphQueries {
       SELECT node, dist FROM d6
       ORDER BY node
       """
-    },
-    bench = true)
+    })
 
   /** Per-node triangle counts with the degree-orientation bound
     * (Σ orientedDeg² ≤ m^{3/2}, not Σ deg²) — the oracle replays the

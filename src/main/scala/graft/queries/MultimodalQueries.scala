@@ -553,8 +553,7 @@ object MultimodalQueries {
               CASE WHEN substr(fp_a, i::INT, 1) <> substr(fp_b, i::INT, 1)
                    THEN 1 ELSE 0 END)) <= 10
       ORDER BY id_a, id_b
-    """),
-    bench = true)
+    """))
 
   /** Audio near-duplicate detection over REAL decoded PCM — the audio
     * half of multimodal dedup, completing the image pipeline of q75: a
@@ -629,8 +628,7 @@ object MultimodalQueries {
               CASE WHEN substr(fp_a, i::INT, 1) <> substr(fp_b, i::INT, 1)
                    THEN 1 ELSE 0 END)) <= 10
       ORDER BY id_a, id_b
-    """),
-    bench = true)
+    """))
 
   /** Video near-duplicate detection over REAL decoded frames — the
     * video leg of multimodal dedup, completing the image (q75) / audio
@@ -718,8 +716,7 @@ object MultimodalQueries {
       JOIN nsampled nb ON nb.media_id = m.id_b
       WHERE m.n_match * 2 >= least(na.ns, nb.ns)
       ORDER BY m.id_a, m.id_b
-    """),
-    bench = true)
+    """))
 
   /** Nearest-neighbor resize end to end over the three real containers
     * (PNG / GIF / top-down BMP, [[graft.multimodal.MediaSynth.nearDupImage]]):
@@ -767,8 +764,7 @@ object MultimodalQueries {
       FROM gray gr JOIN d USING (media_id)
       GROUP BY gr.media_id, d.w, d.h
       ORDER BY gr.media_id
-    """),
-    bench = true)
+    """))
 
   /** Hierarchical (T.81 Annex J) JPEG payload decode end to end, pure
     * JVM: real DHP-framed pyramids ([[graft.multimodal.MediaSynth

@@ -234,8 +234,7 @@ object OmimQueries {
       FROM events
       GROUP BY 1, 2
       ORDER BY window_start, event_type
-    """),
-    bench = true)
+    """))
 
   /** Sessionization: per-user sessions split on >30-minute gaps (lag +
     * running sum), then per-session aggregates — the batch shape of
@@ -311,8 +310,7 @@ object OmimQueries {
       FROM fact JOIN dim USING (k)
       GROUP BY grp
       ORDER BY grp
-    """),
-    bench = true)
+    """))
 
   /** JSON scalar extraction (schema-on-read family, SURVEY §1.1.2): the
     * events `props` column holds JSON strings; extract + cast + aggregate.

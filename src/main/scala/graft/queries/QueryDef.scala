@@ -12,14 +12,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    below accumulated-error scale, never at a representable boundary;
   *  - DuckDB's HUGEINT sums are cast back to BIGINT to match Spark's LongType.
   *
-  * `bench = true` marks the headline queries Bench.scala times at sf0.1.
+  * Bench times every registry query whose `benchSkip` is false (the
+  * default). `benchSkip = true` leaves a query out of the timed suite —
+  * e.g. fixture-scale queries that ignore sfDir; each use says why at
+  * its definition.
   */
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    bench: Boolean = false,
-    benchSkip: Boolean = false, // fixture-scale queries that ignore sfDir
+    benchSkip: Boolean = false,
     // Build-once-serve-many hook: Bench runs this UNTIMED before the
     // timed rounds (persisted-index builds), so the samples measure only
     // the recurring probe path. The query's fn must stay self-contained

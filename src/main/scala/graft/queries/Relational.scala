@@ -44,8 +44,7 @@ object Relational {
       WHERE l_shipdate <= TIMESTAMP '1998-09-02'
       GROUP BY l_returnflag, l_linestatus
       ORDER BY l_returnflag, l_linestatus
-    """),
-    bench = true)
+    """))
 
   /** F1/F4/F7: projection + conjunctive predicates, all pushed to the parquet
     * scan (ref: early `continue` filters, omim_txt_parser.py:456-460). */
@@ -104,8 +103,7 @@ object Relational {
       JOIN region   ON n_regionkey = r_regionkey
       GROUP BY r_name, n_name
       ORDER BY r_name, n_name
-    """),
-    bench = true)
+    """))
 
   /** J9-style LEFT SEMI (EXISTS) — ref: `(p_mim,'3',gene_mim) in morbidmap`
     * membership probe, omim_txt_parser.py:150-157. */
@@ -167,8 +165,7 @@ object Relational {
             FROM lineitem)
       WHERE rn <= 3
       ORDER BY l_suppkey, rn
-    """),
-    bench = true)
+    """))
 
   /** J14: equivalence-clique self-join — ref: rows sharing a key listed on
     * each other, analyses/equivalency_cliques.py:68-94. */
@@ -299,8 +296,7 @@ object Relational {
       WHERE len(token) > 0
       GROUP BY token
       ORDER BY token
-    """),
-    bench = true)
+    """))
 
   /** A1/A2/A5: grouped list collection with deterministic ordering — ref:
     * per-gene assoc nesting omim_txt_parser.py:478-493; omim→mondo multimap
@@ -481,8 +477,7 @@ object Relational {
       FROM lineitem
       GROUP BY l_returnflag
       ORDER BY l_returnflag
-    """),
-    bench = true)
+    """))
 
   /** Accuracy anchor for approx distinct counting. TEST-SCALE ONLY
     * (`benchSkip`): the exact `countDistinct` here shuffles every
@@ -964,8 +959,7 @@ object Relational {
         UNION ALL
         SELECT 'o_orderdate', od_nl, od_nd, true, od_mn, od_mx, n FROM a)
       ORDER BY col_name
-    """),
-    bench = true)
+    """))
 
   /** Per-group OLS regression aggregates (extendedprice ~ quantity per
     * return flag) — Spark-first: the built-in regr_* aggregate family
@@ -1024,8 +1018,7 @@ object Relational {
              (${graft.operators.Bucketing.zOrderKeySql("zx", "zy", 21)}) AS zkey
       FROM dims
       ORDER BY zkey, o_orderkey
-    """),
-    bench = true)
+    """))
 
   /** N-DIMENSIONAL Morton layout keys over (customer, order-day,
     * ship-priority-ish) — the general `ZORDER BY (c1, c2, c3)` shape
@@ -1206,8 +1199,7 @@ object Relational {
                  n_chars::VARCHAR || '|' || md5(text)), 1, 15))::BIGINT)
         FROM documents)
       ORDER BY table_name
-    """),
-    bench = true)
+    """))
 
   val all: Seq[QueryDef] = Seq(
     q01PricingSummary, q02FilterProject, q03JoinRevenue, q04SemiJoin,

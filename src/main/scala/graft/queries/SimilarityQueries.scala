@@ -57,15 +57,11 @@ object SimilarityQueries {
       SELECT probe_id, rank, id, round(cos, 9) AS cos
       FROM scored WHERE rank <= 5
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** (corpus, seed centroids, probes) — the ONE input construction the
-    * whole IVF gate family shares. private[graft] so measurement probes
-    * (RecallProbe) sweep exactly the setup the gates score — a probe on
-    * a re-implemented copy would silently stop corresponding to the
-    * gate numbers it exists to explain. */
-  private[graft] def ivfInputs(s: SparkSession, d: String)
+    * whole IVF gate family shares. */
+  private def ivfInputs(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val e = emb(s, d)
     // first-vector-per-label as a partial-aggregable min(struct): the
@@ -457,8 +453,7 @@ object SimilarityQueries {
       """
       SELECT c_id, (j - 1)::INT AS dim, round(m, 9) AS m
       FROM m2 ORDER BY c_id, dim
-    """),
-    bench = true)
+    """))
 
   /** q28 on TRAINED centroids: the same label-medoid seeds, improved by 2
     * Lloyd rounds ([[Similarity.kmeansTrain]]), then the identical IVF
@@ -504,8 +499,7 @@ object SimilarityQueries {
       SELECT probe_id, rank, id, round(cos, 9) AS cos
       FROM scored WHERE rank <= 3
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** Hyperplane-LSH ANN ([[Similarity.lshTopK]]): 16 md5-derived random
     * hyperplanes → sign signatures → 2-bit band collisions (8 bands;
@@ -552,8 +546,7 @@ object SimilarityQueries {
       SELECT probe_id, rank, id, round(cos, 9) AS cos
       FROM scored WHERE rank <= 3
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** Random ±1 (Johnson–Lindenstrauss) projection 64 → 8 dims — the
     * storage-free dimensionality-reduction front of the ANN ladder: sign
@@ -588,8 +581,7 @@ object SimilarityQueries {
       FROM emb
       ORDER BY vec_id
       """
-    },
-    bench = true)
+    })
 
   /** Symmetric int8 quantization of the embedding column — the 4×
     * memory/IO reduction a 100 TB vector store runs before ANN: per
@@ -1020,8 +1012,7 @@ object SimilarityQueries {
       FROM bfn p
       LEFT JOIN hits h ON h.probe_id = p.probe_id
       ORDER BY p.probe_id
-    """),
-    bench = true)
+    """))
 
   /** Recall@k for the QUANTIZED ladder — the quality gate q130 gives the
     * unquantized IVF, applied to the PERSISTED IVF-PQ index (q127c's
@@ -1304,8 +1295,7 @@ object SimilarityQueries {
       SELECT probe_id, rank, id, round(cos, 9) AS cos
       FROM scored WHERE rank <= 3
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** INLINE-filtered IVF over a PAYLOAD-carrying persisted index: the
     * index is written with `label` stored in its rows
@@ -1369,8 +1359,7 @@ object SimilarityQueries {
       SELECT probe_id, prank AS rank, id, round(cos, 9) AS cos
       FROM pf WHERE prank <= 3
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** Recall@3 of BOTH filtered-search strategies against the exact
     * filtered baseline (q133), through the same
@@ -1451,8 +1440,7 @@ object SimilarityQueries {
              round(coalesce(h.n_hit, 0) / least(3, p.n_ex), 6) AS recall
       FROM bfn p LEFT JOIN hpf h ON h.probe_id = p.probe_id
       ORDER BY strategy, probe_id
-    """),
-    bench = true)
+    """))
 
   /** The PQ-LADDER FILTERED-SERVE COMPOSITION the re-rank operator's
     * scaladoc prescribes, now gated instead of documented: the code
@@ -1554,8 +1542,7 @@ object SimilarityQueries {
           round(col("cos"), 9).as("cos"))
         .orderBy("probe_id", "rank")
     },
-    Some(seenExclusionOracleSql),
-    bench = true)
+    Some(seenExclusionOracleSql))
 
   /** PER-PROBE EXTERNAL EXCLUSION on the QUANTIZED ladder — the
     * fourth filtered-serve quadrant (external × per-probe, q133f's
@@ -1809,8 +1796,7 @@ object SimilarityQueries {
       SELECT row_number() OVER (ORDER BY rrf DESC, id) AS rank,
              id, round(rrf, 9) AS rrf
       FROM ftop ORDER BY rank
-    """),
-    bench = true)
+    """))
 
   /** Index HEALTH on the QUANTIZED index — q136's diagnostic proven
     * over the PQ code table ([[Similarity.indexHealth]] is index-kind
@@ -1904,8 +1890,7 @@ object SimilarityQueries {
       SELECT probe_id, rank, id, round(rrf, 9) AS rrf
       FROM rankd WHERE rank <= 10
       ORDER BY probe_id, rank
-    """),
-    bench = true)
+    """))
 
   /** WEIGHTED batch fusion ([[Similarity.rrfFuseByProbe]] with
     * per-leg weights — wRRF, w_i/(c + rank)) — the production dial
@@ -1972,8 +1957,7 @@ object SimilarityQueries {
           round(col("rrf"), 9).as("rrf"))
         .orderBy("probe_id", "rank")
     },
-    Some(weightedHybridOracleSql),
-    bench = true)
+    Some(weightedHybridOracleSql))
 
   /** HARD-NEGATIVE MINING ([[Similarity.ivfTopKIndexed]]'s per-probe
     * `pairFilter`) — the contrastive-training data generator every
@@ -2170,7 +2154,6 @@ object SimilarityQueries {
         .orderBy("probe_id", "rank")
     },
     Some(ivfOracleSql),
-    bench = true,
     benchSetup = Some(ensureServeIvf))
 
   /** TIMED quantized serve ([[Similarity.ivfPqTopKRerankIndexed]]) —
@@ -2198,7 +2181,6 @@ object SimilarityQueries {
       FROM rr WHERE rank <= 3
       ORDER BY probe_id, rank
     """),
-    bench = true,
     benchSetup = Some(ensureServePq))
 
   /** TIMED filtered-serve stack (q133f's shape over the PERSISTED
@@ -2221,7 +2203,6 @@ object SimilarityQueries {
         .orderBy("probe_id", "rank")
     },
     Some(seenExclusionOracleSql),
-    bench = true,
     benchSetup = Some(ensureServeIvf))
 
   /** TIMED hard-negative serve on the quantized ladder (q137b's shape
@@ -2254,7 +2235,6 @@ object SimilarityQueries {
         .orderBy("probe_id", "rank")
     },
     Some(pqHardNegOracleSql),
-    bench = true,
     benchSetup = Some(ensureServePq))
 
   /** TIMED hybrid serve (q135c's weighted-fusion stack over the
@@ -2294,7 +2274,6 @@ object SimilarityQueries {
         .orderBy("probe_id", "rank")
     },
     Some(weightedHybridOracleSql),
-    bench = true,
     benchSetup = Some(ensureServeIvf))
 
   val all: Seq[QueryDef] = Seq(q27AnnBruteForce, q28AnnIvf, q28bAnnIvfIndexed,

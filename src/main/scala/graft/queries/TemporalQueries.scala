@@ -49,8 +49,7 @@ object TemporalQueries {
       LEFT JOIN best b ON c.event_id = b.event_id
       LEFT JOIN views v ON v.user_id = c.user_id AND v.view_ts = b.view_ts
       ORDER BY c.event_id
-    """),
-    bench = true)
+    """))
 
   /** q60 under a 30-minute tolerance (pandas merge_asof semantics): a
     * click whose latest preceding view is older than the tolerance keeps
@@ -87,8 +86,7 @@ object TemporalQueries {
       LEFT JOIN best b ON c.event_id = b.event_id
       LEFT JOIN views v ON v.user_id = c.user_id AND v.view_ts = b.view_ts
       ORDER BY c.event_id
-    """),
-    bench = true)
+    """))
 
   /** q60 reversed: each click aligned to the user's EARLIEST view at or
     * after it (pandas merge_asof direction='forward') — same
@@ -123,8 +121,7 @@ object TemporalQueries {
       LEFT JOIN best b ON c.event_id = b.event_id
       LEFT JOIN views v ON v.user_id = c.user_id AND v.view_ts = b.view_ts
       ORDER BY c.event_id
-    """),
-    bench = true)
+    """))
 
   /** Range join: lineitem ship dates landed in one-week promo windows
     * (high-value orders). Bucketized to a hash equi-join on week id —
@@ -177,8 +174,7 @@ object TemporalQueries {
       JOIN lineitem l ON l.l_shipdate >= p.lo AND l.l_shipdate < p.hi
       GROUP BY p.o_orderkey
       ORDER BY p.o_orderkey
-    """),
-    bench = true)
+    """))
 
   /** Conversion funnel (view → click → purchase, each stage within 24 h
     * of the prior) — the sequential-pattern query of product analytics.
@@ -233,8 +229,7 @@ object TemporalQueries {
       FROM v LEFT JOIN c ON v.user_id = c.user_id
       LEFT JOIN p ON v.user_id = p.user_id
       ORDER BY v.user_id
-    """),
-    bench = true)
+    """))
 
   /** Last-touch attribution: every purchase credits the most recent
     * click at or before it from the same user — the as-of join operator
@@ -323,8 +318,7 @@ object TemporalQueries {
                AS running
       FROM ev
       ORDER BY event_id
-    """),
-    bench = true)
+    """))
 
   /** Time-series resampling with forward fill: each user's event stream
     * regularized onto an hourly grid spanning their active range, every
@@ -374,8 +368,7 @@ object TemporalQueries {
       LEFT JOIN best b ON b.user_id = g.user_id AND b.grid_ts = g.grid_ts
       LEFT JOIN obs o ON o.user_id = g.user_id AND o.ev_ts = b.ev_ts
       ORDER BY g.user_id, g.grid_ts
-    """),
-    bench = true)
+    """))
 
   /** First-order Markov transition matrix over per-user event sequences
     * (LEAD within user, then a global (from, to) count + row-normalized
@@ -458,8 +451,7 @@ object TemporalQueries {
       SELECT user_id, version, event_type AS status, ts AS valid_from,
              valid_to, valid_to IS NULL AS is_current
       FROM hist ORDER BY user_id, version
-    """),
-    bench = true)
+    """))
 
   /** The READ side of q128 — the point-in-time lookup a warehouse user
     * runs daily against an SCD2 dimension: each fact row (purchases)
@@ -528,8 +520,7 @@ object TemporalQueries {
        AND f.ts >= d.valid_from
        AND (d.valid_to IS NULL OR f.ts < d.valid_to)
       ORDER BY f.event_id
-    """),
-    bench = true)
+    """))
 
   def all: Seq[QueryDef] = Seq(q60AsofJoin, q60bAsofTolerance,
     q60cAsofForward, q61RangeJoin, q107Funnel, q110LastTouchAttribution,

@@ -249,8 +249,7 @@ object TextAnalytics {
       SELECT doc_id, rank, token, round(score, 9) AS score
       FROM scored WHERE rank <= 3
       ORDER BY doc_id, rank
-    """),
-    bench = true)
+    """))
 
   /** Count-min heavy hitters — the scale-honest shape: candidates come
     * from a 5% deterministic doc sample (cheap, bounded), their corpus
@@ -300,8 +299,7 @@ object TextAnalytics {
       JOIN cells s1 ON s1.h = 1 AND s1.bucket = (('0x'||substr(md5('cm1|'||c.token),1,15))::BIGINT % 1024)
       JOIN cells s2 ON s2.h = 2 AND s2.bucket = (('0x'||substr(md5('cm2|'||c.token),1,15))::BIGINT % 1024)
       ORDER BY est DESC, token
-    """),
-    bench = true)
+    """))
 
   /** Unigram-LM quality over the corpus's own token distribution
     * ([[graft.operators.CorpusStats.unigramQuality]]): one vocab
@@ -331,8 +329,7 @@ object TextAnalytics {
       FROM per_doc p JOIN vocab v USING (tok) CROSS JOIN tot t
       GROUP BY p.doc_id
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** Gopher-style within-doc repetition filters
     * ([[graft.operators.CorpusStats.ngramRepetition]], 2-grams): the
@@ -371,8 +368,7 @@ object TextAnalytics {
       FROM hist
       GROUP BY doc_id
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** BPE-ish pre-tokenizer counting next to the whitespace count — the
     * brief's "token counting (whitespace + a BPE-ish regex)" pair. The
@@ -406,8 +402,7 @@ object TextAnalytics {
              toks[1] AS first_tok, toks[-1] AS last_tok
       FROM b
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** Rounds of BPE training q76 unrolls in both engines. */
   private val BpeK = 24
@@ -482,8 +477,7 @@ object TextAnalytics {
         .select(col("id").as("doc_id"), col("n_pre"), col("n_bpe"))
         .orderBy("doc_id")
     },
-    Some(bpeOracleSql),
-    bench = true)
+    Some(bpeOracleSql))
 
   /** PII scrubbing ([[graft.operators.PiiScrub]]): the corpus carries no
     * natural PII, so each doc gets deterministic synthesized PII by
@@ -558,8 +552,7 @@ object TextAnalytics {
       SELECT doc_id, n_email, n_ssn, n_ipv4, n_phone, t AS scrubbed
       FROM s4
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** URL canonicalization + URL-level dedup ([[graft.operators.UrlOps]]):
     * the corpus carries no URLs, so each doc gets a deterministic messy
@@ -669,8 +662,7 @@ object TextAnalytics {
       SELECT canon_url, doc_id, quality, n_dups::BIGINT AS n_dups
       FROM ranked WHERE rn = 1
       ORDER BY canon_url
-    """),
-    bench = true)
+    """))
 
   /** Linear quality-classifier application
     * ([[graft.operators.CorpusStats.linearScore]]): the corpus carries
@@ -714,8 +706,7 @@ object TextAnalytics {
       FROM counts c LEFT JOIN vocab v ON v.term = c.tok
       GROUP BY c.doc_id
       ORDER BY c.doc_id
-    """),
-    bench = true)
+    """))
 
   /** Unicode hygiene: NFC normalization + invisible-char strip.
     *
@@ -757,8 +748,7 @@ object TextAnalytics {
       SELECT doc_id, length(dirty) AS n_dirty, length(clean) AS n_clean,
              md5(clean) AS h_clean
       FROM c ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** BM25 ranked retrieval (Robertson/Sparck Jones; the idf(+1) smoothing
     * variant Lucene uses) for a fixed 3-term query, top 20 documents.
@@ -856,8 +846,7 @@ object TextAnalytics {
       SELECT row_number() OVER (ORDER BY score DESC, doc_id) AS rank,
              doc_id, round(score, 6) AS score
       FROM top ORDER BY rank
-    """),
-    bench = true)
+    """))
 
   /** Sharded inverted-index construction: token → (df, cf, posting-list
     * digest) with postings SHARDED by a doc-id hash before any list
@@ -917,8 +906,7 @@ object TextAnalytics {
                ORDER BY doc_id, pos)) AS postings_md5
       FROM toks GROUP BY token, shard
       ORDER BY token, shard
-    """),
-    bench = true)
+    """))
 
   /** Character-distribution Shannon entropy — the compression-proxy
     * quality signal (low entropy ⇒ repetitive/degenerate text, high ⇒
@@ -1037,8 +1025,7 @@ object TextAnalytics {
              round(slp / n_bigrams, 6) AS avg_logp,
              round(exp(-slp / n_bigrams), 4) AS ppl
       FROM scored ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** q129 with the PRUNED LM — the shape that actually ships: keep only
     * the top-K grams per context (K=3 here; by count, ties to the

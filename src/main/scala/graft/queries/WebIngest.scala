@@ -122,8 +122,7 @@ object WebIngest {
              ((doc_id % 20) % 2 = 1) AS from_gzip
       FROM base
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   // ------------------------------------------------------------- q92 html
 
@@ -185,8 +184,7 @@ object WebIngest {
                   ELSE $CollapsedText END AS main_text
       FROM documents
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   // ------------------------------------------------------------ q93 chain
 
@@ -244,8 +242,7 @@ object WebIngest {
       WHERE len(list_filter(string_split_regex(main_text, '[ \t\n\r]+'),
                             t -> t <> '')) >= 12
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   // ----------------------------------------------------------- q94 robots
 
@@ -332,8 +329,7 @@ object WebIngest {
                                  ELSE '' END) END AS matched_rule
       FROM paths
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** JSONL interchange round-trip: the documents table is written as
     * newline-delimited JSON (the lingua franca corpora actually ship in —
@@ -359,8 +355,7 @@ object WebIngest {
       SELECT doc_id, text, lang, source, n_chars
       FROM documents
       ORDER BY doc_id
-    """),
-    bench = true)
+    """))
 
   /** Row-level dataset diff between two corpus versions — the release
     * audit that accompanies q120's whole-table checksum when the digests

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only plan/timing scratch:
   * `sbt 'Test/runMain graft.DevScratch <qname>[,<qname>...] <sfDir> [runs] [noExplain]'`. */
 object DevScratch {
@@ -10,15 +8,7 @@ object DevScratch {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
     val explain = args.length <= 3
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // keep dev timings representative of the Bench session (see there)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     names.foreach { name =>
       if (explain) SparkEntry.queries(name)(spark, dir).explain("formatted")
       (1 to runs).foreach { i =>

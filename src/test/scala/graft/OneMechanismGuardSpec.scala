@@ -1,0 +1,72 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-scan guard that each driver-side chore keeps ONE mechanism:
+  * sessions are built only by [[LocalSession]] (and `Main.run`, whose
+  * `--master` is a deployment setting), and an Observation's future is
+  * awaited only by [[graft.operators.Barrier.observed]]. Comments and
+  * string literals are not code, so a scaladoc usage example does not
+  * count. */
+class OneMechanismGuardSpec extends AnyFunSuite {
+
+  private val sources: Seq[(String, String)] =
+    Seq("src/main/scala", "src/test/scala").flatMap { dir =>
+      Files.walk(Paths.get(dir)).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq.sorted
+        .map((p: Path) => p.toString -> code(Files.readString(p)))
+    }
+
+  /** `src` with each comment and string/char literal replaced by a space. */
+  private def code(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def skipTo(end: String, from: Int): Unit = {
+      val e = src.indexOf(end, from)
+      i = if (e < 0) src.length else e + end.length
+      out += ' '
+    }
+    while (i < src.length) {
+      if (src.startsWith("//", i)) skipTo("\n", i)
+      else if (src.startsWith("/*", i)) skipTo("*/", i + 2)
+      else if (src.startsWith("\"\"\"", i)) skipTo("\"\"\"", i + 3)
+      else if (src(i) == '"') {
+        var j = i + 1
+        while (j < src.length && src(j) != '"') j += (if (src(j) == '\\') 2 else 1)
+        i = j + 1
+        out += ' '
+      } else if (src.startsWith("'\\", i)) skipTo("'", i + 3)
+      else if (src(i) == '\'' && i + 2 < src.length && src(i + 2) == '\'') skipTo("'", i + 2)
+      else { out += src(i); i += 1 }
+    }
+    out.toString
+  }
+
+  test("SparkSession.builder() is called only by LocalSession and Main.run") {
+    val builder = """SparkSession\s*\.\s*builder\s*\(""".r
+    val sites = sources.flatMap { case (f, c) => builder.findAllIn(c).map(_ => f) }
+    assert(sites == Seq("src/main/scala/graft/LocalSession.scala",
+      "src/main/scala/graft/Main.scala"),
+      s"hand-built sessions (use graft.LocalSession): $sites")
+  }
+
+  test("Observation futures are awaited only in Barrier.observed") {
+    val await = """Await\s*\.\s*result\s*\(""".r
+    val sites = sources.collect {
+      case (f, c) if c.contains("Observation") && await.findFirstIn(c).nonEmpty => f
+    }
+    assert(sites == Seq("src/main/scala/graft/operators/Barrier.scala"),
+      s"hand-copied observed-metric waits (use Barrier.observed): $sites")
+  }
+
+  test("the scan sees code, not comments or strings") {
+    val c = code("val a = 1 // SparkSession.builder()\n/* Await.result( */\n" +
+      "val s = \"SparkSession.builder()\"; val q = '\"'; val t = \"\"\"x\"\"\"\n" +
+      "val b = SparkSession.builder()")
+    assert(!c.contains("Await"))
+    assert("""SparkSession\s*\.\s*builder""".r.findAllIn(c).size == 1)
+  }
+}

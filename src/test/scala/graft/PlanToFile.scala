@@ -4,9 +4,9 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev helper: write the FULL formatted plan of registry queries to
   * `<outDir>/<name>_<suffix>.txt` — the before/after evidence files the
-  * optimization rounds commit under plans/r*. Bench-matching session
-  * conf (local[32], 64k coalescing floor) so the dumped plan is the
-  * one the bench runs. Args: names(comma-sep) sfDir outDir suffix. */
+  * optimization rounds commit under plans/r*. Runs under the Bench
+  * session ([[LocalSession]]) so the dumped plan is the one the bench
+  * runs. Args: names(comma-sep) sfDir outDir suffix. */
 object PlanToFile {
   def main(args: Array[String]): Unit = {
     if (args.length < 4) {
@@ -17,15 +17,7 @@ object PlanToFile {
     val names = args(0).split(",").toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val outDir = java.nio.file.Paths.get(args(2))
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>

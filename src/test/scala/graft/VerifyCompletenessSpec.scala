@@ -36,6 +36,11 @@ class VerifyCompletenessSpec extends SparkSpec {
   }
 
   test("registry, queries map, and oracle map agree on the query set") {
+    // a duplicate name would vanish from the queries map (last wins) yet
+    // be dumped and timed twice from the registry
+    val dups = SparkEntry.registry.groupBy(_.name).collect {
+      case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate query names in the registry: $dups")
     val registryNames = SparkEntry.registry.map(_.name).toSet
     val queryNames = SparkEntry.queries.keySet
     assert(registryNames === queryNames,
@@ -43,5 +48,13 @@ class VerifyCompletenessSpec extends SparkSpec {
     val noOracle = queryNames -- SparkEntry.oracleSql.keySet
     assert(noOracle.isEmpty,
       s"queries without an oracle (driver records only rows>0): $noOracle")
+  }
+
+  test("specs run in the LocalSession shape the dump and the bench use") {
+    val conf = SparkTestSession.spark.conf
+    assert(SparkTestSession.spark.sparkContext.master == "local[2]")
+    assert(conf.get("spark.sql.shuffle.partitions") == "2")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "64k")
   }
 }

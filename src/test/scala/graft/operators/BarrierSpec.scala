@@ -6,7 +6,8 @@ import graft.SparkSpec
 
 /** The shared materialization barrier: localCheckpoint by default,
   * reliable checkpoint() files under graft.barrier.checkpointDir —
-  * content-identical either way, lineage cut either way. */
+  * content-identical either way, lineage cut either way — and its
+  * bounded-wait reader for observed metrics. */
 class BarrierSpec extends SparkSpec {
   import spark.implicits._
 
@@ -65,5 +66,21 @@ class BarrierSpec extends SparkSpec {
     assert(cut.as[Long].collect().toSet == (1L to 10L).toSet)
     assert(cut.rdd.getCheckpointFile.isEmpty,
       "cut wrote a reliable checkpoint with the conf unset")
+  }
+
+  test("observed: the metric rides the cut's job and the fallback never runs") {
+    val obs = org.apache.spark.sql.Observation()
+    Barrier.cut((1L to 10L).toDF("id").observe(obs, sum(col("id")).as("s")))
+    var fallbacks = 0
+    val s = Barrier.observed(obs)(_.getLong(0)) { fallbacks += 1; -1L }
+    assert(s == 55L)
+    assert(fallbacks == 0, "the fallback ran although the metric arrived")
+  }
+
+  test("observed: an observation whose frame never runs returns the fallback") {
+    // pays the full bounded wait once: no action ever runs this frame
+    val obs = org.apache.spark.sql.Observation()
+    (1L to 3L).toDF("id").observe(obs, count(lit(1)).as("n"))
+    assert(Barrier.observed(obs)(_.getLong(0))(-1L) == -1L)
   }
 }
