@@ -76,26 +76,14 @@ object Main {
           .config("spark.sql.session.timeZone", "UTC")
           .getOrCreate())
         try {
-          val d = c.dataDir
-          val (mappingsPath, pubmedPath) =
-            if (c.useCache) (s"$d/mappings.tsv", s"$d/pubmed-refs.tsv")
-            else refreshCaches(spark, c) match {
-              case Right(paths) => paths
+          val layout = BuildGraph.Inputs.fromDir(c.dataDir)
+          val in =
+            if (c.useCache) layout
+            else refreshCaches(spark, c, layout) match {
+              case Right(refreshed) => refreshed
               case Left(err) => System.err.println(s"error: $err"); return 2
             }
-          val out = BuildGraph.build(spark, BuildGraph.Inputs(
-            mimTitlesPath = s"$d/mimTitles.txt",
-            mim2genePath = s"$d/mim2gene.txt",
-            morbidmapPath = s"$d/morbidmap.txt",
-            phenotypicSeriesPath = s"$d/phenotypicSeries.txt",
-            genemap2Path = s"$d/genemap2.txt",
-            hgncPath = s"$d/hgnc_complete_set.txt",
-            exclusionsPath = s"$d/exclusions-disease-gene.tsv",
-            protectedPath = s"$d/protected-disease-gene.tsv",
-            capitalizationsPath = s"$d/known_capitalizations.tsv",
-            sssomPath = s"$d/mondo_exactmatch_omim.sssom.tsv",
-            mappingsPath = mappingsPath,
-            pubmedRefsPath = pubmedPath), c.versionDate)
+          val out = BuildGraph.build(spark, in, c.versionDate)
           new java.io.File(c.outDir).mkdirs()
           BuildGraph.writeArtifacts(spark, out, c.outDir)
           println(s"[graft] wrote ${out.triples.count()} triples + artifacts to ${c.outDir}")
@@ -105,24 +93,22 @@ object Main {
 
   /** The no-cache path: refresh mappings/pubmed through the real client
     * (decide-stale → batched fetch → parse → upsert), writing the
-    * refreshed tables to the OUTPUT dir. */
-  private def refreshCaches(spark: SparkSession, c: Config)
-      : Either[String, (String, String)] =
+    * refreshed tables to the OUTPUT dir and pointing `in` at them. */
+  private def refreshCaches(spark: SparkSession, c: Config, in: BuildGraph.Inputs)
+      : Either[String, BuildGraph.Inputs] =
     sys.env.get("OMIM_API_KEY") match {
       case None =>
         Left("cache refresh needs OMIM_API_KEY (or pass --use-cache to build " +
           "from the cached API tables)")
       case Some(key) =>
-        val d = c.dataDir
         val entryUrl = sys.env.getOrElse("OMIM_API_URL", "https://api.omim.org/api/entry")
         val transport = new HttpTransport(entryUrl, key)
         def tsv(p: String) = spark.read.option("sep", "\t")
           .option("header", "true").csv(p)
         val cached = CacheRefresh.CacheTables(
-          mappings = tsv(s"$d/mappings.tsv"), pubmed = tsv(s"$d/pubmed-refs.tsv"))
-        val titles = OmimPipeline.parseMimTitles(
-          graft.io.CommentFramedTsv.read(spark, s"$d/mimTitles.txt",
-            Some(Seq("prefix", "mim", "pref_titles", "alt_titles", "inc_titles"))))
+          mappings = tsv(in.mappingsPath), pubmed = tsv(in.pubmedRefsPath))
+        val titles = OmimPipeline.parseMimTitles(graft.io.CommentFramedTsv.read(
+          spark, in.mimTitlesPath, Some(BuildGraph.TitleColumns)))
         val allMims = titles.select(col("mim"))
         val phenos = titles
           .filter(col("omim_type").isin("PHENOTYPE", "HERITABLE_PHENOTYPIC_MARKER"))
@@ -132,6 +118,6 @@ object Main {
         val mp = s"${c.outDir}/mappings.tsv"; val pp = s"${c.outDir}/pubmed-refs.tsv"
         new java.io.File(c.outDir).mkdirs()
         CacheRefresh.writeCaches(refreshed, mp, pp)
-        Right((mp, pp))
+        Right(in.copy(mappingsPath = mp, pubmedRefsPath = pp))
     }
 }

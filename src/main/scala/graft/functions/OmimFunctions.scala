@@ -3,15 +3,16 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.text.{MimFields, Roman, Titles}
+import graft.text.MimFields
 
 /** Column-level wrappers for the OMIM text pipeline (SURVEY.md §2.7).
   *
   * Pure column compositions where built-ins suffice (MIM-id repair C9/F6 is
-  * regexp_extract + when — fully codegen'd); Scala UDFs over the pure
-  * `graft.text` functions where the semantics are genuinely word-loop
-  * shaped (cleanup_title C1, abbreviations C3/C4). The pure functions carry
-  * the unit/property tests; UDFs are thin adapters.
+  * regexp_extract + when — fully codegen'd); a Scala UDF over the pure
+  * `graft.text` parser where the semantics are genuinely regex-fallback
+  * shaped (the morbidmap phenotype field). Title cleanup (C1/C2) is the
+  * codegen'd `CleanupTitleExpr` kernel, not a UDF. The pure functions
+  * carry the unit/property tests; the UDF is a thin adapter.
   */
 object OmimFunctions {
 
@@ -52,22 +53,6 @@ object OmimFunctions {
 
   def parsePhenotypeField(c: Column): Column =
     parsePhenotypeFieldUdf(c).cast("struct<label:string,p_mim:string,key:string>")
-
-  /** cleanup_title (C1) with a capitalization dictionary closed over. */
-  def cleanupTitleUdf(caps: Map[String, String]) =
-    udf { (s: String) => Titles.cleanupTitle(if (s == null) "" else s, caps) }
-
-  /** Roman→arabic word conversion (C2) as a standalone scalar. */
-  val arabizeUdf = udf { (w: String) => if (w == null) null else Roman.arabize(w) }
-
-  /** Whole-title arabize: word 1 preserved, words 2..n converted — the
-    * roman-numeral half of cleanup_title, usable as a pure column pipeline
-    * demo (oracle-expressible via the replace-chain trick). */
-  def arabizeTitle(c: Column): Column = {
-    val words = filter(split(c, " "), w => length(w) > 0)
-    array_join(
-      transform(words, (w, i) => when(i === 0, w).otherwise(arabizeUdf(w))), " ")
-  }
 
   /** Definitive-association predicate (F4). */
   def isDefinitive(label: Column): Column = !label.rlike("^[\\[{?]")

@@ -55,8 +55,8 @@ object SparqlQueries {
 
   /** sparql/disease-gene-relationships.sparql: the D2G QC report — class →
     * restriction → class chains over the five RO predicates, with labels,
-    * optional biolink categories, and a direction bind; ordered by the
-    * six SPARQL keys. */
+    * optional biolink categories, and a direction bind. Unordered: the
+    * release sink sorts it by the six SPARQL keys. */
   def diseaseGeneRelationships(triples: DataFrame): DataFrame = {
     val roPreds = Seq(CausesOrContributes, "RO:0003303", "RO:0003304",
       IsCausalGermlineMutationIn, HasMaterialBasisIn)
@@ -90,7 +90,6 @@ object SparqlQueries {
         when(col("pred") === HasMaterialBasisIn, "Disease2Gene")
           .otherwise("Gene2Disease").as("PredDirection"),
         col("obj_uri").as("ObjId"), col("ObjLabel"), col("ObjBiolink"))
-      .orderBy("PredDirection", "SubBiolink", "Pred", "SubId", "ObjBiolink", "ObjId")
   }
 
   /** sparql/mondo-omim-genes.sparql: DISTINCT (mondo, hgnc, omim disease,

@@ -127,7 +127,7 @@ object TripleGen {
   /** Per-MIM entity triples: class decl, deprecation/replacement routing,
     * type-specific triples, label choice, synonyms with axiom annotations,
     * included-entry annotations (ref: main.py:271-374 — the whole per-MIM
-    * loop body as one pure function for `Dataset[TitleRow].flatMap`). */
+    * loop body as one pure function, flatMapped over the parsed titles). */
   def entityTriples(omimType: String, mim: String, prefField: String,
                     altField: String, incField: String,
                     replacedBy: Seq[String],

@@ -8,11 +8,6 @@ import graft.model.Triple
 /** Sinks for the OMIM artifact family (SURVEY.md §2.1 S9/S10). */
 object Sinks {
 
-  /** Default CURIE prefix expansions for the Turtle sink: the
-    * reference's full dipper curie_map.yaml (212 bindings) plus the
-    * namespaces.py extras — see [[CurieMap]] (S6). */
-  def defaultPrefixes: Map[String, String] = CurieMap.default
-
   /** Distinct CURIE prefixes appearing in the triple set: subject,
     * predicate, and non-literal object terms that are neither
     * `<>`-wrapped IRIs nor `_:` bnodes. One tiny distinct aggregate
@@ -58,22 +53,20 @@ object Sinks {
         term(col("o"), col("oIsLiteral")), lit(" .")).as("line"))
   }
 
-  /** Write the graph as Turtle: @prefix header + sorted triple lines.
+  /** Write the graph as Turtle, one file: @prefix header + sorted
+    * triple lines.
     *
     * Like rdflib's Turtle serializer (which the reference relies on,
     * main.py:236-238), the header binds exactly the prefixes the
-    * triple set USES, resolved against `prefixes` (default = the full
-    * 200+-entry dipper map). A used prefix with no binding is an
-    * error: the emitted CURIE would be un-expandable for every
-    * downstream consumer, so fail loudly at write time instead.
-    *
-    * `singleFile=true` coalesces to one part (fine ≤10^7 triples; leave
-    * false at scale — SURVEY.md §7.4). */
-  def writeTurtle(spark: SparkSession, triples: Dataset[Triple], path: String,
-                  prefixes: Map[String, String] = defaultPrefixes,
-                  singleFile: Boolean = true): Unit = {
+    * triple set USES, resolved against [[CurieMap.default]] (the
+    * reference's full dipper curie_map.yaml plus the namespaces.py
+    * extras, S6). A used prefix with no binding is an error: the
+    * emitted CURIE would be un-expandable for every downstream
+    * consumer, so fail loudly at write time instead. */
+  def writeTurtle(spark: SparkSession, triples: Dataset[Triple], path: String): Unit = {
     import spark.implicits._
     val used = usedPrefixes(triples)
+    val prefixes = CurieMap.default
     val unbound = used -- prefixes.keySet
     require(unbound.isEmpty,
       s"triples use CURIE prefixes with no binding: ${unbound.toSeq.sorted.mkString(", ")}")
@@ -82,18 +75,18 @@ object Sinks {
     val header = prefixes.filter(kv => used.contains(kv._1)).toSeq.sorted
       .map { case (p, u) => (0, s"@prefix $p: <$u> .") }.toDF("sec", "line")
     val body = toTurtleLines(triples).select(lit(1).as("sec"), col("line"))
-    val out = header.unionByName(body).orderBy("sec", "line").select("line")
-    (if (singleFile) out.coalesce(1) else out).write.mode("overwrite").text(path)
+    header.unionByName(body).orderBy("sec", "line").select("line")
+      .coalesce(1).write.mode("overwrite").text(path)
   }
 
-  /** Ordered TSV sink with optional extra header rows (ROBOT templates
-    * prepend a sub-header row — ref: mondo_omim_genes_robot_tsv.py:19-41,
-    * main.py:512-519). Sort before write = W3; single file for artifact
-    * parity, plain distributed write for scale. */
+  /** Ordered TSV sink, one file, with optional extra header rows (ROBOT
+    * templates prepend a sub-header row — ref:
+    * mondo_omim_genes_robot_tsv.py:19-41, main.py:512-519). `sortCols`
+    * is the one statement of the artifact's row order (W3): callers hand
+    * in unordered frames. */
   def writeOrderedTsv(df: DataFrame, path: String, sortCols: Seq[String],
                       extraHeaderRows: Seq[Seq[String]] = Nil,
-                      preHeaderLines: Seq[String] = Nil,
-                      singleFile: Boolean = true): Unit = {
+                      preHeaderLines: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
     val cols = df.columns
     import spark.implicits._
@@ -114,9 +107,9 @@ object Sinks {
         concat_ws("\t",
           cols.toIndexedSeq.map(c => coalesce(col(c).cast("string"), lit(""))): _*)
           .as("__line")) ++ sortCols.map(col)): _*)
-    val out = header.unionByName(body)
+    header.unionByName(body)
       .orderBy((Seq(col("__sec"), col("__idx")) ++ sortCols.map(col)): _*)
       .select("__line")
-    (if (singleFile) out.coalesce(1) else out).write.mode("overwrite").text(path)
+      .coalesce(1).write.mode("overwrite").text(path)
   }
 }

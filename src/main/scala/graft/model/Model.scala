@@ -1,9 +1,10 @@
 package graft.model
 
-/** Core data model for the OMIM-capability engine (SURVEY.md §1).
-  *
-  * Stable-schema tables get case classes so the public API can be typed
-  * `Dataset[T]`; internals stay `DataFrame`.
+/** Core data model for the OMIM-capability engine (SURVEY.md §1): the
+  * MIM entry types and the graph edge. The source tables stay
+  * `DataFrame`s (their expected columns are listed on
+  * `BuildGraph.InputTables`); only the triple set is a typed
+  * `Dataset[Triple]`.
   */
 
 /** MIM entry type, decoded from the mimTitles prefix symbol (ref:
@@ -22,36 +23,9 @@ object OmimType {
     HeritablePhenotypicMarker, HasAffectedFeature)
 
   /** mimTitles "Prefix" column → type name (ref: declared_to_type,
-    * omim_txt_parser.py:323-330). Unknown prefixes → None (the reference
-    * logs an error and keeps the row out of the titles map). */
-  def fromDeclared(declared: String): Option[OmimType] =
-    all.find(_.declared == declared)
-
+    * omim_txt_parser.py:323-330). */
   val declaredToName: Map[String, String] = all.map(t => t.declared -> t.name).toMap
 }
-
-/** One mimTitles.txt row after parsing (ref: omim_txt_parser.py:311-346). */
-final case class TitleRow(
-    omimType: String,   // OmimType.name
-    mim: String,        // 6-digit, kept as string (ref keeps str)
-    prefTitle: String,  // raw "TITLE; SYM1; SYM2" field
-    altTitles: String,  // raw ';;'-pair field
-    incTitles: String)  // raw ';;'-pair field
-
-/** One mim2gene.txt row (ref: omim_txt_parser.py:404-438). */
-final case class Mim2GeneRow(
-    mim: String, entryType: String, entrezId: String,
-    hgncSymbol: String, ensemblId: String)
-
-/** One morbidmap.txt association row, flat (ref: omim_txt_parser.py:
-  * 441-495 nests per-gene; we keep the flat relational form and group with
-  * collect_list when the nested shape is needed). */
-final case class MorbidRow(
-    phenotypeLabel: String, phenotypeMim: String, mappingKey: String,
-    geneSymbols: Seq[String], geneMim: String, cytoLocation: String)
-
-/** One phenotypicSeries.txt membership (ref: omim_txt_parser.py:349-364). */
-final case class PhenoSeriesRow(psId: String, title: String, memberMim: String)
 
 /** One edge of the RDF graph (SURVEY.md §1.1.3): subject/predicate as
   * CURIEs, object either a CURIE/bnode ref or a literal. Blank nodes use

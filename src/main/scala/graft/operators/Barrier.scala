@@ -6,15 +6,15 @@ import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 
-/** The ONE materialization barrier every multi-consumer query site
-  * routes through (CorpusOps q86's scrub output, TextAnalytics' tf and
+/** The ONE materialization barrier every lineage cut in main source
+  * routes through (the release's graph cuts in BuildGraph, q57's
+  * shared roots, CorpusOps q86's scrub output, TextAnalytics' tf and
   * BM25 stats frames, DedupQueries' leaked-id audit, the banded-guard
-  * aggregates and iterative lineage cuts in [[Dedup]]) — so the
-  * local-vs-durable choice is a DEPLOYMENT setting, not an edit to
-  * query code. ([[GraphAlgos]]' eager loops route their cuts through
-  * here too, so the conf upgrades them like everything else; the
-  * explicit previous-block unpersist pairing stays owned there — block
-  * management a generic helper must not have.)
+  * aggregates and iterative loops in [[Dedup]] and [[GraphAlgos]]) —
+  * so the local-vs-durable choice is a DEPLOYMENT setting, not an edit
+  * to query code. (GraphAlgos keeps its explicit previous-block
+  * unpersist pairing — block management a generic helper must not
+  * have.)
   *
   * Default: `localCheckpoint()` — executor-local blocks, the right
   * trade on a stable-executor cluster and in every local/bench run
@@ -25,26 +25,20 @@ import org.apache.spark.sql.{DataFrame, Observation, Row}
   *
   * Cluster-durable form: set `graft.barrier.checkpointDir` to a
   * fault-tolerant path (HDFS/S3) and every cut() in the session
-  * becomes a reliable `checkpoint()` to that directory — the same
-  * upgrade [[Dedup.connectedComponents]]' explicit `checkpointDir`
-  * parameter performs for its own loop, generalized. The conf is read
-  * per cut (session-dynamic), and the SparkContext checkpoint dir is
-  * set on first use if the caller has not set one. Storage note (as on
-  * connectedComponents): Spark does not delete reliable checkpoint
-  * files unless `spark.cleaner.referenceTracking.cleanCheckpoints=true`
-  * or the caller clears the directory after consuming the result.
+  * becomes a reliable `checkpoint()` to that directory. The conf is
+  * read per cut (session-dynamic) and re-points the SparkContext
+  * checkpoint dir at the conf'd path on each cut (one mkdir; barriers
+  * are a handful per query, not per row). Storage note: Spark does
+  * not delete reliable checkpoint files unless
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` or the
+  * caller clears the directory after consuming the result.
   *
   * Deliberately NOT keyed on the SparkContext's checkpoint dir alone:
-  * that is context-global mutable state any operator (or user code)
-  * may set for its own loop, and silently flipping every unrelated
-  * barrier in the session to 2×-compute reliable checkpoints on that
-  * side effect is exactly the spooky action a shared helper must not
-  * have. The conf is the explicit opt-in — and it WINS: each conf'd
-  * cut re-points the context checkpoint dir at the conf'd path, so a
-  * loop that set its own dir earlier in the session (e.g.
-  * connectedComponents' parameter) cannot silently redirect every
-  * later barrier's files. Cost: one mkdir per cut — barriers are a
-  * handful per query, not per row. */
+  * that is context-global mutable state user code may set for its own
+  * purposes, and silently flipping every barrier in the session to
+  * 2×-compute reliable checkpoints on that side effect is exactly the
+  * spooky action a shared helper must not have. The conf is the
+  * explicit opt-in. */
 object Barrier {
 
   /** The session conf that upgrades every [[cut]] to a reliable

@@ -138,42 +138,18 @@ object Dedup {
     * O(diameter) — near-dup clusters are shallow (pairs share a common
     * near-copy), so this converges in a few rounds; `maxIter` bounds
     * pathological chains. Returns (id, component) where component is the
-    * smallest id in the cluster. Lineage is cut every round
-    * (iterative-plan blowup is the classic failure mode at scale):
-    * through the shared [[Barrier]] by default (`localCheckpoint` —
-    * executor-local blocks, fast, but an executor loss mid-iteration
-    * loses blocks and kills the job; set `graft.barrier.checkpointDir`
-    * to upgrade every barrier in the session), or reliably when
-    * `checkpointDir` is set — blocks go to that fault-tolerant path
-    * (HDFS/S3) via `checkpoint()`, which is what a multi-hour 100 TB
-    * run on a real cluster should use. Setting `checkpointDir` updates
-    * the SparkContext's checkpoint dir (a context-global setting) — and
-    * RE-ASSERTS it before every cut in the loop, because an interleaved
-    * conf'd [[Barrier.cut]] (another query in the session; Dedup's own
-    * overflow cuts) deliberately re-points that global at the conf'd
-    * path — without the re-assertion, later iterations would silently
-    * checkpoint under the conf dir instead of the explicitly requested
-    * one. Storage note for the reliable path: each
-    * round snapshots the LABELS frame — skinny (id, comp) pairs, one per
-    * node, so ≤ maxIter small snapshots plus one edge snapshot, bounded
-    * and tiny next to the corpus — but Spark does not delete them
-    * unless `spark.cleaner.referenceTracking.cleanCheckpoints=true`
-    * (GC-driven) or the caller clears the directory after consuming the
-    * result; set one of the two on long-running clusters. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    // the explicit parameter wins FOR THE DURATION OF THIS LOOP; it is
-    // re-asserted per cut because the context checkpoint dir is global
-    // mutable state a conf'd Barrier.cut re-points on every use (see the
-    // scaladoc). Otherwise the shared barrier applies (and with it the
-    // session-wide graft.barrier.checkpointDir opt-in).
-    def cut(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        df.sparkSession.sparkContext.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => Barrier.cut(df)
-    }
-    val edges = cut(pairs.select(col("id_a").as("a"), col("id_b").as("b"))
+    * smallest id in the cluster. Lineage is cut every round through
+    * [[Barrier.cut]] (iterative-plan blowup is the classic failure mode
+    * at scale), so `graft.barrier.checkpointDir` makes the loop durable.
+    * Storage note for the durable path: each round snapshots the LABELS
+    * frame — skinny (id, comp) pairs, one per node, so ≤ maxIter small
+    * snapshots plus one edge snapshot, bounded and tiny next to the
+    * corpus — but Spark does not delete them unless
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (GC-driven)
+    * or the caller clears the directory after consuming the result; set
+    * one of the two on long-running clusters. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    val edges = Barrier.cut(pairs.select(col("id_a").as("a"), col("id_b").as("b"))
       .unionByName(pairs.select(col("id_b").as("a"), col("id_a").as("b")))
       .distinct())
     var labels = edges.select(col("a").as("id")).distinct()
@@ -210,7 +186,7 @@ object Dedup {
       // dropped). Bounded wait + count fallback so a metrics regression
       // can never hang or change the loop's decisions.
       val obs = org.apache.spark.sql.Observation()
-      val materialized = cut(updated.observe(obs,
+      val materialized = Barrier.cut(updated.observe(obs,
         coalesce(sum(when(col("chg"), 1L).otherwise(0L)), lit(0L)).as("n_chg")))
       changed = Barrier.observed(obs)(_.getLong(0))(
         materialized.filter(col("chg")).count())
@@ -551,13 +527,12 @@ object Dedup {
     * kept representative's component label (its own id for unpaired
     * rows). */
   def semanticDedup(corpus: DataFrame, centroids: DataFrame, minCos: Double,
-                    nprobe: Int = 1, maxIter: Int = 20,
-                    checkpointDir: Option[String] = None): DataFrame = {
+                    nprobe: Int = 1, maxIter: Int = 20): DataFrame = {
     val probes = corpus.select(col("id").as("probe_id"), col("e").as("p"))
     val pairs = Similarity.ivfRangeSearch(corpus, centroids, probes, minCos, nprobe)
       .filter(col("probe_id") < col("id")) // drop self-pairs; one direction
       .select(col("probe_id").as("id_a"), col("id").as("id_b"))
-    val comps = connectedComponents(pairs, maxIter, checkpointDir)
+    val comps = connectedComponents(pairs, maxIter)
     corpus.join(comps, Seq("id"), "left")
       .filter(col("comp").isNull || col("comp") === col("id"))
       .select(col("id"), coalesce(col("comp"), col("id")).as("cluster"))
@@ -877,12 +852,11 @@ object Dedup {
     * Callers needing drop accounting for the bucket cap use
     * [[bandedHammingPairsGuarded]] directly. */
   def nearDupClusters(fps: DataFrame, bits: Int, bands: Int, maxHamming: Int,
-                      maxBucket: Int = 1 << 12, maxIter: Int = 20,
-                      checkpointDir: Option[String] = None): DataFrame = {
+                      maxBucket: Int = 1 << 12, maxIter: Int = 20): DataFrame = {
     val g = bandedHammingPairsGuarded(fps, Nil, bits, bands, maxBucket)
     val near = g.pairs.filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b")
-    val comps = connectedComponents(near, maxIter, checkpointDir)
+    val comps = connectedComponents(near, maxIter)
     g.membership.join(comps, g.membership("rep") === comps("id"), "left")
       .select(col("sid"), coalesce(col("comp"), col("rep")).as("cluster"))
   }

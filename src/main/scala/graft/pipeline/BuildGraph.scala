@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.graph.{SparqlQueries, TripleGen}
 import graft.io.{CommentFramedTsv, CuratorTables, Sinks, Sssom}
 import graft.model.Triple
+import graft.operators.Barrier
 
 /** The end-to-end build — the Spark equivalent of
   * `python -m omim2obo` + the makefile's SPARQL post-processing
@@ -22,6 +23,28 @@ object BuildGraph {
       phenotypicSeriesPath: String, genemap2Path: String, hgncPath: String,
       exclusionsPath: String, protectedPath: String, capitalizationsPath: String,
       sssomPath: String, mappingsPath: String, pubmedRefsPath: String)
+
+  object Inputs {
+    /** The release's source layout: the twelve files under their
+      * download/curator names in one directory. */
+    def fromDir(d: String): Inputs = Inputs(
+      mimTitlesPath = s"$d/mimTitles.txt",
+      mim2genePath = s"$d/mim2gene.txt",
+      morbidmapPath = s"$d/morbidmap.txt",
+      phenotypicSeriesPath = s"$d/phenotypicSeries.txt",
+      genemap2Path = s"$d/genemap2.txt",
+      hgncPath = s"$d/hgnc_complete_set.txt",
+      exclusionsPath = s"$d/exclusions-disease-gene.tsv",
+      protectedPath = s"$d/protected-disease-gene.tsv",
+      capitalizationsPath = s"$d/known_capitalizations.tsv",
+      sssomPath = s"$d/mondo_exactmatch_omim.sssom.tsv",
+      mappingsPath = s"$d/mappings.tsv",
+      pubmedRefsPath = s"$d/pubmed-refs.tsv")
+  }
+
+  /** The mimTitles.txt columns, in file order. */
+  val TitleColumns: Seq[String] =
+    Seq("prefix", "mim", "pref_titles", "alt_titles", "inc_titles")
 
   /** The same inputs at the DataFrame level — the seam that lets any
     * source (files, synthesized plans, tests, other tables) feed the REAL
@@ -45,6 +68,8 @@ object BuildGraph {
       exclusions: DataFrame, protectd: DataFrame, caps: Map[String, String],
       omimToMondo: DataFrame, mappings: DataFrame, pubmed: DataFrame)
 
+  /** The release frames, unordered: each artifact's order is stated
+    * once, by its sink's sort columns in [[writeArtifacts]]. */
   final case class Outputs(
       triples: Dataset[Triple], reviewCases: DataFrame,
       susceptibilityRows: DataFrame, diseaseGeneQc: DataFrame,
@@ -55,8 +80,7 @@ object BuildGraph {
     * is injected (never now()) for reproducible builds. */
   def build(spark: SparkSession, in: Inputs, versionDate: String): Outputs =
     buildFromTables(spark, InputTables(
-      titlesRaw = CommentFramedTsv.read(spark, in.mimTitlesPath,
-        Some(Seq("prefix", "mim", "pref_titles", "alt_titles", "inc_titles"))),
+      titlesRaw = CommentFramedTsv.read(spark, in.mimTitlesPath, Some(TitleColumns)),
       mim2geneRaw = CommentFramedTsv.read(spark, in.mim2genePath,
         Some(Seq("mim", "entry_type", "entrez_id", "hgnc_symbol", "ensembl_id"))),
       morbidRaw = CommentFramedTsv.read(spark, in.morbidmapPath,
@@ -128,22 +152,20 @@ object BuildGraph {
 
     val header = spark.createDataset(TripleGen.ontologyHeader(versionDate))
 
-    // Truncate lineage at the graph fan-out boundaries with LAZY
-    // localCheckpoint (not cache): hgncLinks pattern-joins the graph
-    // against itself four times and the reports re-join the result.
-    // cache() dedups COMPUTATION but leaves the logical plan intact, so
-    // every self-join arm re-embeds the entire upstream build tree and
-    // the analyzer (DeduplicateRelations + per-rule tree walks) goes
-    // combinatorial — measured 40 s of driver CPU per action at sf0.1.
-    // localCheckpoint replaces the plan with a LogicalRDD leaf
-    // immediately (eager=false defers the actual materialization to the
-    // first action, which then persists the RDD for the later arms).
+    // Cut lineage at the graph fan-out boundaries (Barrier.cut, not
+    // cache): hgncLinks pattern-joins the graph against itself four
+    // times and the reports re-join the result. cache() dedups
+    // COMPUTATION but leaves the logical plan intact, so every self-join
+    // arm re-embeds the entire upstream build tree and the analyzer
+    // (DeduplicateRelations + per-rule tree walks) goes combinatorial —
+    // measured 40 s of driver CPU per action at sf0.1. The cut replaces
+    // the plan with a LogicalRDD leaf, and `graft.barrier.checkpointDir`
+    // makes both cuts durable.
     val baseTriples = header
       .union(entity).union(cascade).union(cyto).union(m2g)
       .union(hgnc).union(ps).union(links)
-    val base = baseTriples.toDF().localCheckpoint(eager = false)
-    val flipped = SparqlQueries.addFlippedMondoMappings(base)
-      .localCheckpoint(eager = false)
+    val base = Barrier.cut(baseTriples.toDF())
+    val flipped = Barrier.cut(SparqlQueries.addFlippedMondoMappings(base))
 
     // Makefile SPARQL UPDATE stage (G17): flipped MONDO mappings + HGNC links
     val withUpdates = SparqlQueries.hgncLinks(flipped).as[Triple].cache()
@@ -153,11 +175,9 @@ object BuildGraph {
     Outputs(
       triples = withUpdates,
       reviewCases = OmimPipeline.reviewCases(tagged, morbid, types),
-      susceptibilityRows = OmimPipeline.susceptibilityRows(assocs, omimToMondo)
-        .orderBy("mondo_id", "omim_id"),
+      susceptibilityRows = OmimPipeline.susceptibilityRows(assocs, omimToMondo),
       diseaseGeneQc = SparqlQueries.diseaseGeneRelationships(withUpdates.toDF()),
-      mondoOmimGenes = SparqlQueries.mondoOmimGenes(withUpdates.toDF())
-        .orderBy("mondo_id", "hgnc_id", "omim_gene", "omim_disease_xref"),
+      mondoOmimGenes = SparqlQueries.mondoOmimGenes(withUpdates.toDF()),
       morbidmapAugmented = morbid,
       mim2geneAugmented = mim2gene)
   }

@@ -272,7 +272,7 @@ object OmimPipeline {
 
   /** Susceptibility rows (main.py:434-438, F5/J11): labels starting '{'
     * (after strip), joined to the SSSOM omim→mondo multimap. Output:
-    * (mondo_id, omim_curie) distinct sorted. */
+    * (mondo_id, omim_curie) distinct; the sink orders it. */
   def susceptibilityRows(assocs: DataFrame, omimToMondo: DataFrame): DataFrame =
     assocs.filter(trim(col("p_label")).startsWith("{"))
       .select("p_mim").distinct()
@@ -284,8 +284,8 @@ object OmimPipeline {
   /** Review cases (ref: log_review_cases, omim_entry_parser.py:444-482,
     * G16): 5 classes over CAUSAL-branch rows. Self-referential numbering
     * uses dense_rank over p_mim (W2) instead of the reference's mutable
-    * counter — deterministic, same set of rows; review.tsv is sorted by
-    * (classCode, value) either way. `geneAssocs` is the full morbidmap
+    * counter — deterministic, same set of rows; the review.tsv sink sorts
+    * by (classCode, value) either way. `geneAssocs` is the full morbidmap
     * table (for self-ref detection: the phenotype MIM reappears as a gene
     * MIM with an empty-p_mim association, J12); `types` maps mim→type. */
   def reviewCases(tagged: DataFrame, allAssocs: DataFrame, types: DataFrame): DataFrame = {
@@ -348,7 +348,6 @@ object OmimPipeline {
       .unionByName(selfRefDetail).unionByName(phenoIsGene).unionByName(typeError)
       .select(col("classCode"),
         element_at(nameMap, col("classCode")).as("classShortName"), col("value"))
-      .orderBy("classCode", "value")
   }
 
   // --------------------------------------------------------------- mim2gene

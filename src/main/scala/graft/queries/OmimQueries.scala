@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.OmimFunctions
+import graft.operators.Barrier
 import graft.text.{MimFields, Roman, Titles}
 
 /** OMIM-domain operators (SURVEY.md §2.7/§2.8/§2.3 J13) exercised over the
@@ -348,20 +349,9 @@ object OmimQueries {
   val q40OmimBuild = QueryDef(
     "q40_omim_build_graph",
     (s, _) => {
-      val d = "/root/repo/src/test/resources/omim"
-      val out = graft.pipeline.BuildGraph.build(s, graft.pipeline.BuildGraph.Inputs(
-        mimTitlesPath = s"$d/mimTitles.txt",
-        mim2genePath = s"$d/mim2gene.txt",
-        morbidmapPath = s"$d/morbidmap.txt",
-        phenotypicSeriesPath = s"$d/phenotypicSeries.txt",
-        genemap2Path = s"$d/genemap2.txt",
-        hgncPath = s"$d/hgnc_complete_set.txt",
-        exclusionsPath = s"$d/exclusions-disease-gene.tsv",
-        protectedPath = s"$d/protected-disease-gene.tsv",
-        capitalizationsPath = s"$d/known_capitalizations.tsv",
-        sssomPath = s"$d/mondo_exactmatch_omim.sssom.tsv",
-        mappingsPath = s"$d/mappings.tsv",
-        pubmedRefsPath = s"$d/pubmed-refs.tsv"), versionDate = "2026-08-12")
+      // the checked-in fixture release, relative to the repo root
+      val out = graft.pipeline.BuildGraph.build(s, graft.pipeline.BuildGraph.Inputs
+        .fromDir("src/test/resources/omim"), versionDate = "2026-08-12")
       out.triples.toDF()
         .agg(count(lit(1)).as("n_triples"),
           md5(array_join(sort_array(collect_list(
@@ -638,6 +628,7 @@ object OmimQueries {
             .when(m === 2, "SUSPECTED").when(m === 3, "HAS_AFFECTED_FEATURE")
             .otherwise("DISEASE"))
       graft.pipeline.OmimPipeline.reviewCases(tagged, allAssocs, types)
+        .orderBy("classCode", "value")
     },
     Some("""
       WITH base AS (
@@ -764,15 +755,15 @@ object OmimQueries {
   val q57BuildE2e = QueryDef(
     "q57_build_e2e",
     (s, d) => {
-      // localCheckpoint the two shared roots: all twelve synthesized
+      // Cut the two shared roots (Barrier.cut): all twelve synthesized
       // inputs branch off the same orders scan, and analyzer
       // DeduplicateRelations walks that duplicated subtree
       // combinatorially (measured: 40+ s of driver CPU at sf0.1 before
-      // truncation, ~1 s after). The checkpoint keys are tiny (orderkeys
+      // truncation, ~1 s after). The cut keys are tiny (orderkeys
       // + a 240-row id table) and deterministic.
       val k = col("o_orderkey")
-      val o = Tables.orders(s, d).select(k).localCheckpoint()
-      val ids = o.select((k % 240).cast("long").as("i")).distinct().localCheckpoint()
+      val o = Barrier.cut(Tables.orders(s, d).select(k))
+      val ids = Barrier.cut(o.select((k % 240).cast("long").as("i")).distinct())
       val i = col("i")
       val P = (lit(100000) + i).cast("string")
       val G = (lit(300000) + i).cast("string")

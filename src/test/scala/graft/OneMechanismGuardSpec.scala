@@ -7,10 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guard that each driver-side chore keeps ONE mechanism:
   * sessions are built only by [[LocalSession]] (and `Main.run`, whose
-  * `--master` is a deployment setting), and an Observation's future is
-  * awaited only by [[graft.operators.Barrier.observed]]. Comments and
-  * string literals are not code, so a scaladoc usage example does not
-  * count. */
+  * `--master` is a deployment setting), an Observation's future is
+  * awaited only by [[graft.operators.Barrier.observed]], and main source
+  * cuts lineage only through [[graft.operators.Barrier.cut]] (so the
+  * durable-barrier conf reaches every cut). Comments and string
+  * literals are not code, so a scaladoc usage example does not count. */
 class OneMechanismGuardSpec extends AnyFunSuite {
 
   private val sources: Seq[(String, String)] =
@@ -60,6 +61,15 @@ class OneMechanismGuardSpec extends AnyFunSuite {
     }
     assert(sites == Seq("src/main/scala/graft/operators/Barrier.scala"),
       s"hand-copied observed-metric waits (use Barrier.observed): $sites")
+  }
+
+  test("lineage is cut (localCheckpoint/checkpoint/setCheckpointDir) only in Barrier") {
+    val cutCall = """\blocalCheckpoint\b|\.\s*checkpoint\b|\bsetCheckpointDir\b""".r
+    val sites = sources.collect {
+      case (f, c) if f.startsWith("src/main/") && cutCall.findFirstIn(c).nonEmpty => f
+    }
+    assert(sites == Seq("src/main/scala/graft/operators/Barrier.scala"),
+      s"lineage cuts outside Barrier (use Barrier.cut): $sites")
   }
 
   test("the scan sees code, not comments or strings") {

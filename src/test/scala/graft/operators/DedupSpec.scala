@@ -114,15 +114,23 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents with a reliable checkpoint dir matches the default path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ccp").toString
+    // the loop's cuts go through Barrier, so the session conf is the one
+    // durable switch
+    val dir = java.nio.file.Files.createTempDirectory("graft-ccp")
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (9L, 3L)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
-    // reliable checkpoint actually wrote to the fault-tolerant path
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(wrote > 0, s"expected checkpoint files under $dir")
+    try {
+      spark.conf.set(Barrier.ConfKey, dir.toString)
+      val comps = Dedup.connectedComponents(pairs)
+        .as[(Long, Long)].collect().toMap
+      assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
+      // reliable checkpoint actually wrote to the fault-tolerant path
+      val wrote = java.nio.file.Files.walk(dir)
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(wrote > 0, s"expected checkpoint files under $dir")
+    } finally {
+      spark.conf.unset(Barrier.ConfKey)
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    }
   }
 
   test("dedupCorpus keeps one representative per exact/near cluster") {

@@ -1,29 +1,48 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.security.MessageDigest
+import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.model.Triple
+import graft.operators.Barrier
 
 /** Full end-to-end build over the synthetic fixtures: every source feeds
   * one triples DF; artifacts written and spot-checked. */
 class BuildGraphSpec extends SparkSpec {
 
-  private val d = "src/test/resources/omim"
-  private lazy val out = BuildGraph.build(spark, BuildGraph.Inputs(
-    mimTitlesPath = s"$d/mimTitles.txt",
-    mim2genePath = s"$d/mim2gene.txt",
-    morbidmapPath = s"$d/morbidmap.txt",
-    phenotypicSeriesPath = s"$d/phenotypicSeries.txt",
-    genemap2Path = s"$d/genemap2.txt",
-    hgncPath = s"$d/hgnc_complete_set.txt",
-    exclusionsPath = s"$d/exclusions-disease-gene.tsv",
-    protectedPath = s"$d/protected-disease-gene.tsv",
-    capitalizationsPath = s"$d/known_capitalizations.tsv",
-    sssomPath = s"$d/mondo_exactmatch_omim.sssom.tsv",
-    mappingsPath = s"$d/mappings.tsv",
-    pubmedRefsPath = s"$d/pubmed-refs.tsv"), versionDate = "2026-08-12")
+  private val inputs = BuildGraph.Inputs.fromDir("src/test/resources/omim")
+  private val versionDate = "2026-08-12"
+  private lazy val out = BuildGraph.build(spark, inputs, versionDate)
+
+  /** md5 of each artifact's single part file: the fixture release's
+    * bytes, identical at shuffle partitions 1, 4 and 7. */
+  private val golden = Map(
+    "omim.ttl" -> "397230eb8ef6242654c34047f3e07d26",
+    "review.tsv" -> "f3bcaa590f10ddb255ada2f9da494e03",
+    "mondo-omim-susceptibility-subset.robot.tsv" -> "d8aa92c4dc97b8211f8f36550fd67f1c",
+    "mondo-omim-genes.robot.tsv" -> "53a3cf188817f989f1ade15dce50ae30",
+    "disease-gene-relationships-qc.tsv" -> "6201279ba40b8335a4713dbcf1ca62bb",
+    "omim.sssom.tsv" -> "ad998dc10f7b1ffe2eb3223ddb8d04e0",
+    "morbidmap-protected-added.tsv" -> "cb066dc191bc6d9e049f6e371c84d3e5",
+    "mim2gene-protected-added.tsv" -> "c4f947ff2db2599c94d9c950765f0300")
+
+  private def partFile(dir: String, artifact: String): Path =
+    Files.list(Paths.get(dir, artifact)).iterator().asScala
+      .find(p => p.getFileName.toString.startsWith("part-") && !p.toString.endsWith(".crc"))
+      .getOrElse(fail(s"$artifact has no part file"))
+
+  private def digests(dir: String): Map[String, String] = golden.keys.map { n =>
+    n -> MessageDigest.getInstance("MD5").digest(Files.readAllBytes(partFile(dir, n)))
+      .map("%02x".format(_)).mkString
+  }.toMap
 
   test("build assembles a coherent graph") {
     val t = out.triples.collect().toSet
@@ -86,20 +105,11 @@ class BuildGraphSpec extends SparkSpec {
   test("writeArtifacts produces the eight release files") {
     val dir = Files.createTempDirectory("build").toString
     BuildGraph.writeArtifacts(spark, out, dir)
-    val names = Seq("omim.ttl", "review.tsv",
-      "mondo-omim-susceptibility-subset.robot.tsv",
-      "mondo-omim-genes.robot.tsv", "disease-gene-relationships-qc.tsv",
-      "omim.sssom.tsv", "morbidmap-protected-added.tsv",
-      "mim2gene-protected-added.tsv")
-    names.foreach { n =>
-      val part = Files.list(Paths.get(s"$dir/$n")).iterator().asScala
-        .find(p => p.toString.contains("part-") && !p.toString.endsWith(".crc"))
-      assert(part.isDefined, s"$n missing")
-      assert(Files.readAllLines(part.get).size() > 0, s"$n empty")
+    golden.keys.foreach { n =>
+      assert(Files.readAllLines(partFile(dir, n)).size() > 0, s"$n empty")
     }
-    val ttl = Files.list(Paths.get(s"$dir/omim.ttl")).iterator().asScala
-      .find(p => p.toString.contains("part-") && !p.toString.endsWith(".crc")).get
-    val lines = Files.readAllLines(ttl).asScala
+    assert(digests(dir) == golden, "the fixture release drifted from its recorded bytes")
+    val lines = Files.readAllLines(partFile(dir, "omim.ttl")).asScala
     assert(lines.head.startsWith("@prefix"))
     assert(lines.exists(_.startsWith("OMIM:100100 rdf:type owl:Class .")))
     // S6 acceptance: every CURIE prefix appearing in the body is bound
@@ -113,10 +123,52 @@ class BuildGraphSpec extends SparkSpec {
       .flatMap(t => curiePfx.findFirstMatchIn(t).map(_.group(1))).toSet
     assert((usedInBody -- bound).isEmpty,
       s"unbound prefixes in omim.ttl: ${(usedInBody -- bound).mkString(",")}")
-    val sssom = Files.list(Paths.get(s"$dir/omim.sssom.tsv")).iterator().asScala
-      .find(p => p.toString.contains("part-") && !p.toString.endsWith(".crc")).get
-    val sl = Files.readAllLines(sssom).asScala
+    val sl = Files.readAllLines(partFile(dir, "omim.sssom.tsv")).asScala
     assert(sl.head.startsWith("# curie_map:"))
     assert(sl.contains("subject_id\tpredicate_id\tobject_id\tmapping_justification"))
+  }
+
+  test("the release is byte-identical with durable barriers at one shuffle partition") {
+    val ckpt = Files.createTempDirectory("golden-ckpt")
+    val dir = Files.createTempDirectory("golden-durable").toString
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      spark.conf.set(Barrier.ConfKey, ckpt.toString)
+      spark.conf.set("spark.sql.shuffle.partitions", "1")
+      val durable = BuildGraph.build(spark, inputs, versionDate)
+      BuildGraph.writeArtifacts(spark, durable, dir)
+      assert(digests(dir) == golden)
+      // the graph's lineage cuts are reliable checkpoints under the conf'd dir
+      val cuts = durable.triples.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+      assert(cuts.nonEmpty && cuts.forall(_.getCheckpointFile.exists(_.contains(ckpt.toString))),
+        s"graph cuts not durable: ${cuts.map(_.getCheckpointFile)}")
+    } finally {
+      spark.conf.unset(Barrier.ConfKey)
+      spark.conf.set("spark.sql.shuffle.partitions", partitions)
+      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
+    }
+  }
+
+  test("each artifact write carries exactly one global Sort") {
+    val dir = Files.createTempDirectory("sorts").toString
+    // artifact name -> global Sorts in its write's optimized plan
+    val sorts = new ConcurrentHashMap[String, Int]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.optimizedPlan.collectFirst { case w: InsertIntoHadoopFsRelationCommand => w }
+          .foreach { w =>
+            sorts.put(w.outputPath.getName,
+              qe.optimizedPlan.collect { case s: Sort if s.global => s }.size)
+          }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      BuildGraph.writeArtifacts(spark, out, dir)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (sorts.size < golden.size && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(sorts.asScala.toMap == golden.keys.map(_ -> 1).toMap)
   }
 }
