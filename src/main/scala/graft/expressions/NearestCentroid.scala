@@ -35,7 +35,7 @@ case class NearestCentroidIndexExpr(child: Expression,
                                     cents: Seq[Seq[Double]],
                                     offset: Int)
     extends UnaryExpression {
-  require(cents.nonEmpty, "nearest_centroid needs at least one centroid")
+  require(cents.nonEmpty, "nearest_centroid: no centroids")
   require(offset >= 0)
 
   private lazy val centArr: Array[Array[Double]] = cents.map(_.toArray).toArray

@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import JpegCodec.{be16, u8}
+
 /** REAL metadata decode for self-describing media containers — pure
   * byte parsing, no codec libraries: PNG (IHDR), BMP (info header), GIF
   * (logical screen descriptor), WAV (RIFF fmt chunk walk), JPEG (SOF
@@ -16,8 +18,6 @@ object HeaderCodec {
   final case class MediaMeta(format: String, width: Int, height: Int,
                              channels: Int, sampleRate: Int, bitDepth: Int)
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
   private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
   private def be32(b: Array[Byte], i: Int): Int =
     (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)

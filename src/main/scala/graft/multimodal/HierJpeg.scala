@@ -1,6 +1,8 @@
 package graft.multimodal
 
-import JpegCodec.{BitReader, Huff, be16, extend, idctBlockRaw, u8}
+import JpegCodec.{Component, Frame, Tables, be16, clamp255, losslessScan,
+  progressiveScan, putYcc, reconstruct, sequentialArithScan, sequentialScan,
+  skipSegment, u8}
 
 /** Hierarchical JPEG decode (ITU T.81 Annex J): a DHP-framed pyramid of
   * frames, each either non-differential (codes the image, possibly at
@@ -16,15 +18,26 @@ import JpegCodec.{BitReader, Huff, be16, extend, idctBlockRaw, u8}
   *    SOF5 (differential sequential DCT) and SOF7 (differential lossless);
   *    SOF9 (sequential DCT, arithmetic) and SOF13 (differential
   *    sequential DCT, arithmetic — F.1.4.4 QM models, DAC conditioning
-  *    honored); 8-bit precision;
+  *    honored); progressive SOF2/SOF6 (Huffman) and SOF10/SOF14
+  *    (arithmetic), whose frames stay open across their scans; 8-bit
+  *    precision and 8-bit (Pq=0) quantization tables;
   *  - all components 1x1 sampling inside hierarchical frames, one SOS per
-  *    frame covering all of its components, no restart markers, no point
-  *    transform;
+  *    sequential frame covering all of its components, no restart
+  *    markers, no point transform outside progressive scans;
   *  - differential lossless scans use no prediction (T.81: Ss=0 in
   *    differential frames) and add modulo 2^16 to the reference (J.2.3);
   *    DCT frames merge with the +128 level shift (non-differential) or a
   *    plain signed add (differential) and clamp to [0,255] — references
   *    for DCT hierarchies are P-precision sample arrays.
+  *
+  * Layers: this decoder owns only what is hierarchical — DHP and EXP
+  * (with the J.1.1.2 expansion), frame bookkeeping, the reference merge
+  * and the EOI assembly. Table parsing, entropy decoding, scan walking,
+  * the IDCT and the colour transform are [[JpegCodec]]'s: a frame here is
+  * a [[JpegCodec.Frame]] of 1x1 components decoded by the same scan
+  * decoders as a single-frame stream, into unshifted Int planes. This
+  * loop applies its narrower remit after the shared table parsers and
+  * resumes at the marker each scan stops on instead of requiring EOI.
   *
   * Forged-header safety mirrors the single-frame path: the DHP-claimed
   * pixel count is capped against the actual byte length before any
@@ -73,110 +86,65 @@ object HierJpeg {
 
   def decode(b: Array[Byte]): Option[HeaderCodec.Pixels] = {
     if (b.length < 4 || u8(b, 0) != 0xff || u8(b, 1) != 0xd8) return None
-    val qt = new Array[Array[Int]](4)
-    val dcTabs = new Array[Huff](4)
-    val acTabs = new Array[Huff](4)
-    // DAC conditioning (B.2.4.3) for arithmetic frames, spec defaults
-    val dcCondL = Array(0, 0, 0, 0)
-    val dcCondU = Array(1, 1, 1, 1)
-    val acCondK = Array(5, 5, 5, 5)
+    val t = new Tables
     var fullW = 0; var fullH = 0
     var dhpIds: Array[Int] = null
     // insertion-ordered: assembly order is the DHP component order
     val refs = scala.collection.mutable.LinkedHashMap.empty[Int, Ref]
-    // current frame (between its SOF and the end of its single scan)
-    var fW = 0; var fH = 0
-    var fIds: Array[Int] = null
-    var fTq: Array[Int] = null
-    var fDiff = false; var fLossless = false; var fArith = false
-    // progressive frames (SOF10/SOF14) stay open across their scans:
-    // per-component coefficient stores (natural order per block) and
-    // the DC-first-arrived flags; reconstruction runs at frame close
-    var fProg = false
-    var fCoefs: Array[Array[Int]] = null
-    var fSawDc: Array[Boolean] = null
-    var frameOpen = false
+    // the open frame: from its SOF to the end of its single scan, or for
+    // a progressive frame (SOF2/SOF6/SOF10/SOF14) across its scans until
+    // the next frame-level marker
+    var f: Frame = null
     var i = 2
 
-    def mergeDct(id: Int, plane: Array[Int], planeW: Int): Boolean = {
-      if (fDiff) {
+    /** Merge one decoded component plane (row stride `stride`) into its
+      * reference: a non-differential frame creates it — DCT samples take
+      * the +128 level shift and the [0,255] clamp — and a differential
+      * frame adds its correction, modulo 2^16 for lossless (J.2.3) or
+      * clamped for DCT. */
+    def merge(id: Int, plane: Array[Int], stride: Int): Boolean = {
+      val w = f.width; val h = f.height
+      if (f.differential) {
         val r = refs.getOrElse(id, return false)
-        if (r.w != fW || r.h != fH) return false
+        if (r.w != w || r.h != h) return false
         var y = 0
-        while (y < fH) {
+        while (y < h) {
           var x = 0
-          while (x < fW) {
-            val v = r.s(y * fW + x) + plane(y * planeW + x)
-            r.s(y * fW + x) = if (v < 0) 0 else if (v > 255) 255 else v
+          while (x < w) {
+            val v = r.s(y * w + x) + plane(y * stride + x)
+            r.s(y * w + x) = if (f.lossless) v & 0xffff else clamp255(v)
             x += 1
           }
           y += 1
         }
       } else {
         if (refs.contains(id)) return false // second non-differential pass
-        val out = new Array[Int](fW * fH)
+        val out = new Array[Int](w * h)
         var y = 0
-        while (y < fH) {
+        while (y < h) {
           var x = 0
-          while (x < fW) {
-            val v = 128 + plane(y * planeW + x)
-            out(y * fW + x) = if (v < 0) 0 else if (v > 255) 255 else v
+          while (x < w) {
+            val v = plane(y * stride + x)
+            out(y * w + x) = if (f.lossless) v else clamp255(128 + v)
             x += 1
           }
           y += 1
         }
-        refs(id) = new Ref(fW, fH, out)
+        refs(id) = new Ref(w, h, out)
       }
       true
     }
 
-    def mergeLossless(id: Int, plane: Array[Int]): Boolean = {
-      if (fDiff) {
-        val r = refs.getOrElse(id, return false)
-        if (r.w != fW || r.h != fH) return false
-        var p = 0
-        while (p < fW * fH) {
-          r.s(p) = (r.s(p) + plane(p)) & 0xffff // J.2.3: modulo 2^16
-          p += 1
-        }
-      } else {
-        if (refs.contains(id)) return false
-        refs(id) = new Ref(fW, fH, plane)
-      }
-      true
-    }
-
-    /** Close an open progressive frame: every component must have its
-      * DC-first scan, then dequant + IDCT + merge — the single-frame
-      * path's deferred EOI step, relocated to "next frame-level marker"
-      * (a hierarchy continues after the frame with EXP/SOF/EOI). */
-    def finishProgFrame(): Boolean = {
-      if (fSawDc.exists(d => !d)) return false
-      val bw = (fW + 7) / 8; val bh = (fH + 7) / 8
-      val planeW = bw * 8
-      val coef = new Array[Int](64)
-      val tmp = new Array[Double](64)
-      var c = 0
-      while (c < fIds.length) {
-        val q = qt(fTq(c))
-        if (q == null) return false
-        val plane = new Array[Int](planeW * bh * 8)
-        var blk = 0
-        while (blk < bw * bh) {
-          val off = blk * 64
-          var k = 0
-          while (k < 64) {
-            val z = JpegCodec.Zigzag(k)
-            coef(z) = fCoefs(c)(off + z) * q(k) // q is zigzag-ordered
-            k += 1
-          }
-          idctBlockRaw(coef, tmp, plane, planeW, blk % bw, blk / bw)
-          blk += 1
-        }
-        if (!mergeDct(fIds(c), plane, planeW)) return false
-        c += 1
-      }
-      frameOpen = false; fProg = false; fCoefs = null; fSawDc = null
+    /** A frame-level marker (EXP, SOF, EOI) ends the open frame. A
+      * progressive one is reconstructed and merged now — the
+      * single-frame path's deferred EOI step, relocated, since a
+      * hierarchy continues after the frame; a sequential frame still
+      * open never got its scan. */
+    def closeFrame(): Boolean = {
+      if (f == null) return true
+      if (!f.progressive || !reconstruct(t, f) ||
+          !f.comps.forall(c => merge(c.id, c.raw, c.planeW))) return false
+      f = null
       true
     }
 
@@ -192,7 +160,7 @@ object HierJpeg {
       if (marker != 0xd9 && segStart + 2 > b.length) return None
       marker match {
         case 0xde => // DHP: same syntax as SOF (B.3.2)
-          if (dhpIds != null || frameOpen) return None
+          if (dhpIds != null || f != null) return None
           val len = be16(b, segStart)
           if (segStart + len > b.length || len < 8) return None
           if (u8(b, segStart + 2) != 8) return None // precision
@@ -207,37 +175,22 @@ object HierJpeg {
           dhpIds = Array.tabulate(nc)(c => u8(b, segStart + 8 + 3 * c))
           if (dhpIds.distinct.length != nc) return None
           i = segStart + len
-        case 0xdb => // DQT
-          val len = be16(b, segStart)
-          var p = segStart + 2
-          val end = segStart + len
-          if (end > b.length) return None
-          while (p < end) {
-            val pq = u8(b, p) >> 4; val tq = u8(b, p) & 15
-            if (pq != 0 || tq > 3 || p + 65 > end) return None
-            qt(tq) = Array.tabulate(64)(k => u8(b, p + 1 + k))
-            p += 65
-          }
-          i = end
-        case 0xc4 => // DHT
-          val len = be16(b, segStart)
-          var p = segStart + 2
-          val end = segStart + len
-          if (end > b.length) return None
-          while (p < end) {
-            val tc = u8(b, p) >> 4; val th = u8(b, p) & 15
-            if (tc > 1 || th > 3 || p + 17 > end) return None
-            val counts = Array.tabulate(16)(k => u8(b, p + 1 + k))
-            val total = counts.sum
-            if (total > 256 || p + 17 + total > end) return None
-            val h = new Huff(counts, b.slice(p + 17, p + 17 + total))
-            if (tc == 0) dcTabs(th) = h else acTabs(th) = h
-            p += 17 + total
-          }
-          i = end
+        // tables: the shared parsers, then this remit's limits — 8-bit
+        // quantization tables only, no restart interval
+        case 0xdb =>
+          i = t.dqt(b, segStart)
+          if (i < 0 || t.wideQt) return None
+        case 0xc4 =>
+          i = t.dht(b, segStart)
+          if (i < 0) return None
+        case 0xcc =>
+          i = t.dac(b, segStart)
+          if (i < 0) return None
+        case 0xdd =>
+          i = t.dri(b, segStart)
+          if (i < 0 || t.restartInterval != 0) return None
         case 0xdf => // EXP (B.3.3): expand all references for the next frame
-          if (frameOpen && (!fProg || !finishProgFrame())) return None
-          if (dhpIds == null || frameOpen || refs.isEmpty) return None
+          if (!closeFrame() || dhpIds == null || refs.isEmpty) return None
           val len = be16(b, segStart)
           if (len != 3 || segStart + len > b.length) return None
           val eh = u8(b, segStart + 2) >> 4; val ev = u8(b, segStart + 2) & 15
@@ -253,26 +206,6 @@ object HierJpeg {
             }
           }
           i = segStart + len
-        case 0xcc => // DAC: conditioning for arithmetic frames (B.2.4.3)
-          val len = be16(b, segStart)
-          if (segStart + len > b.length) return None
-          var p = segStart + 2
-          val end = segStart + len
-          while (p + 1 < end) {
-            val tc = u8(b, p) >> 4; val tb = u8(b, p) & 15
-            val cs = u8(b, p + 1)
-            if (tb > 3) return None
-            if (tc == 0) {
-              val l = cs & 15; val u = cs >> 4
-              if (u > 15 || l > u) return None
-              dcCondL(tb) = l; dcCondU(tb) = u
-            } else if (tc == 1) {
-              if (cs < 1 || cs > 63) return None
-              acCondK(tb) = cs
-            } else return None
-            p += 2
-          }
-          i = end
         case m if m == 0xc0 || m == 0xc2 || m == 0xc3 || m == 0xc5 ||
             m == 0xc6 || m == 0xc7 || m == 0xc9 || m == 0xca ||
             m == 0xcd || m == 0xce =>
@@ -281,471 +214,82 @@ object HierJpeg {
           // differential sequential DCT with ARITHMETIC coding;
           // PROGRESSIVE multi-scan frames — SOF2 non-differential /
           // SOF6 differential (Huffman) and SOF10 / SOF14 (arithmetic)
-          // — stay open until the next frame-level marker
-          if (dhpIds == null) return None
-          if (frameOpen && (!fProg || !finishProgFrame())) return None
-          fDiff = m == 0xc5 || m == 0xc6 || m == 0xc7 || m == 0xcd || m == 0xce
-          fLossless = m == 0xc3 || m == 0xc7
-          fArith = m == 0xc9 || m == 0xca || m == 0xcd || m == 0xce
-          fProg = m == 0xc2 || m == 0xc6 || m == 0xca || m == 0xce
+          if (dhpIds == null || !closeFrame()) return None
           val len = be16(b, segStart)
           if (segStart + len > b.length || len < 8) return None
           if (u8(b, segStart + 2) != 8) return None
-          fH = be16(b, segStart + 3); fW = be16(b, segStart + 5)
+          val fH = be16(b, segStart + 3); val fW = be16(b, segStart + 5)
           val nc = u8(b, segStart + 7)
           if (fW <= 0 || fH <= 0 || fW > fullW || fH > fullH) return None
           if (nc < 1 || nc > dhpIds.length || len < 8 + 3 * nc) return None
-          fIds = new Array[Int](nc); fTq = new Array[Int](nc)
-          var c = 0
-          while (c < nc) {
+          val comps = Array.tabulate(nc) { c =>
             val o = segStart + 8 + 3 * c
-            fIds(c) = u8(b, o)
-            if (!dhpIds.contains(fIds(c))) return None
+            if (!dhpIds.contains(u8(b, o))) return None
             if (u8(b, o + 1) != 0x11) return None // remit: 1x1 sampling
-            fTq(c) = u8(b, o + 2)
-            if (fTq(c) > 3) return None
-            c += 1
+            if (u8(b, o + 2) > 3) return None
+            Component(u8(b, o), 1, 1, u8(b, o + 2))
           }
-          if (fIds.distinct.length != nc) return None
-          if (fProg) {
-            // coefficient stores for the frame's scans (bounded: the
-            // DHP byte-length cap bounds fW*fH)
-            val bw = (fW + 7) / 8; val bh = (fH + 7) / 8
-            fCoefs = Array.fill(nc)(new Array[Int](bw * bh * 64))
-            fSawDc = new Array[Boolean](nc)
-          }
-          frameOpen = true
+          if (comps.map(_.id).distinct.length != nc) return None
+          // 1x1 components over the frame's block grid; DCT frames decode
+          // into unshifted Int planes (the shift/clamp happens at merge)
+          f = new Frame(m, 8, fW, fH, comps)
+          if (!f.lossless) comps.foreach(c => c.raw = new Array[Int](c.planeW * c.planeH))
           i = segStart + len
-        case 0xdd => // DRI: parsed, but restarts are out of remit
-          if (segStart + 4 > b.length) return None
-          if (be16(b, segStart + 2) != 0) return None
-          i = segStart + be16(b, segStart)
         case 0xda => // SOS: one scan (single-scan frames list all
           // components; progressive AC band scans are single-component)
-          if (!frameOpen) return None
+          if (f == null) return None
           val len = be16(b, segStart)
           if (segStart + len > b.length) return None
+          val nc = f.comps.length
           val ns = u8(b, segStart + 2)
-          if (ns < 1 || ns > fIds.length || len < 6 + 2 * ns) return None
-          if (!fProg && ns != fIds.length) return None
-          val td = new Array[Int](ns); val ta = new Array[Int](ns)
-          // frame-component index of each scan component: full-width
-          // scans must list all components in frame order; progressive
-          // single-component AC scans may name any frame component
-          val scanIdx = new Array[Int](ns)
-          var c = 0
-          while (c < ns) {
-            val cid = u8(b, segStart + 3 + 2 * c)
-            val fi = fIds.indexOf(cid)
-            if (fi < 0) return None
-            if (ns == fIds.length && fi != c) return None
-            scanIdx(c) = fi
-            td(c) = u8(b, segStart + 4 + 2 * c) >> 4
-            ta(c) = u8(b, segStart + 4 + 2 * c) & 15
-            if (td(c) > 3 || ta(c) > 3) return None
-            c += 1
+          if (ns < 1 || ns > nc || len < 6 + 2 * ns) return None
+          if (!f.progressive && ns != nc) return None
+          // full-width scans must list all components in frame order;
+          // progressive single-component AC scans may name any of them
+          val scanComps = Array.tabulate(ns) { c =>
+            val comp = f.comps.find(_.id == u8(b, segStart + 3 + 2 * c))
+              .getOrElse(return None)
+            if (ns == nc && (comp ne f.comps(c))) return None
+            comp.td = u8(b, segStart + 4 + 2 * c) >> 4
+            comp.ta = u8(b, segStart + 4 + 2 * c) & 15
+            if (comp.td > 3 || comp.ta > 3) return None
+            comp
           }
           val ss = u8(b, segStart + 3 + 2 * ns)
           val se = u8(b, segStart + 4 + 2 * ns)
           val ah = u8(b, segStart + 5 + 2 * ns) >> 4
           val al = u8(b, segStart + 5 + 2 * ns) & 15
-          if (fProg) {
-            // progressive-arithmetic scan (T.81 G.2, the 1x1
-            // hierarchical remit): DC band interleaves all frame
-            // components; AC bands are single-component; a refinement
-            // pass lowers Al by exactly 1; DC-first precedes everything
-            // per component. Statistics and the QM decoder reset per
-            // scan; the coefficient store persists until frame close.
-            if (ss == 0) { if (se != 0 || ns != fIds.length) return None }
-            else if (ns != 1 || se < ss || se > 63) return None
-            if (al > 13 || (ah != 0 && ah != al + 1)) return None
-            if (ss == 0 && ah > 0 && fSawDc.exists(d => !d)) return None
-            if (ss > 0 && !fSawDc(scanIdx(0))) return None
-            val bw = (fW + 7) / 8; val bh = (fH + 7) / 8
-            if (!fArith) {
-              // HUFFMAN progressive scan (SOF2/SOF6 in a hierarchy): the
-              // single-frame G.1 scan logic over the 1x1 block walk —
-              // EOB runs, ZRL, refinement correction bits; predictors
-              // and EOB-run state reset per scan
-              if (ss == 0 && ah == 0 &&
-                  (0 until ns).exists(ci => dcTabs(td(ci)) == null)) return None
-              if (ss > 0 && acTabs(ta(0)) == null) return None
-              val br = new BitReader(b, segStart + len)
-              val p1 = 1 << al
-              var eobrun = 0
-              val pred = new Array[Int](ns)
-              def refineOne(store: Array[Int], idx: Int): Boolean = {
-                val cv = store(idx)
-                val bit = br.nextBit()
-                if (bit < 0) return false
-                if (bit != 0 && (cv & p1) == 0)
-                  store(idx) = if (cv >= 0) cv + p1 else cv - p1
-                true
-              }
-              def acFirstUnit(store: Array[Int], off: Int): Boolean = {
-                if (eobrun > 0) { eobrun -= 1; return true }
-                var k = ss
-                while (k <= se) {
-                  val rs = acTabs(ta(0)).decode(br)
-                  if (rs < 0) return false
-                  val r = rs >> 4; val sv = rs & 15
-                  if (sv == 0) {
-                    if (r == 15) k += 16 // ZRL
-                    else {
-                      eobrun = (1 << r) - 1
-                      if (r > 0) {
-                        val eb = br.receive(r)
-                        if (eb == Int.MinValue) return false
-                        eobrun += eb
-                      }
-                      return true
-                    }
-                  } else {
-                    k += r
-                    if (k > se) return false
-                    val v = br.receive(sv)
-                    if (v == Int.MinValue) return false
-                    store(off + JpegCodec.Zigzag(k)) = extend(v, sv) << al
-                    k += 1
-                  }
-                }
-                true
-              }
-              def acRefineUnit(store: Array[Int], off: Int): Boolean = {
-                var k = ss
-                if (eobrun == 0) {
-                  var atEob = false
-                  while (!atEob && k <= se) {
-                    val rs = acTabs(ta(0)).decode(br)
-                    if (rs < 0) return false
-                    var r = rs >> 4; val sv = rs & 15
-                    var newVal = 0
-                    if (sv == 0) {
-                      if (r < 15) {
-                        eobrun = 1 << r
-                        if (r > 0) {
-                          val eb = br.receive(r)
-                          if (eb == Int.MinValue) return false
-                          eobrun += eb
-                        }
-                        atEob = true
-                      }
-                    } else {
-                      if (sv != 1) return false
-                      val bit = br.nextBit()
-                      if (bit < 0) return false
-                      newVal = if (bit != 0) p1 else -p1
-                    }
-                    if (!atEob) {
-                      var placed = false
-                      while (!placed && k <= se) {
-                        val z = JpegCodec.Zigzag(k)
-                        if (store(off + z) != 0) {
-                          if (!refineOne(store, off + z)) return false
-                        } else if (r == 0) {
-                          if (newVal != 0) store(off + z) = newVal
-                          placed = true
-                        } else r -= 1
-                        k += 1
-                      }
-                      if (!placed && newVal != 0) return false
-                    }
-                  }
-                }
-                if (eobrun > 0) {
-                  while (k <= se) {
-                    val z = JpegCodec.Zigzag(k)
-                    if (store(off + z) != 0 && !refineOne(store, off + z))
-                      return false
-                    k += 1
-                  }
-                  eobrun -= 1
-                }
-                true
-              }
-              var blk = 0
-              while (blk < bw * bh) {
-                var ci = 0
-                while (ci < ns) {
-                  val store = fCoefs(scanIdx(ci))
-                  val off = blk * 64
-                  val ok =
-                    if (ss == 0) {
-                      if (ah == 0) {
-                        val t = dcTabs(td(ci)).decode(br)
-                        if (t < 0 || t > 11) false
-                        else {
-                          val dv = br.receive(t)
-                          if (dv == Int.MinValue) false
-                          else {
-                            pred(ci) += extend(dv, t)
-                            store(off) = pred(ci) << al
-                            fSawDc(scanIdx(ci)) = true
-                            true
-                          }
-                        }
-                      } else {
-                        val bit = br.nextBit()
-                        if (bit < 0) false
-                        else { if (bit != 0) store(off) |= p1; true }
-                      }
-                    } else if (ah == 0) acFirstUnit(store, off)
-                    else acRefineUnit(store, off)
-                  if (!ok) return None
-                  ci += 1
-                }
-                blk += 1
-              }
-              if (br.alignMarker() < 0) return None
-              i = br.bytePos
+          val entry = segStart + len
+          if (f.progressive) {
+            // DC scans interleave every frame component; the frame stays
+            // open for its next scan
+            if (ss == 0 && ns != nc) return None
+            i = progressiveScan(b, entry, t, f, scanComps, ss, se, ah, al)
+            if (i < 0) return None
+          } else {
+            // remit: no point transform or successive approximation
+            if (ah != 0 || al != 0) return None
+            if (f.lossless) {
+              val planes = Array.fill(ns)(new Array[Int](f.width * f.height))
+              i = losslessScan(b, entry, t, f, scanComps, ss, se, ah, al, planes)
+              if (i < 0 ||
+                  !(0 until ns).forall(c => merge(f.comps(c).id, planes(c), f.width)))
+                return None
             } else {
-            val dec = new QmCoder.Decoder(b, segStart + len)
-            val p1 = 1 << al
-            val czig = new Array[Int](64)
-            val dcSt =
-              if (ss == 0 && ah == 0)
-                Array.tabulate(ns)(ci =>
-                  new QmCoder.DcState(dcCondL(td(ci)), dcCondU(td(ci))))
-              else null
-            val fixed = if (ss == 0 && ah > 0) QmCoder.fixedBin() else null
-            val acSt = if (ss > 0) new QmCoder.AcState(acCondK(ta(0))) else null
-            var blk = 0
-            var bad = false
-            while (!bad && blk < bw * bh) {
-              var ci = 0
-              while (!bad && ci < ns) {
-                val store = fCoefs(scanIdx(ci))
-                val off = blk * 64
-                if (ss == 0) {
-                  if (ah == 0) {
-                    if (!QmCoder.decodeDc(dec, dcSt(ci))) bad = true
-                    else {
-                      store(off) = dcSt(ci).pred << al
-                      fSawDc(scanIdx(ci)) = true
-                    }
-                  } else if (dec.decode(fixed) == 1) store(off) |= p1
-                } else {
-                  var k = ss
-                  while (k <= se) {
-                    czig(k) = store(off + JpegCodec.Zigzag(k)); k += 1
-                  }
-                  val ok =
-                    if (ah == 0) QmCoder.decodeAcBand(dec, acSt, czig, ss, se, al)
-                    else QmCoder.decodeAcRefine(dec, acSt, czig, ss, se, al)
-                  if (!ok) bad = true
-                  else {
-                    k = ss
-                    while (k <= se) {
-                      store(off + JpegCodec.Zigzag(k)) = czig(k); k += 1
-                    }
-                  }
-                }
-                ci += 1
-              }
-              blk += 1
+              // sequential DCT, full band; differential frames keep the
+              // same DC prediction chain as non-differential ones
+              if (ss != 0 || se != 63) return None
+              i = if (f.arith) sequentialArithScan(b, entry, t, f)
+                else sequentialScan(b, entry, t, f)
+              if (i < 0 || !f.comps.forall(c => merge(c.id, c.raw, c.planeW))) return None
             }
-            if (bad) return None
-            // walk flush bytes to the next marker; the frame stays OPEN
-            var p = dec.bytePos
-            var found = -1
-            while (found < 0) {
-              if (p + 1 >= b.length) return None
-              if (u8(b, p) == 0xff && u8(b, p + 1) > 0x8f) found = p
-              else p += 1
-            }
-            i = found
-            }
-          } else {
-          if (ah != 0 || al != 0) return None
-          if (fArith) {
-            // sequential DCT scan with ARITHMETIC coding (SOF9/SOF13):
-            // the F.1.4.4 QM models, interleaved 1x1 MCUs, full band.
-            // Differential frames keep the same DC prediction chain as
-            // the in-repo SOF5 Huffman path (encoder/decoder/oracle all
-            // agree); the correction merges without level shift.
-            if (ss != 0 || se != 63) return None
-            c = 0
-            while (c < ns) { if (qt(fTq(c)) == null) return None; c += 1 }
-            val bw = (fW + 7) / 8; val bh = (fH + 7) / 8
-            val planeW = bw * 8
-            val planes = Array.fill(ns)(new Array[Int](planeW * bh * 8))
-            val dec = new QmCoder.Decoder(b, segStart + len)
-            val dcSt = Array.tabulate(ns)(ci =>
-              new QmCoder.DcState(dcCondL(td(ci)), dcCondU(td(ci))))
-            val acSt = Array.tabulate(ns)(ci =>
-              new QmCoder.AcState(acCondK(ta(ci))))
-            val czig = new Array[Int](64)
-            val coef = new Array[Int](64)
-            val tmp = new Array[Double](64)
-            var mcu = 0
-            while (mcu < bw * bh) {
-              val bx = mcu % bw; val by = mcu / bw
-              c = 0
-              while (c < ns) {
-                java.util.Arrays.fill(czig, 0)
-                val q = qt(fTq(c))
-                if (!QmCoder.decodeDc(dec, dcSt(c))) return None
-                if (!QmCoder.decodeAc(dec, acSt(c), czig)) return None
-                java.util.Arrays.fill(coef, 0)
-                coef(0) = dcSt(c).pred * q(0)
-                var k = 1
-                while (k < 64) {
-                  coef(JpegCodec.Zigzag(k)) = czig(k) * q(k); k += 1
-                }
-                idctBlockRaw(coef, tmp, planes(c), planeW, bx, by)
-                c += 1
-              }
-              mcu += 1
-            }
-            // walk unread flush bytes to the NEXT marker — unlike the
-            // single-frame SOF9 exit this need not be EOI (the hierarchy
-            // continues with EXP / the next SOF / EOI)
-            var p = dec.bytePos
-            var found = -1
-            while (found < 0) {
-              if (p + 1 >= b.length) return None
-              if (u8(b, p) == 0xff && u8(b, p + 1) > 0x8f) found = p
-              else p += 1
-            }
-            c = 0
-            while (c < ns) {
-              if (!mergeDct(fIds(c), planes(c), planeW)) return None
-              c += 1
-            }
-            frameOpen = false
-            i = found
-          } else {
-          val br = new BitReader(b, segStart + len)
-          if (fLossless) {
-            // lossless scan: raster-interleaved samples (1x1 MCUs). A
-            // differential frame codes the correction directly (Ss=0, no
-            // prediction); a non-differential one runs the Annex H
-            // predictor walk.
-            if (fDiff) { if (ss != 0 || se != 0) return None }
-            else if (ss < 1 || ss > 7 || se != 0) return None
-            c = 0
-            while (c < ns) { if (dcTabs(td(c)) == null) return None; c += 1 }
-            val planes = Array.fill(ns)(new Array[Int](fW * fH))
-            var y = 0
-            while (y < fH) {
-              var x = 0
-              while (x < fW) {
-                c = 0
-                while (c < ns) {
-                  val t = dcTabs(td(c)).decode(br)
-                  if (t < 0 || t > 16) return None
-                  val diff =
-                    if (t == 0) 0
-                    else if (t == 16) 32768
-                    else {
-                      val v = br.receive(t)
-                      if (v == Int.MinValue) return None
-                      extend(v, t)
-                    }
-                  val plane = planes(c)
-                  val v =
-                    if (fDiff) diff & 0xffff
-                    else {
-                      val px =
-                        if (x == 0 && y == 0) 128
-                        else if (y == 0) plane(x - 1)
-                        else if (x == 0) plane((y - 1) * fW)
-                        else {
-                          val ra = plane(y * fW + x - 1)
-                          val rb = plane((y - 1) * fW + x)
-                          val rc = plane((y - 1) * fW + x - 1)
-                          ss match {
-                            case 1 => ra
-                            case 2 => rb
-                            case 3 => rc
-                            case 4 => ra + rb - rc
-                            case 5 => ra + ((rb - rc) >> 1)
-                            case 6 => rb + ((ra - rc) >> 1)
-                            case _ => (ra + rb) >> 1
-                          }
-                        }
-                      (px + diff) & 0xffff
-                    }
-                  plane(y * fW + x) = v
-                  c += 1
-                }
-                x += 1
-              }
-              y += 1
-            }
-            if (br.alignMarker() < 0) return None
-            c = 0
-            while (c < ns) {
-              if (!mergeLossless(fIds(c), planes(c))) return None
-              c += 1
-            }
-          } else {
-            // sequential DCT scan, interleaved 1x1 MCUs (one block per
-            // component), full band
-            if (ss != 0 || se != 63) return None
-            c = 0
-            while (c < ns) {
-              if (qt(fTq(c)) == null || dcTabs(td(c)) == null ||
-                  acTabs(ta(c)) == null) return None
-              c += 1
-            }
-            val bw = (fW + 7) / 8; val bh = (fH + 7) / 8
-            val planeW = bw * 8
-            val planes = Array.fill(ns)(new Array[Int](planeW * bh * 8))
-            val pred = new Array[Int](ns)
-            val coef = new Array[Int](64)
-            val tmp = new Array[Double](64)
-            var mcu = 0
-            while (mcu < bw * bh) {
-              val bx = mcu % bw; val by = mcu / bw
-              c = 0
-              while (c < ns) {
-                java.util.Arrays.fill(coef, 0)
-                val q = qt(fTq(c))
-                val t = dcTabs(td(c)).decode(br)
-                if (t < 0 || t > 11) return None
-                val diffBits = br.receive(t)
-                if (diffBits == Int.MinValue) return None
-                pred(c) += extend(diffBits, t)
-                coef(0) = pred(c) * q(0)
-                var k = 1
-                var done = false
-                while (!done && k < 64) {
-                  val rs = acTabs(ta(c)).decode(br)
-                  if (rs < 0) return None
-                  val r = rs >> 4; val sv = rs & 15
-                  if (sv == 0) {
-                    if (r == 15) k += 16 else done = true
-                  } else {
-                    k += r
-                    if (k > 63) return None
-                    val vv = br.receive(sv)
-                    if (vv == Int.MinValue) return None
-                    coef(JpegCodec.Zigzag(k)) = extend(vv, sv) * q(k)
-                    k += 1
-                  }
-                }
-                idctBlockRaw(coef, tmp, planes(c), planeW, bx, by)
-                c += 1
-              }
-              mcu += 1
-            }
-            if (br.alignMarker() < 0) return None
-            c = 0
-            while (c < ns) {
-              if (!mergeDct(fIds(c), planes(c), planeW)) return None
-              c += 1
-            }
-          }
-          frameOpen = false
-          // resume the marker loop at the marker the entropy segment
-          // stopped on
-          i = br.bytePos
-          }
+            // resume the marker loop at the marker the scan stopped on —
+            // unlike the single-frame exits this need not be EOI (the
+            // hierarchy continues with EXP / the next SOF / EOI)
+            f = null
           }
         case 0xd9 => // EOI: every DHP component present at full size
-          if (frameOpen && fProg && !finishProgFrame()) return None
-          if (dhpIds == null || frameOpen || refs.size != dhpIds.length)
+          if (!closeFrame() || dhpIds == null || refs.size != dhpIds.length)
             return None
           dhpIds.foreach { id =>
             val r = refs.getOrElse(id, return None)
@@ -756,7 +300,7 @@ object HierJpeg {
             val s = refs(dhpIds(0)).s
             var p = 0
             while (p < fullW * fullH) {
-              val v = (if (s(p) < 0) 0 else if (s(p) > 255) 255 else s(p)).toByte
+              val v = clamp255(s(p)).toByte
               rgb(3 * p) = v; rgb(3 * p + 1) = v; rgb(3 * p + 2) = v
               p += 1
             }
@@ -766,23 +310,16 @@ object HierJpeg {
             val crs = refs(dhpIds(2)).s
             var p = 0
             while (p < fullW * fullH) {
-              val lum = ys(p); val cbv = cbs(p) - 128; val crv = crs(p) - 128
-              val r = math.round(lum + 1.402 * crv).toInt
-              val g = math.round(lum - 0.344136 * cbv - 0.714136 * crv).toInt
-              val bl = math.round(lum + 1.772 * cbv).toInt
-              rgb(3 * p) = (if (r < 0) 0 else if (r > 255) 255 else r).toByte
-              rgb(3 * p + 1) = (if (g < 0) 0 else if (g > 255) 255 else g).toByte
-              rgb(3 * p + 2) = (if (bl < 0) 0 else if (bl > 255) 255 else bl).toByte
+              putYcc(rgb, 3 * p, ys(p), cbs(p), crs(p))
               p += 1
             }
           }
           return Some(HeaderCodec.Pixels(fullW, fullH, rgb))
-        case m if (m >= 0xc1 && m <= 0xcf) || m == 0xd8 =>
+        case m if m >= 0xc1 && m <= 0xcf =>
           return None // other frame types in a hierarchy: unsupported
         case _ => // APPn / COM
-          val len = be16(b, segStart)
-          if (len < 2 || segStart + len > b.length) return None
-          i = segStart + len
+          i = skipSegment(b, segStart)
+          if (i < 0) return None
       }
     }
     None

@@ -351,6 +351,96 @@ object MediaSynth {
     }
     /** Pad to a byte boundary with 1-bits (T.81 F.1.2.3). */
     def align(): Unit = while (cnt != 0) put(1, 1)
+    /** A DC (or lossless) difference under the generators' DC tables:
+      * category s as its canonical 4-bit code s, then s magnitude bits. */
+    def putDc(diff: Int): Unit = {
+      val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
+      put(s, 4)
+      if (s > 0) put(if (diff > 0) diff else diff + (1 << s) - 1, s)
+    }
+  }
+
+  // ---- JPEG segment writers (T.81 B.2) shared by every generator below.
+  // The generators code everything with table 0 (Tq = Td = Ta = 0).
+
+  private def be16(out: ByteArrayOutputStream, v: Int): Unit = {
+    out.write((v >> 8) & 0xff); out.write(v & 0xff)
+  }
+
+  /** A marker without a segment: SOI, EOI, RSTn. */
+  private def mark(out: ByteArrayOutputStream, m: Int): Unit = {
+    out.write(0xff); out.write(m)
+  }
+
+  /** APP0 JFIF 1.01 header: 1:1 pixel aspect, no thumbnail. */
+  private def app0Jfif(out: ByteArrayOutputStream): Unit = {
+    mark(out, 0xe0)
+    be16(out, 16); out.write("JFIF".getBytes("US-ASCII")); out.write(0)
+    out.write(1); out.write(1); out.write(0); be16(out, 1); be16(out, 1)
+    out.write(0); out.write(0)
+  }
+
+  /** DQT of 8-bit table 0: q(0) = `q0`, every other entry 1. */
+  private def dqt(out: ByteArrayOutputStream, q0: Int): Unit = {
+    mark(out, 0xdb); be16(out, 67); out.write(0x00)
+    out.write(q0); (1 until 64).foreach(_ => out.write(1))
+  }
+
+  /** DHT of table 0 in class `tc` (0 DC, 1 AC): one code of `len` bits
+    * for each symbol in `vals`. */
+  private def dht(out: ByteArrayOutputStream, tc: Int, len: Int,
+      vals: Seq[Int]): Unit = {
+    mark(out, 0xc4); be16(out, 2 + 17 + vals.length); out.write(tc << 4)
+    (1 to 16).foreach(l => out.write(if (l == len) vals.length else 0))
+    vals.foreach(out.write)
+  }
+
+  /** DC table 0: 4-bit codes for categories 0 until n (code = category). */
+  private def dcTable(out: ByteArrayOutputStream, n: Int): Unit =
+    dht(out, 0, 4, 0 until n)
+
+  /** AC table 0 with a single 2-bit EOB code. */
+  private def eobTable(out: ByteArrayOutputStream): Unit = dht(out, 1, 2, Seq(0))
+
+  /** AC table 0 of EOBn symbols (r<<4 for r = 0..14), code r in 4 bits. */
+  private def eobRunTable(out: ByteArrayOutputStream): Unit =
+    dht(out, 1, 4, (0 until 15).map(_ << 4))
+
+  /** Frame header (SOFn, or DHP — same syntax): components 1..nc on
+    * quant table 0, all 1x1 sampled except component 1 at `yHv`. */
+  private def frameHeader(out: ByteArrayOutputStream, m: Int, precision: Int,
+      w: Int, h: Int, nc: Int, yHv: Int = 0x11): Unit = {
+    mark(out, m)
+    be16(out, 8 + 3 * nc); out.write(precision); be16(out, h); be16(out, w); out.write(nc)
+    (1 to nc).foreach { c =>
+      out.write(c); out.write(if (c == 1) yHv else 0x11); out.write(0)
+    }
+  }
+
+  /** Scan header over components `comps`. */
+  private def scanHeader(out: ByteArrayOutputStream, comps: Seq[Int], ss: Int,
+      se: Int, ah: Int, al: Int): Unit = {
+    mark(out, 0xda)
+    be16(out, 6 + 2 * comps.length); out.write(comps.length)
+    comps.foreach { c => out.write(c); out.write(0x00) }
+    out.write(ss); out.write(se); out.write((ah << 4) | al)
+  }
+
+  /** DRI: a restart marker every `n` MCUs. */
+  private def restartInterval(out: ByteArrayOutputStream, n: Int): Unit = {
+    mark(out, 0xdd); be16(out, 4); be16(out, n)
+  }
+
+  /** DAC: DC table 0 conditioned on L = 0, U = `dcU`; AC table 0 on Kx. */
+  private def dac(out: ByteArrayOutputStream, dcU: Int, acKx: Int): Unit = {
+    mark(out, 0xcc); be16(out, 2 + 4)
+    out.write(0x00); out.write(dcU << 4)
+    out.write(0x10); out.write(acKx)
+  }
+
+  /** EXP: double the references in both dimensions. */
+  private def expandBoth(out: ByteArrayOutputStream): Unit = {
+    mark(out, 0xdf); be16(out, 3); out.write(0x11)
   }
 
   /** One baseline JPEG of constant 8×8 blocks. Custom canonical Huffman
@@ -363,48 +453,19 @@ object MediaSynth {
     val nc = if (variant == 0) 1 else 3
     val dri = if (subsampled) 2 else 0
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xe0) // APP0 / JFIF
-    be16w(16); out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0); be16w(1); be16w(1)
-    out.write(0); out.write(0)
-    out.write(0xff); out.write(0xdb) // DQT: table 0, all ones
-    be16w(67); out.write(0x00)
-    (0 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xc0) // SOF0
-    be16w(8 + 3 * nc); out.write(8); be16w(h); be16w(w); out.write(nc)
-    if (nc == 1) { out.write(1); out.write(0x11); out.write(0) }
-    else {
-      out.write(1); out.write(if (subsampled) 0x22 else 0x11); out.write(0)
-      out.write(2); out.write(0x11); out.write(0)
-      out.write(3); out.write(0x11); out.write(0)
-    }
-    out.write(0xff); out.write(0xc4) // DHT: DC table 0 — BITS[4]=12, vals 0..11
-    be16w(2 + 17 + 12); out.write(0x00)
-    val dcBits = Array(0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    dcBits.foreach(out.write)
-    (0 until 12).foreach(out.write)
-    out.write(0xff); out.write(0xc4) // DHT: AC table 0 — one 2-bit EOB code
-    be16w(2 + 17 + 1); out.write(0x10)
-    val acBits = Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    acBits.foreach(out.write)
-    out.write(0x00)
-    if (dri > 0) { out.write(0xff); out.write(0xdd); be16w(4); be16w(dri) }
-    out.write(0xff); out.write(0xda) // SOS
-    be16w(6 + 2 * nc); out.write(nc)
-    (1 to nc).foreach { c => out.write(c); out.write(0x00) }
-    out.write(0); out.write(63); out.write(0)
+    mark(out, 0xd8) // SOI
+    app0Jfif(out)
+    dqt(out, 1) // all ones
+    frameHeader(out, 0xc0, 8, w, h, nc, if (subsampled) 0x22 else 0x11) // SOF0
+    dcTable(out, 12)
+    eobTable(out)
+    if (dri > 0) restartInterval(out, dri)
+    scanHeader(out, 1 to nc, 0, 63, 0, 0)
 
     val bits = new JpegBits(out)
     // canonical codes from the tables above: DC category t ↦ code t in 4
     // bits; EOB ↦ '00'
-    def putDc(diff: Int): Unit = {
-      val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-      bits.put(s, 4)
-      if (s > 0) bits.put(if (diff > 0) diff else diff + (1 << s) - 1, s)
-    }
-    def putBlock(dc: Int, pred: Int): Int = { putDc(dc - pred); bits.put(0, 2); dc }
+    def putBlock(dc: Int, pred: Int): Int = { bits.putDc(dc - pred); bits.put(0, 2); dc }
 
     val hMax = if (subsampled) 2 else 1
     val mcusX = w / (8 * hMax); val mcusY = h / (8 * hMax)
@@ -414,7 +475,7 @@ object MediaSynth {
     while (mcu < mcusX * mcusY) {
       if (dri > 0 && mcu > 0 && mcu % dri == 0) {
         bits.align()
-        out.write(0xff); out.write(0xd0 + (rst % 8)); rst += 1
+        mark(out, 0xd0 + rst % 8); rst += 1
         predY = 0; predCb = 0; predCr = 0
       }
       val mx = mcu % mcusX; val my = mcu / mcusX
@@ -441,7 +502,7 @@ object MediaSynth {
       mcu += 1
     }
     bits.align()
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -469,32 +530,13 @@ object MediaSynth {
     val nc = if (variant == 0) 1 else 3
     val dri = if (subsampled) 2 else 0
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xe0) // APP0 / JFIF
-    be16w(16); out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0); be16w(1); be16w(1)
-    out.write(0); out.write(0)
-    out.write(0xff); out.write(0xdb) // DQT: table 0 — q(0)=8, rest ones
-    be16w(67); out.write(0x00)
-    out.write(8); (1 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xc2) // SOF2 progressive
-    be16w(8 + 3 * nc); out.write(8); be16w(h); be16w(w); out.write(nc)
-    if (nc == 1) { out.write(1); out.write(0x11); out.write(0) }
-    else {
-      out.write(1); out.write(if (subsampled) 0x22 else 0x11); out.write(0)
-      out.write(2); out.write(0x11); out.write(0)
-      out.write(3); out.write(0x11); out.write(0)
-    }
-    out.write(0xff); out.write(0xc4) // DHT: DC table 0 — twelve 4-bit codes
-    be16w(2 + 17 + 12); out.write(0x00)
-    Array(0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    (0 until 12).foreach(out.write)
-    out.write(0xff); out.write(0xc4) // DHT: AC table 0 — EOBn symbols
-    be16w(2 + 17 + 15); out.write(0x10) // (r<<4)|0 for r=0..14, 4-bit codes
-    Array(0, 0, 0, 15, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    (0 until 15).foreach(r => out.write(r << 4))
-    if (dri > 0) { out.write(0xff); out.write(0xdd); be16w(4); be16w(dri) }
+    mark(out, 0xd8) // SOI
+    app0Jfif(out)
+    dqt(out, 8) // q(0)=8, rest ones
+    frameHeader(out, 0xc2, 8, w, h, nc, if (subsampled) 0x22 else 0x11) // SOF2
+    dcTable(out, 12)
+    eobRunTable(out)
+    if (dri > 0) restartInterval(out, dri)
 
     val mcusX = w / (8 * (if (subsampled) 2 else 1))
     val mcusY = h / (8 * (if (subsampled) 2 else 1))
@@ -510,15 +552,12 @@ object MediaSynth {
     var rst = 0
     def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): JpegBits = {
       rst = 0 // RSTn numbering restarts at RST0 in every scan (T.81 E.1.2)
-      out.write(0xff); out.write(0xda)
-      be16w(6 + 2 * comps.length); out.write(comps.length)
-      comps.foreach { c => out.write(c); out.write(0x00) }
-      out.write(ss); out.write(se); out.write((ah << 4) | al)
+      scanHeader(out, comps, ss, se, ah, al)
       new JpegBits(out)
     }
     def restartMark(bits: JpegBits): Unit = {
       bits.align()
-      out.write(0xff); out.write(0xd0 + (rst % 8)); rst += 1
+      mark(out, 0xd0 + rst % 8); rst += 1
     }
 
     // ---- scan 1: DC first, Ah=0 Al=1, all components interleaved.
@@ -526,11 +565,6 @@ object MediaSynth {
     // DCs are 0. Categories fit the 12-entry DC table.
     locally {
       val bits = sos(1 to nc, 0, 0, 0, 1)
-      def putDc(bits: JpegBits, diff: Int): Unit = {
-        val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-        bits.put(s, 4)
-        if (s > 0) bits.put(if (diff > 0) diff else diff + (1 << s) - 1, s)
-      }
       var predY = 0; var predCb = 0; var predCr = 0
       var mcu = 0
       val yPerMcu = if (subsampled) 4 else 1
@@ -543,12 +577,12 @@ object MediaSynth {
         while (k < yPerMcu) {
           val (bx, by) = blocks(mcu * yPerMcu + k)
           val sv = dcOf(bx, by) >> 1 // point transform: arithmetic >> Al
-          putDc(bits, sv - predY); predY = sv
+          bits.putDc(sv - predY); predY = sv
           k += 1
         }
         if (nc == 3) {
-          putDc(bits, 0 - predCb); predCb = 0
-          putDc(bits, 0 - predCr); predCr = 0
+          bits.putDc(0 - predCb); predCb = 0
+          bits.putDc(0 - predCr); predCr = 0
         }
         mcu += 1
       }
@@ -615,7 +649,7 @@ object MediaSynth {
     acScan(1, yBlocks, 6, 63, 1, 0)
     if (nc == 3) { acScan(2, cBlocks, 1, 63, 1, 0); acScan(3, cBlocks, 1, 63, 1, 0) }
 
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -641,26 +675,12 @@ object MediaSynth {
     val w = losslessWidth(id); val h = losslessHeight(id)
     val pred = (1 + id % 7).toInt
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xc3) // SOF3 lossless
-    be16w(11); out.write(8); be16w(h); be16w(w); out.write(1)
-    out.write(1); out.write(0x11); out.write(0)
-    out.write(0xff); out.write(0xc4) // DHT: DC table 0 — BITS[4]=10, vals 0..9
-    be16w(2 + 17 + 10); out.write(0x00)
-    val dcBits = Array(0, 0, 0, 10, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-    dcBits.foreach(out.write)
-    (0 until 10).foreach(out.write)
-    out.write(0xff); out.write(0xda) // SOS: Ss = predictor, Se = 0, AhAl = 0
-    be16w(8); out.write(1); out.write(1); out.write(0x00)
-    out.write(pred); out.write(0); out.write(0)
+    mark(out, 0xd8) // SOI
+    frameHeader(out, 0xc3, 8, w, h, 1) // SOF3 lossless
+    dcTable(out, 10)
+    scanHeader(out, Seq(1), pred, 0, 0, 0) // Ss = predictor
 
     val bits = new JpegBits(out)
-    def putDiff(diff: Int): Unit = {
-      val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-      bits.put(s, 4)
-      if (s > 0) bits.put(if (diff > 0) diff else diff + (1 << s) - 1, s)
-    }
     // prediction over RECONSTRUCTED (= exact, lossless) neighbors with the
     // T.81 H.1 boundary rules; must mirror JpegCodec's decode-side walk
     var y = 0
@@ -685,13 +705,13 @@ object MediaSynth {
               case _ => (ra + rb) >> 1
             }
           }
-        putDiff(losslessGray(id, x, y) - px)
+        bits.putDc(losslessGray(id, x, y) - px)
         x += 1
       }
       y += 1
     }
     bits.align()
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -708,44 +728,26 @@ object MediaSynth {
   def jpeg12(id: Long): Array[Byte] = {
     val w = jpegWidth(id); val h = jpegHeight(id)
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xdb) // DQT: table 0, all ones
-    be16w(67); out.write(0x00)
-    (0 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xc1) // SOF1 extended sequential, 12-bit
-    be16w(11); out.write(12); be16w(h); be16w(w); out.write(1)
-    out.write(1); out.write(0x11); out.write(0)
-    out.write(0xff); out.write(0xc4) // DHT: DC table 0 — BITS[4]=16, vals 0..15
-    be16w(2 + 17 + 16); out.write(0x00)
-    Array(0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    (0 until 16).foreach(out.write)
-    out.write(0xff); out.write(0xc4) // DHT: AC table 0 — one 2-bit EOB code
-    be16w(2 + 17 + 1); out.write(0x10)
-    Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    out.write(0x00)
-    out.write(0xff); out.write(0xda) // SOS
-    be16w(8); out.write(1); out.write(1); out.write(0x00)
-    out.write(0); out.write(63); out.write(0)
+    mark(out, 0xd8) // SOI
+    dqt(out, 1) // all ones
+    frameHeader(out, 0xc1, 12, w, h, 1) // SOF1 extended sequential, 12-bit
+    dcTable(out, 16)
+    eobTable(out)
+    scanHeader(out, Seq(1), 0, 63, 0, 0)
 
     val bits = new JpegBits(out)
-    def putDc(diff: Int): Unit = {
-      val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-      bits.put(s, 4)
-      if (s > 0) bits.put(if (diff > 0) diff else diff + (1 << s) - 1, s)
-    }
     val bw = w / 8; val bh = h / 8
     var pred = 0
     var mcu = 0
     while (mcu < bw * bh) {
       val bx = mcu % bw; val by = mcu / bw
       val dc = 8 * (jpeg12Block(id, bx, by) - 2048)
-      putDc(dc - pred); pred = dc
+      bits.putDc(dc - pred); pred = dc
       bits.put(0, 2) // EOB
       mcu += 1
     }
     bits.align()
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -765,33 +767,14 @@ object MediaSynth {
       crSample: Int): Array[Byte] = {
     val w = jpegWidth(id); val h = jpegHeight(id)
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xdb) // DQT: table 0, all ones
-    be16w(67); out.write(0x00)
-    (0 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xc1) // SOF1 extended sequential, 12-bit
-    be16w(8 + 9); out.write(12); be16w(h); be16w(w); out.write(3)
-    (1 to 3).foreach { c => out.write(c); out.write(0x11); out.write(0) }
-    out.write(0xff); out.write(0xc4) // DHT: DC table 0 — BITS[4]=16, vals 0..15
-    be16w(2 + 17 + 16); out.write(0x00)
-    Array(0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    (0 until 16).foreach(out.write)
-    out.write(0xff); out.write(0xc4) // DHT: AC table 0 — one 2-bit EOB code
-    be16w(2 + 17 + 1); out.write(0x10)
-    Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    out.write(0x00)
-    out.write(0xff); out.write(0xda) // SOS: 3 components interleaved
-    be16w(12); out.write(3)
-    (1 to 3).foreach { c => out.write(c); out.write(0x00) }
-    out.write(0); out.write(63); out.write(0)
+    mark(out, 0xd8) // SOI
+    dqt(out, 1) // all ones
+    frameHeader(out, 0xc1, 12, w, h, 3) // SOF1 extended sequential, 12-bit
+    dcTable(out, 16)
+    eobTable(out)
+    scanHeader(out, 1 to 3, 0, 63, 0, 0) // 3 components interleaved
 
     val bits = new JpegBits(out)
-    def putDc(diff: Int): Unit = {
-      val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-      bits.put(s, 4)
-      if (s > 0) bits.put(if (diff > 0) diff else diff + (1 << s) - 1, s)
-    }
     val bw = w / 8; val bh = h / 8
     val pred = Array(0, 0, 0)
     var mcu = 0
@@ -804,14 +787,14 @@ object MediaSynth {
           case 1 => 8 * (cbSample - 2048)
           case _ => 8 * (crSample - 2048)
         }
-        putDc(dc - pred(ci)); pred(ci) = dc
+        bits.putDc(dc - pred(ci)); pred(ci) = dc
         bits.put(0, 2) // EOB
         ci += 1
       }
       mcu += 1
     }
     bits.align()
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -834,26 +817,12 @@ object MediaSynth {
       (_, _) => 128,
       (x, y) => losslessCr(id, x, y))
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xc3) // SOF3 lossless, 3 components
-    be16w(8 + 9); out.write(8); be16w(h); be16w(w); out.write(3)
-    (1 to 3).foreach { c => out.write(c); out.write(0x11); out.write(0) }
-    out.write(0xff); out.write(0xc4) // DHT: DC table 0 — BITS[4]=10, vals 0..9
-    be16w(2 + 17 + 10); out.write(0x00)
-    Array(0, 0, 0, 10, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    (0 until 10).foreach(out.write)
-    out.write(0xff); out.write(0xda) // SOS: all 3 comps, Ss = predictor
-    be16w(6 + 6); out.write(3)
-    (1 to 3).foreach { c => out.write(c); out.write(0x00) }
-    out.write(pred); out.write(0); out.write(0)
+    mark(out, 0xd8) // SOI
+    frameHeader(out, 0xc3, 8, w, h, 3) // SOF3 lossless, 3 components
+    dcTable(out, 10)
+    scanHeader(out, 1 to 3, pred, 0, 0, 0) // all 3 comps, Ss = predictor
 
     val bits = new JpegBits(out)
-    def putDiff(diff: Int): Unit = {
-      val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-      bits.put(s, 4)
-      if (s > 0) bits.put(if (diff > 0) diff else diff + (1 << s) - 1, s)
-    }
     var y = 0
     while (y < h) {
       var x = 0
@@ -877,7 +846,7 @@ object MediaSynth {
                 case _ => (ra + rb) >> 1
               }
             }
-          putDiff(f(x, y) - px)
+          bits.putDc(f(x, y) - px)
           c += 1
         }
         x += 1
@@ -885,7 +854,7 @@ object MediaSynth {
       y += 1
     }
     bits.align()
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -906,35 +875,15 @@ object MediaSynth {
     val subsampled = variant == 2
     val nc = if (variant == 0) 1 else 3
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xe0) // APP0 / JFIF
-    be16w(16); out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0); be16w(1); be16w(1)
-    out.write(0); out.write(0)
-    out.write(0xff); out.write(0xdb) // DQT: table 0, all ones
-    be16w(67); out.write(0x00)
-    (0 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xc9) // SOF9: sequential, arithmetic coding
-    be16w(8 + 3 * nc); out.write(8); be16w(h); be16w(w); out.write(nc)
-    if (nc == 1) { out.write(1); out.write(0x11); out.write(0) }
-    else {
-      out.write(1); out.write(if (subsampled) 0x22 else 0x11); out.write(0)
-      out.write(2); out.write(0x11); out.write(0)
-      out.write(3); out.write(0x11); out.write(0)
-    }
+    mark(out, 0xd8) // SOI
+    app0Jfif(out)
+    dqt(out, 1) // all ones
+    // SOF9: sequential, arithmetic coding
+    frameHeader(out, 0xc9, 8, w, h, nc, if (subsampled) 0x22 else 0x11)
     val dcU = if (variant == 1) 2 else 1
     val acKx = if (variant == 1) 4 else 5
-    if (variant == 1) {
-      out.write(0xff); out.write(0xcc) // DAC: DC table 0 (U=2,L=0), AC Kx=4
-      be16w(2 + 4)
-      out.write(0x00); out.write(dcU << 4)
-      out.write(0x10); out.write(acKx)
-    }
-    out.write(0xff); out.write(0xda) // SOS
-    be16w(6 + 2 * nc); out.write(nc)
-    (1 to nc).foreach { c => out.write(c); out.write(0x00) }
-    out.write(0); out.write(63); out.write(0)
+    if (variant == 1) dac(out, dcU, acKx) // DC table 0 (U=2,L=0), AC Kx=4
+    scanHeader(out, 1 to nc, 0, 63, 0, 0)
 
     val enc = new QmCoder.Encoder
     val dcSt = Array.fill(nc)(new QmCoder.DcState(0, dcU))
@@ -967,7 +916,7 @@ object MediaSynth {
       mcu += 1
     }
     out.write(enc.finish())
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -986,36 +935,16 @@ object MediaSynth {
     val nc = if (variant == 0) 1 else 3
     val dri = 2
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xe0) // APP0 / JFIF
-    be16w(16); out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0); be16w(1); be16w(1)
-    out.write(0); out.write(0)
-    out.write(0xff); out.write(0xdb) // DQT: table 0, all ones
-    be16w(67); out.write(0x00)
-    (0 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xc9) // SOF9: sequential, arithmetic coding
-    be16w(8 + 3 * nc); out.write(8); be16w(h); be16w(w); out.write(nc)
-    if (nc == 1) { out.write(1); out.write(0x11); out.write(0) }
-    else {
-      out.write(1); out.write(if (subsampled) 0x22 else 0x11); out.write(0)
-      out.write(2); out.write(0x11); out.write(0)
-      out.write(3); out.write(0x11); out.write(0)
-    }
+    mark(out, 0xd8) // SOI
+    app0Jfif(out)
+    dqt(out, 1) // all ones
+    // SOF9: sequential, arithmetic coding
+    frameHeader(out, 0xc9, 8, w, h, nc, if (subsampled) 0x22 else 0x11)
     val dcU = if (variant == 1) 2 else 1
     val acKx = if (variant == 1) 4 else 5
-    if (variant == 1) {
-      out.write(0xff); out.write(0xcc) // DAC: DC table 0 (U=2,L=0), AC Kx=4
-      be16w(2 + 4)
-      out.write(0x00); out.write(dcU << 4)
-      out.write(0x10); out.write(acKx)
-    }
-    out.write(0xff); out.write(0xdd); be16w(4); be16w(dri) // DRI
-    out.write(0xff); out.write(0xda) // SOS
-    be16w(6 + 2 * nc); out.write(nc)
-    (1 to nc).foreach { c => out.write(c); out.write(0x00) }
-    out.write(0); out.write(63); out.write(0)
+    if (variant == 1) dac(out, dcU, acKx) // DC table 0 (U=2,L=0), AC Kx=4
+    restartInterval(out, dri)
+    scanHeader(out, 1 to nc, 0, 63, 0, 0)
 
     var enc = new QmCoder.Encoder
     var dcSt = Array.fill(nc)(new QmCoder.DcState(0, dcU))
@@ -1033,7 +962,7 @@ object MediaSynth {
       if (mcu > 0 && mcu % dri == 0) {
         // close the interval's segment, emit RSTn, restart everything
         out.write(enc.finish())
-        out.write(0xff); out.write(0xd0 + (rst % 8)); rst += 1
+        mark(out, 0xd0 + rst % 8); rst += 1
         enc = new QmCoder.Encoder
         dcSt = Array.fill(nc)(new QmCoder.DcState(0, dcU))
         acSt = Array.fill(nc)(new QmCoder.AcState(acKx))
@@ -1057,7 +986,7 @@ object MediaSynth {
       mcu += 1
     }
     out.write(enc.finish())
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -1081,30 +1010,19 @@ object MediaSynth {
     val q0 = if (variant == 0 || variant == 3) 1 else 8
     val dri = if (variant >= 2) 2 else 0
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xdb) // DQT: table 0 — q(0) per variant
-    be16w(67); out.write(0x00)
-    out.write(q0); (1 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xc2) // SOF2 progressive, 12-bit
-    be16w(8 + 3 * nc); out.write(12); be16w(h); be16w(w); out.write(nc)
-    (1 to nc).foreach { c => out.write(c); out.write(0x11); out.write(0) }
-    out.write(0xff); out.write(0xc4) // DHT: DC table 0 — SIXTEEN 4-bit codes
-    be16w(2 + 17 + 16); out.write(0x00)
-    Array(0, 0, 0, 16, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    (0 until 16).foreach(out.write)
-    out.write(0xff); out.write(0xc4) // DHT: AC table 0 — EOBn symbols
-    be16w(2 + 17 + 15); out.write(0x10)
-    Array(0, 0, 0, 15, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    (0 until 15).foreach(r => out.write(r << 4))
-    if (dri > 0) { out.write(0xff); out.write(0xdd); be16w(4); be16w(dri) }
+    mark(out, 0xd8) // SOI
+    dqt(out, q0) // q(0) per variant
+    frameHeader(out, 0xc2, 12, w, h, nc) // SOF2 progressive, 12-bit
+    dcTable(out, 16) // SIXTEEN categories
+    eobRunTable(out)
+    if (dri > 0) restartInterval(out, dri)
 
     val bw = w / 8; val bh = h / 8
     // quantized DC of block (bx, by): 8·(sample − 2048) / q(0)
     emitHuffProgScans(out, nc, bw, bh,
       (bx, by) => 8 * (jpeg12Block(id, bx, by) - 2048) / q0, dri)
 
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -1125,29 +1043,20 @@ object MediaSynth {
     * per scan per T.81 E.1.2; predictors and EOB-runs reset). */
   private def emitHuffProgScans(out: ByteArrayOutputStream, nc: Int,
       bw: Int, bh: Int, dcOf: (Int, Int) => Int, dri: Int): Unit = {
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
     var rst = 0
     def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): JpegBits = {
       rst = 0 // RSTn numbering restarts at RST0 in every scan (T.81 E.1.2)
-      out.write(0xff); out.write(0xda)
-      be16w(6 + 2 * comps.length); out.write(comps.length)
-      comps.foreach { c => out.write(c); out.write(0x00) }
-      out.write(ss); out.write(se); out.write((ah << 4) | al)
+      scanHeader(out, comps, ss, se, ah, al)
       new JpegBits(out)
     }
     def restartMark(bits: JpegBits): Unit = {
       bits.align()
-      out.write(0xff); out.write(0xd0 + (rst % 8)); rst += 1
+      mark(out, 0xd0 + rst % 8); rst += 1
     }
 
     // scan 1: DC first, Ah=0 Al=1, interleaved
     locally {
       val bits = sos(1 to nc, 0, 0, 0, 1)
-      def putDc(diff: Int): Unit = {
-        val s = if (diff == 0) 0 else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-        bits.put(s, 4)
-        if (s > 0) bits.put(if (diff > 0) diff else diff + (1 << s) - 1, s)
-      }
       val pred = Array.fill(nc)(0)
       var mcu = 0
       while (mcu < bw * bh) {
@@ -1156,9 +1065,9 @@ object MediaSynth {
         }
         val bx = mcu % bw; val by = mcu / bw
         val sv = dcOf(bx, by) >> 1 // point transform: arithmetic >> Al
-        putDc(sv - pred(0)); pred(0) = sv
+        bits.putDc(sv - pred(0)); pred(0) = sv
         var ci = 1
-        while (ci < nc) { putDc(0 - pred(ci)); pred(ci) = 0; ci += 1 }
+        while (ci < nc) { bits.putDc(0 - pred(ci)); pred(ci) = 0; ci += 1 }
         mcu += 1
       }
       bits.align()
@@ -1220,13 +1129,8 @@ object MediaSynth {
     * is its own segment). */
   private def emitArithProgScans(out: ByteArrayOutputStream, nc: Int,
       bw: Int, bh: Int, dcOf: (Int, Int) => Int, dcU: Int, acKx: Int): Unit = {
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      out.write(0xff); out.write(0xda)
-      be16w(6 + 2 * comps.length); out.write(comps.length)
-      comps.foreach { c => out.write(c); out.write(0x00) }
-      out.write(ss); out.write(se); out.write((ah << 4) | al)
-    }
+    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit =
+      scanHeader(out, comps, ss, se, ah, al)
 
     // scan 1: DC first, Ah=0 Al=1, interleaved
     locally {
@@ -1290,11 +1194,7 @@ object MediaSynth {
   private def emitArithSeqScan(out: ByteArrayOutputStream, nc: Int,
       bw: Int, bh: Int, dcOf: (Int, Int) => Int, dcU: Int, acKx: Int,
       dri: Int): Unit = {
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xda) // SOS
-    be16w(6 + 2 * nc); out.write(nc)
-    (1 to nc).foreach { c => out.write(c); out.write(0x00) }
-    out.write(0); out.write(63); out.write(0)
+    scanHeader(out, 1 to nc, 0, 63, 0, 0)
 
     var enc = new QmCoder.Encoder
     var dcSt = Array.fill(nc)(new QmCoder.DcState(0, dcU))
@@ -1309,7 +1209,7 @@ object MediaSynth {
     while (mcu < bw * bh) {
       if (dri > 0 && mcu > 0 && mcu % dri == 0) {
         out.write(enc.finish())
-        out.write(0xff); out.write(0xd0 + (rst % 8)); rst += 1
+        mark(out, 0xd0 + rst % 8); rst += 1
         enc = new QmCoder.Encoder
         dcSt = Array.fill(nc)(new QmCoder.DcState(0, dcU))
         acSt = Array.fill(nc)(new QmCoder.AcState(acKx))
@@ -1338,26 +1238,16 @@ object MediaSynth {
     val nc = if (variant % 2 == 0) 1 else 3
     val dri = if (variant >= 2) 2 else 0
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xdb) // DQT: table 0, all ones
-    be16w(67); out.write(0x00)
-    (0 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xc9) // SOF9: sequential arithmetic, 12-bit
-    be16w(8 + 3 * nc); out.write(12); be16w(h); be16w(w); out.write(nc)
-    (1 to nc).foreach { c => out.write(c); out.write(0x11); out.write(0) }
+    mark(out, 0xd8) // SOI
+    dqt(out, 1) // all ones
+    frameHeader(out, 0xc9, 12, w, h, nc) // SOF9: sequential arithmetic, 12-bit
     val dcU = if (nc == 3) 2 else 1
     val acKx = if (nc == 3) 4 else 5
-    if (nc == 3) {
-      out.write(0xff); out.write(0xcc) // DAC: DC table 0 (U=2,L=0), AC Kx=4
-      be16w(2 + 4)
-      out.write(0x00); out.write(dcU << 4)
-      out.write(0x10); out.write(acKx)
-    }
-    if (dri > 0) { out.write(0xff); out.write(0xdd); be16w(4); be16w(dri) }
+    if (nc == 3) dac(out, dcU, acKx) // DC table 0 (U=2,L=0), AC Kx=4
+    if (dri > 0) restartInterval(out, dri)
     emitArithSeqScan(out, nc, w / 8, h / 8,
       (bx, by) => 8 * (jpeg12Block(id, bx, by) - 2048), dcU, acKx, dri)
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -1382,31 +1272,14 @@ object MediaSynth {
     val subsampled = variant == 2
     val nc = if (variant == 0) 1 else 3
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xe0) // APP0 / JFIF
-    be16w(16); out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0); be16w(1); be16w(1)
-    out.write(0); out.write(0)
-    out.write(0xff); out.write(0xdb) // DQT: table 0 — q(0)=8, rest ones
-    be16w(67); out.write(0x00)
-    out.write(8); (1 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xca) // SOF10: progressive, arithmetic
-    be16w(8 + 3 * nc); out.write(8); be16w(h); be16w(w); out.write(nc)
-    if (nc == 1) { out.write(1); out.write(0x11); out.write(0) }
-    else {
-      out.write(1); out.write(if (subsampled) 0x22 else 0x11); out.write(0)
-      out.write(2); out.write(0x11); out.write(0)
-      out.write(3); out.write(0x11); out.write(0)
-    }
+    mark(out, 0xd8) // SOI
+    app0Jfif(out)
+    dqt(out, 8) // q(0)=8, rest ones
+    // SOF10: progressive, arithmetic
+    frameHeader(out, 0xca, 8, w, h, nc, if (subsampled) 0x22 else 0x11)
     val dcU = if (variant == 1) 2 else 1
     val acKx = if (variant == 1) 4 else 5
-    if (variant == 1) {
-      out.write(0xff); out.write(0xcc) // DAC: DC table 0 (U=2,L=0), AC Kx=4
-      be16w(2 + 4)
-      out.write(0x00); out.write(dcU << 4)
-      out.write(0x10); out.write(acKx)
-    }
+    if (variant == 1) dac(out, dcU, acKx) // DC table 0 (U=2,L=0), AC Kx=4
 
     val mcusX = w / (8 * (if (subsampled) 2 else 1))
     val mcusY = h / (8 * (if (subsampled) 2 else 1))
@@ -1419,12 +1292,8 @@ object MediaSynth {
       else for (my <- 0 until mcusY; mx <- 0 until mcusX;
                 by <- 0 until 2; bx <- 0 until 2) yield (mx * 2 + bx, my * 2 + by)
 
-    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      out.write(0xff); out.write(0xda)
-      be16w(6 + 2 * comps.length); out.write(comps.length)
-      comps.foreach { c => out.write(c); out.write(0x00) }
-      out.write(ss); out.write(se); out.write((ah << 4) | al)
-    }
+    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit =
+      scanHeader(out, comps, ss, se, ah, al)
 
     // ---- scan 1: DC first, Ah=0 Al=1, all components interleaved; the
     // coded diffs live in the point-transformed (>> Al) domain
@@ -1502,7 +1371,7 @@ object MediaSynth {
     acScan(1, yBlocks, 6, 63, 1, 0)
     if (nc == 3) { acScan(2, cBlocks, 1, 63, 1, 0); acScan(3, cBlocks, 1, 63, 1, 0) }
 
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -1523,26 +1392,16 @@ object MediaSynth {
     val w = jpegWidth(id); val h = jpegHeight(id)
     val nc = if (id % 2 == 0) 1 else 3
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xdb) // DQT: table 0 — q(0)=8, rest ones
-    be16w(67); out.write(0x00)
-    out.write(8); (1 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xca) // SOF10: progressive arithmetic, 12-bit
-    be16w(8 + 3 * nc); out.write(12); be16w(h); be16w(w); out.write(nc)
-    (1 to nc).foreach { c => out.write(c); out.write(0x11); out.write(0) }
+    mark(out, 0xd8) // SOI
+    dqt(out, 8) // q(0)=8, rest ones
+    frameHeader(out, 0xca, 12, w, h, nc) // SOF10: progressive arithmetic, 12-bit
     val dcU = if (nc == 3) 2 else 1
     val acKx = if (nc == 3) 4 else 5
-    if (nc == 3) {
-      out.write(0xff); out.write(0xcc) // DAC: DC table 0 (U=2,L=0), AC Kx=4
-      be16w(2 + 4)
-      out.write(0x00); out.write(dcU << 4)
-      out.write(0x10); out.write(acKx)
-    }
+    if (nc == 3) dac(out, dcU, acKx) // DC table 0 (U=2,L=0), AC Kx=4
     // quantized DC of a constant block: 8·(sample − 2048) DCT over q(0)=8
     emitArithProgScans(out, nc, w / 8, h / 8,
       (bx, by) => jpeg12Block(id, bx, by) - 2048, dcU, acKx)
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -1581,42 +1440,18 @@ object MediaSynth {
     val variant = (id % 3).toInt
     val nc = if (variant == 2) 3 else 1
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def frameHeader(marker: Int, fw: Int, fh: Int): Unit = {
-      out.write(0xff); out.write(marker)
-      be16w(8 + 3 * nc); out.write(8); be16w(fh); be16w(fw); out.write(nc)
-      (1 to nc).foreach { c => out.write(c); out.write(0x11); out.write(0) }
-    }
-    def sos(ss: Int, se: Int): Unit = {
-      out.write(0xff); out.write(0xda)
-      be16w(6 + 2 * nc); out.write(nc)
-      (1 to nc).foreach { c => out.write(c); out.write(0x00) }
-      out.write(ss); out.write(se); out.write(0)
-    }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xdb) // DQT: table 0, all ones
-    be16w(67); out.write(0x00)
-    (0 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xc4) // DHT: DC table 0 — BITS[4]=12, vals 0..11
-    be16w(2 + 17 + 12); out.write(0x00)
-    Array(0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    (0 until 12).foreach(out.write)
-    out.write(0xff); out.write(0xc4) // DHT: AC table 0 — one 2-bit EOB code
-    be16w(2 + 17 + 1); out.write(0x10)
-    Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    out.write(0x00)
-    frameHeader(0xde, w, h) // DHP: the hierarchy's full dimensions
+    def frame(marker: Int, fw: Int, fh: Int): Unit =
+      frameHeader(out, marker, 8, fw, fh, nc)
+    mark(out, 0xd8) // SOI
+    dqt(out, 1) // all ones
+    dcTable(out, 12)
+    eobTable(out)
+    frame(0xde, w, h) // DHP: the hierarchy's full dimensions
 
     def dctScan(fw: Int, fh: Int, blockVal: (Int, Int) => Int,
         levelShift: Int): Unit = {
-      sos(0, 63)
+      scanHeader(out, 1 to nc, 0, 63, 0, 0)
       val bits = new JpegBits(out)
-      def putDc(diff: Int): Unit = {
-        val s = if (diff == 0) 0
-          else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-        bits.put(s, 4)
-        if (s > 0) bits.put(if (diff > 0) diff else diff + (1 << s) - 1, s)
-      }
       val bw = (fw + 7) / 8; val bh = (fh + 7) / 8
       val pred = new Array[Int](nc)
       var mcu = 0
@@ -1627,7 +1462,7 @@ object MediaSynth {
           // Y carries the pattern; chroma (c>0) is constant 128 in the
           // base layer and zero in deltas — either way a zero DC coefficient
           val dc = if (c == 0) 8 * (blockVal(bx, by) - levelShift) else 0
-          putDc(dc - pred(c)); pred(c) = dc
+          bits.putDc(dc - pred(c)); pred(c) = dc
           bits.put(0, 2) // EOB
           c += 1
         }
@@ -1637,21 +1472,16 @@ object MediaSynth {
     }
 
     def losslessDiffScan(fw: Int, fh: Int): Unit = {
-      sos(0, 0) // differential frame: Ss = 0 (no prediction)
+      // differential frame: Ss = 0 (no prediction)
+      scanHeader(out, 1 to nc, 0, 0, 0, 0)
       val bits = new JpegBits(out)
-      def putDiff(diff: Int): Unit = {
-        val s = if (diff == 0) 0
-          else 32 - Integer.numberOfLeadingZeros(math.abs(diff))
-        bits.put(s, 4)
-        if (s > 0) bits.put(if (diff > 0) diff else diff + (1 << s) - 1, s)
-      }
       var y = 0
       while (y < fh) {
         var x = 0
         while (x < fw) {
           var c = 0
           while (c < nc) {
-            putDiff(if (c == 0) hierDetail(id, x, y) else 0)
+            bits.putDc(if (c == 0) hierDetail(id, x, y) else 0)
             c += 1
           }
           x += 1
@@ -1662,20 +1492,19 @@ object MediaSynth {
     }
 
     if (variant == 1) {
-      frameHeader(0xc0, w, h)
+      frame(0xc0, w, h)
       dctScan(w, h, (bx, by) => jpegBlockGray(id, bx, by), levelShift = 128)
-      frameHeader(0xc5, w, h)
+      frame(0xc5, w, h)
       dctScan(w, h, (bx, by) => hierDelta(id, bx, by), levelShift = 0)
     } else {
       val w2 = w / 2; val h2 = h / 2
-      frameHeader(0xc0, w2, h2)
+      frame(0xc0, w2, h2)
       dctScan(w2, h2, (bx, by) => hierBase(id, bx, by), levelShift = 128)
-      out.write(0xff); out.write(0xdf) // EXP: double both dimensions
-      be16w(3); out.write(0x11)
-      frameHeader(0xc7, w, h)
+      expandBoth(out)
+      frame(0xc7, w, h)
       losslessDiffScan(w, h)
     }
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -1700,37 +1529,30 @@ object MediaSynth {
     val variant = (id % 3).toInt
     val nc = if (variant == 1) 3 else 1
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def frameHeader(marker: Int, fw: Int, fh: Int): Unit = {
-      out.write(0xff); out.write(marker)
-      be16w(8 + 3 * nc); out.write(8); be16w(fh); be16w(fw); out.write(nc)
-      (1 to nc).foreach { c => out.write(c); out.write(0x11); out.write(0) }
-    }
+    def frame(marker: Int, fw: Int, fh: Int): Unit =
+      frameHeader(out, marker, 8, fw, fh, nc)
     def arithScan(fw: Int, fh: Int, blockVal: (Int, Int) => Int,
         levelShift: Int): Unit =
       emitArithSeqScan(out, nc, (fw + 7) / 8, (fh + 7) / 8,
         (bx, by) => 8 * (blockVal(bx, by) - levelShift),
         dcU = 1, acKx = 5, dri = 0)
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xdb) // DQT: table 0, all ones
-    be16w(67); out.write(0x00)
-    (0 until 64).foreach(_ => out.write(1))
-    frameHeader(0xde, w, h) // DHP: the hierarchy's full dimensions
+    mark(out, 0xd8) // SOI
+    dqt(out, 1) // all ones
+    frame(0xde, w, h) // DHP: the hierarchy's full dimensions
     if (variant == 2) {
       val w2 = w / 2; val h2 = h / 2
-      frameHeader(0xc9, w2, h2)
+      frame(0xc9, w2, h2)
       arithScan(w2, h2, (bx, by) => hierBase(id, bx, by), levelShift = 128)
-      out.write(0xff); out.write(0xdf) // EXP: double both dimensions
-      be16w(3); out.write(0x11)
-      frameHeader(0xcd, w, h)
+      expandBoth(out)
+      frame(0xcd, w, h)
       arithScan(w, h, (bx, by) => hierDelta(id, bx, by), levelShift = 0)
     } else {
-      frameHeader(0xc9, w, h)
+      frame(0xc9, w, h)
       arithScan(w, h, (bx, by) => jpegBlockGray(id, bx, by), levelShift = 128)
-      frameHeader(0xcd, w, h)
+      frame(0xcd, w, h)
       arithScan(w, h, (bx, by) => hierDelta(id, bx, by), levelShift = 0)
     }
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -1750,34 +1572,26 @@ object MediaSynth {
     val variant = (id % 3).toInt
     val nc = if (variant == 1) 3 else 1
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def frameHeader(marker: Int, fw: Int, fh: Int): Unit = {
-      out.write(0xff); out.write(marker)
-      be16w(8 + 3 * nc); out.write(8); be16w(fh); be16w(fw); out.write(nc)
-      (1 to nc).foreach { c => out.write(c); out.write(0x11); out.write(0) }
-    }
     // one full progressive frame: q(0)=8 quant so the quantized DC of a
     // constant block is blockVal − levelShift
     def progFrame(marker: Int, fw: Int, fh: Int, blockVal: (Int, Int) => Int,
         levelShift: Int): Unit = {
-      frameHeader(marker, fw, fh)
+      frameHeader(out, marker, 8, fw, fh, nc)
       emitArithProgScans(out, nc, (fw + 7) / 8, (fh + 7) / 8,
         (bx, by) => blockVal(bx, by) - levelShift, dcU = 1, acKx = 5)
     }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xdb) // DQT: table 0 — q(0)=8, rest ones
-    be16w(67); out.write(0x00)
-    out.write(8); (1 until 64).foreach(_ => out.write(1))
-    frameHeader(0xde, w, h) // DHP
+    mark(out, 0xd8) // SOI
+    dqt(out, 8) // q(0)=8, rest ones
+    frameHeader(out, 0xde, 8, w, h, nc) // DHP
     if (variant == 2) {
       progFrame(0xca, w / 2, h / 2, (bx, by) => hierBase(id, bx, by), 128)
-      out.write(0xff); out.write(0xdf); be16w(3); out.write(0x11) // EXP
+      expandBoth(out)
       progFrame(0xce, w, h, (bx, by) => hierDelta(id, bx, by), 0)
     } else {
       progFrame(0xca, w, h, (bx, by) => jpegBlockGray(id, bx, by), 128)
       progFrame(0xce, w, h, (bx, by) => hierDelta(id, bx, by), 0)
     }
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -1792,40 +1606,26 @@ object MediaSynth {
     val variant = (id % 3).toInt
     val nc = if (variant == 1) 3 else 1
     val out = new ByteArrayOutputStream()
-    def be16w(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def frameHeader(marker: Int, fw: Int, fh: Int): Unit = {
-      out.write(0xff); out.write(marker)
-      be16w(8 + 3 * nc); out.write(8); be16w(fh); be16w(fw); out.write(nc)
-      (1 to nc).foreach { c => out.write(c); out.write(0x11); out.write(0) }
-    }
     def progFrame(marker: Int, fw: Int, fh: Int, blockVal: (Int, Int) => Int,
         levelShift: Int): Unit = {
-      frameHeader(marker, fw, fh)
+      frameHeader(out, marker, 8, fw, fh, nc)
       emitHuffProgScans(out, nc, (fw + 7) / 8, (fh + 7) / 8,
         (bx, by) => blockVal(bx, by) - levelShift, dri = 0)
     }
-    out.write(0xff); out.write(0xd8) // SOI
-    out.write(0xff); out.write(0xdb) // DQT: table 0 — q(0)=8, rest ones
-    be16w(67); out.write(0x00)
-    out.write(8); (1 until 64).foreach(_ => out.write(1))
-    out.write(0xff); out.write(0xc4) // DHT: DC table 0 — twelve 4-bit codes
-    be16w(2 + 17 + 12); out.write(0x00)
-    Array(0, 0, 0, 12, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    (0 until 12).foreach(out.write)
-    out.write(0xff); out.write(0xc4) // DHT: AC table 0 — EOBn symbols
-    be16w(2 + 17 + 15); out.write(0x10)
-    Array(0, 0, 0, 15, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0).foreach(out.write)
-    (0 until 15).foreach(r => out.write(r << 4))
-    frameHeader(0xde, w, h) // DHP
+    mark(out, 0xd8) // SOI
+    dqt(out, 8) // q(0)=8, rest ones
+    dcTable(out, 12)
+    eobRunTable(out)
+    frameHeader(out, 0xde, 8, w, h, nc) // DHP
     if (variant == 2) {
       progFrame(0xc2, w / 2, h / 2, (bx, by) => hierBase(id, bx, by), 128)
-      out.write(0xff); out.write(0xdf); be16w(3); out.write(0x11) // EXP
+      expandBoth(out)
       progFrame(0xc6, w, h, (bx, by) => hierDelta(id, bx, by), 0)
     } else {
       progFrame(0xc2, w, h, (bx, by) => jpegBlockGray(id, bx, by), 128)
       progFrame(0xc6, w, h, (bx, by) => hierDelta(id, bx, by), 0)
     }
-    out.write(0xff); out.write(0xd9) // EOI
+    mark(out, 0xd9) // EOI
     out.toByteArray
   }
 

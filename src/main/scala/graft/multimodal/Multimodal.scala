@@ -20,6 +20,13 @@ import org.apache.spark.sql.functions._
   * handling, partition-batched processing shape, metadata structs —
   * always has a defined output.
   *
+  * JPEG layers have one owner each: [[JpegCodec]] parses the tables,
+  * builds the entropy decoders (Huffman, and QM through [[QmCoder]]),
+  * walks every scan kind and owns the IDCT and the colour transform;
+  * [[HierJpeg]] owns only what is hierarchical (DHP/EXP and the
+  * J.1.1.2 expansion, frame bookkeeping, the reference merge, EOI
+  * assembly) and decodes each frame through JpegCodec's layers.
+  *
   * Scale notes: payloads stay columnar (parquet binary) end-to-end; the
   * extraction stage is map-only over partitions (no shuffle, no driver
   * materialization); `spark.sql.files.maxPartitionBytes` governs batch

@@ -716,7 +716,10 @@ object Similarity {
     * AnalysisException when it resolves inside the metadata-only gap
     * (or its side-table read races the drop), or a
     * FileNotFoundException-caused job failure when its frozen file
-    * listing points at the pre-swap directory the swap moved/dropped.
+    * listing points at the pre-swap directory the swap moved/dropped
+    * (java.nio.file.NoSuchFileException when what loses the race is
+    * the local filesystem's vectored read reopening a listed file's
+    * checksum through NIO).
     * Readers should retry on those two classes — a plain retry
     * succeeds once the swap completes (same answer, by the first
     * property); the retry ships as [[serveWithRetry]] and the
@@ -784,13 +787,15 @@ object Similarity {
     * classifier, shipped as API so a serving fleet and the spec share
     * ONE definition of "retry this": true iff the error (or anything
     * in its cause chain) is the resolution-inside-the-gap
-    * AnalysisException or the frozen-listing FileNotFoundException —
-    * the two classes a plain retry resolves once the swap completes.
-    * Anything else is a real error the caller must surface. */
+    * AnalysisException or the frozen-listing FileNotFoundException
+    * (or its NIO form, NoSuchFileException) — the two classes a plain
+    * retry resolves once the swap completes. Anything else is a real
+    * error the caller must surface. */
   def isMaintenanceRetryable(e: Throwable): Boolean =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(10).exists {
       case _: org.apache.spark.sql.AnalysisException => true
       case _: java.io.FileNotFoundException          => true
+      case _: java.nio.file.NoSuchFileException      => true
       case _                                         => false
     }
 

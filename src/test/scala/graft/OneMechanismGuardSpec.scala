@@ -8,10 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-scan guard that each driver-side chore keeps ONE mechanism:
   * sessions are built only by [[LocalSession]] (and `Main.run`, whose
   * `--master` is a deployment setting), an Observation's future is
-  * awaited only by [[graft.operators.Barrier.observed]], and main source
+  * awaited only by [[graft.operators.Barrier.observed]], main source
   * cuts lineage only through [[graft.operators.Barrier.cut]] (so the
-  * durable-barrier conf reaches every cut). Comments and string
-  * literals are not code, so a scaladoc usage example does not count. */
+  * durable-barrier conf reaches every cut), and JPEG entropy decoders are
+  * built only by [[graft.multimodal.JpegCodec]]'s scan layer, which the
+  * hierarchical decoder calls. Comments and string literals are not
+  * code, so a scaladoc usage example does not count. */
 class OneMechanismGuardSpec extends AnyFunSuite {
 
   private val sources: Seq[(String, String)] =
@@ -70,6 +72,15 @@ class OneMechanismGuardSpec extends AnyFunSuite {
     }
     assert(sites == Seq("src/main/scala/graft/operators/Barrier.scala"),
       s"lineage cuts outside Barrier (use Barrier.cut): $sites")
+  }
+
+  test("JPEG entropy decoders are built only in JpegCodec") {
+    val decoderNew = """new\s+(Huff|BitReader|QmCoder\s*\.\s*Decoder)\s*\(""".r
+    val sites = sources.collect {
+      case (f, c) if f.startsWith("src/main/") && decoderNew.findFirstIn(c).nonEmpty => f
+    }
+    assert(sites == Seq("src/main/scala/graft/multimodal/JpegCodec.scala"),
+      s"entropy decoders built outside JpegCodec (call its scan layer): $sites")
   }
 
   test("the scan sees code, not comments or strings") {

@@ -118,6 +118,13 @@ class NearestCentroidSpec extends SparkSpec {
     assert(run(Seq(Seq(9.0, 9.0, 1.0, 0.0, 0.0)), cents, 2) == Seq(0))
   }
 
+  test("an empty codebook is a named error, not an opaque empty.max") {
+    val ex = intercept[IllegalArgumentException] {
+      NearestCentroidIndexExpr(expression(col("e")), Seq.empty, 0)
+    }
+    assert(ex.getMessage.contains("nearest_centroid: no centroids"))
+  }
+
   test("interpreted eval agrees with codegen") {
     val cents = (0 until 16).map(i => Seq(i * 0.1, 1.0 - i * 0.05, 0.3, -0.2))
     val rows = (0 until 97).map(i =>

@@ -364,6 +364,17 @@ class ConcurrentServeSpec extends SparkSpec {
       }, attempts = 3, backoffMs = 1)
     }
     assert((exhausted eq gapError) && calls == 3)
+    // a listed file the swap dropped, surfaced as NIO's
+    // NoSuchFileException (the local filesystem's vectored read reopens
+    // the file's checksum through NIO), is the same frozen-listing
+    // case: retried
+    calls = 0
+    assert(Similarity.serveWithRetry({ () =>
+      calls += 1
+      if (calls < 2) throw new org.apache.spark.SparkException("read failed",
+        new java.nio.file.NoSuchFileException("part-00000.snappy.parquet"))
+      else 7
+    }, backoffMs = 1) == 7 && calls == 2)
     // a non-retryable error propagates on the FIRST try
     calls = 0
     intercept[IllegalStateException] {
