@@ -1,5 +1,7 @@
 package graft.io
 
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -7,6 +9,54 @@ import graft.model.Triple
 
 /** Sinks for the OMIM artifact family (SURVEY.md §2.1 S9/S10). */
 object Sinks {
+
+  /** The name of every [[writeAll]] worker thread. */
+  val WriterThreadName = "release-writer"
+
+  /** Write a release's artifacts concurrently: each `(name, write)` runs
+    * `write(s"$dir/$name")` on its own thread, so one artifact's driver
+    * planning and codegen overlap another's Spark jobs (run one after
+    * another, the writes leave most cores idle between small AQE jobs).
+    *
+    * The pool is created per call and its threads are created by the
+    * calling thread, so every worker inherits the caller's Spark local
+    * properties (job description, job group, tags) and active session as
+    * they stand at the call; a long-lived shared pool would hand later
+    * calls stale ones. Each worker labels its jobs with the call site
+    * `release:<name>` (AQE stage jobs inherit it), so a stage names the
+    * artifact it wrote; the job description stays the caller's.
+    *
+    * Every write runs to its end. Then the first failure, in `writes`
+    * order, is rethrown as thrown by its write (not wrapped in an
+    * ExecutionException), with the other failures attached as
+    * suppressed; no pool thread outlives the call.
+    *
+    * No knob: the thread count is the number of writes — a release has
+    * eight, and Spark's scheduler shares the cores between their jobs. */
+  def writeAll(spark: SparkSession, dir: String, writes: Seq[(String, String => Unit)]): Unit = {
+    val sc = spark.sparkContext
+    val pool = Executors.newFixedThreadPool(writes.size,
+      (r: Runnable) => new Thread(r, WriterThreadName))
+    try {
+      val pending = writes.map { case (name, write) =>
+        val task: Runnable = () => {
+          sc.setCallSite(s"release:$name")
+          try write(s"$dir/$name") finally sc.clearCallSite()
+        }
+        pool.submit(task)
+      }
+      val failures = pending.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
+  }
 
   /** Distinct CURIE prefixes appearing in the triple set: subject,
     * predicate, and non-literal object terms that are neither

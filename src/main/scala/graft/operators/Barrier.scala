@@ -7,10 +7,12 @@ import scala.util.Try
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 
 /** The ONE materialization barrier every lineage cut in main source
-  * routes through (the release's graph cuts in BuildGraph, q57's
-  * shared roots, CorpusOps q86's scrub output, TextAnalytics' tf and
-  * BM25 stats frames, DedupQueries' leaked-id audit, the banded-guard
-  * aggregates and iterative loops in [[Dedup]] and [[GraphAlgos]]) —
+  * routes through (the release's three graph cuts in BuildGraph: the
+  * base triples, the flipped-mapping graph and the finished graph the
+  * artifact writes read; q57's shared roots, CorpusOps q86's scrub
+  * output, TextAnalytics' tf and BM25 stats frames, DedupQueries'
+  * leaked-id audit, the banded-guard aggregates and iterative loops in
+  * [[Dedup]] and [[GraphAlgos]]) —
   * so the local-vs-durable choice is a DEPLOYMENT setting, not an edit
   * to query code. (GraphAlgos keeps its explicit previous-block
   * unpersist pairing — block management a generic helper must not

@@ -160,7 +160,11 @@ object BuildGraph {
     // (DeduplicateRelations + per-rule tree walks) goes combinatorial —
     // measured 40 s of driver CPU per action at sf0.1. The cut replaces
     // the plan with a LogicalRDD leaf, and `graft.barrier.checkpointDir`
-    // makes both cuts durable.
+    // makes all three cuts durable. The third cut is the finished graph:
+    // it is materialized once, here, and the four artifact writes that
+    // read it (turtle, QC, genes, SSSOM) — which writeArtifacts runs
+    // concurrently — start from that leaf instead of racing to build a
+    // shared cache.
     val baseTriples = header
       .union(entity).union(cascade).union(cyto).union(m2g)
       .union(hgnc).union(ps).union(links)
@@ -168,7 +172,7 @@ object BuildGraph {
     val flipped = Barrier.cut(SparqlQueries.addFlippedMondoMappings(base))
 
     // Makefile SPARQL UPDATE stage (G17): flipped MONDO mappings + HGNC links
-    val withUpdates = SparqlQueries.hgncLinks(flipped).as[Triple].cache()
+    val withUpdates = Barrier.cut(SparqlQueries.hgncLinks(flipped)).as[Triple]
 
     // Reports (G16/G18)
     val types = titles.select(col("mim"), col("omim_type"))
@@ -182,35 +186,37 @@ object BuildGraph {
       mim2geneAugmented = mim2gene)
   }
 
-  /** Write the release artifacts (stage 3.1-7 sinks + makefile targets). */
-  def writeArtifacts(spark: SparkSession, out: Outputs, dir: String): Unit = {
-    Sinks.writeTurtle(spark, out.triples, s"$dir/omim.ttl")
-    Sinks.writeOrderedTsv(out.reviewCases, s"$dir/review.tsv",
-      Seq("classCode", "value"))
-    Sinks.writeOrderedTsv(out.susceptibilityRows,
-      s"$dir/mondo-omim-susceptibility-subset.robot.tsv",
-      Seq("mondo_id", "omim_id"),
-      extraHeaderRows = Seq(Seq("ID", "AI oboInOwl:inSubset", ">A oboInOwl:source")))
-    Sinks.writeOrderedTsv(out.mondoOmimGenes, s"$dir/mondo-omim-genes.robot.tsv",
-      Seq("mondo_id", "hgnc_id", "omim_gene", "omim_disease_xref"),
-      extraHeaderRows = Seq(SparqlQueries.robotSubheader))
-    Sinks.writeOrderedTsv(out.diseaseGeneQc, s"$dir/disease-gene-relationships-qc.tsv",
-      Seq("PredDirection", "SubBiolink", "Pred", "SubId", "ObjBiolink", "ObjId"))
-    Sinks.writeOrderedTsv(
-      graft.io.SssomExport.fromTriples(out.triples.toDF()), s"$dir/omim.sssom.tsv",
-      Seq("subject_id", "object_id"),
-      preHeaderLines = graft.io.SssomExport.frontMatter)
-    // The reference's '-protected-added' table artifacts
-    // (omim_txt_parser.py:138,196-197), in the parsed relational shape —
-    // this engine's canonical morbidmap form (parse once, reuse).
-    Sinks.writeOrderedTsv(
-      out.morbidmapAugmented.select(
-        col("p_label"), col("p_mim"), col("map_key"),
-        concat_ws(", ", col("gene_symbols")).as("gene_symbols"),
-        col("gene_mim"), col("cyto_location"), col("is_added_protection")),
-      s"$dir/morbidmap-protected-added.tsv",
-      Seq("p_mim", "gene_mim", "map_key", "p_label"))
-    Sinks.writeOrderedTsv(out.mim2geneAugmented,
-      s"$dir/mim2gene-protected-added.tsv", Seq("mim", "hgnc_symbol"))
-  }
+  /** Write the eight release artifacts (stage 3.1-7 sinks + makefile
+    * targets) under `dir`, concurrently through [[Sinks.writeAll]]: each
+    * write runs on its own thread, with its jobs labelled
+    * `release:<artifact>`. Every write runs to its end; a failure (e.g.
+    * the turtle sink's unbound-prefix check) is then rethrown as its
+    * write threw it. Each artifact's bytes do not depend on the
+    * interleaving: its row order is its sink's sort columns. */
+  def writeArtifacts(spark: SparkSession, out: Outputs, dir: String): Unit =
+    Sinks.writeAll(spark, dir, Seq(
+      "omim.ttl" -> (Sinks.writeTurtle(spark, out.triples, _)),
+      "review.tsv" -> (Sinks.writeOrderedTsv(out.reviewCases, _, Seq("classCode", "value"))),
+      "mondo-omim-susceptibility-subset.robot.tsv" -> (Sinks.writeOrderedTsv(
+        out.susceptibilityRows, _, Seq("mondo_id", "omim_id"),
+        extraHeaderRows = Seq(Seq("ID", "AI oboInOwl:inSubset", ">A oboInOwl:source")))),
+      "mondo-omim-genes.robot.tsv" -> (Sinks.writeOrderedTsv(out.mondoOmimGenes, _,
+        Seq("mondo_id", "hgnc_id", "omim_gene", "omim_disease_xref"),
+        extraHeaderRows = Seq(SparqlQueries.robotSubheader))),
+      "disease-gene-relationships-qc.tsv" -> (Sinks.writeOrderedTsv(out.diseaseGeneQc, _,
+        Seq("PredDirection", "SubBiolink", "Pred", "SubId", "ObjBiolink", "ObjId"))),
+      "omim.sssom.tsv" -> (Sinks.writeOrderedTsv(
+        graft.io.SssomExport.fromTriples(out.triples.toDF()), _,
+        Seq("subject_id", "object_id"), preHeaderLines = graft.io.SssomExport.frontMatter)),
+      // The reference's '-protected-added' table artifacts
+      // (omim_txt_parser.py:138,196-197), in the parsed relational shape —
+      // this engine's canonical morbidmap form (parse once, reuse).
+      "morbidmap-protected-added.tsv" -> (Sinks.writeOrderedTsv(
+        out.morbidmapAugmented.select(
+          col("p_label"), col("p_mim"), col("map_key"),
+          concat_ws(", ", col("gene_symbols")).as("gene_symbols"),
+          col("gene_mim"), col("cyto_location"), col("is_added_protection")),
+        _, Seq("p_mim", "gene_mim", "map_key", "p_label"))),
+      "mim2gene-protected-added.tsv" -> (Sinks.writeOrderedTsv(out.mim2geneAugmented, _,
+        Seq("mim", "hgnc_symbol")))))
 }

@@ -10,10 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `--master` is a deployment setting), an Observation's future is
   * awaited only by [[graft.operators.Barrier.observed]], main source
   * cuts lineage only through [[graft.operators.Barrier.cut]] (so the
-  * durable-barrier conf reaches every cut), and JPEG entropy decoders are
+  * durable-barrier conf reaches every cut), JPEG entropy decoders are
   * built only by [[graft.multimodal.JpegCodec]]'s scan layer, which the
-  * hierarchical decoder calls. Comments and string literals are not
-  * code, so a scaladoc usage example does not count. */
+  * hierarchical decoder calls, and threads and pools are made only by
+  * [[graft.io.Sinks.writeAll]], the release's one fan-out. Comments and
+  * string literals are not code, so a scaladoc usage example does not
+  * count. */
 class OneMechanismGuardSpec extends AnyFunSuite {
 
   private val sources: Seq[(String, String)] =
@@ -81,6 +83,24 @@ class OneMechanismGuardSpec extends AnyFunSuite {
     }
     assert(sites == Seq("src/main/scala/graft/multimodal/JpegCodec.scala"),
       s"entropy decoders built outside JpegCodec (call its scan layer): $sites")
+  }
+
+  test("threads and pools are made in src/main only by the release fan-out, Sinks.writeAll") {
+    val poolCall = """\bExecutors\s*\.|\bnew\s+Thread\s*\(|\bExecutionContext\s*\.\s*from|\bForkJoinPool\b""".r
+    val helper = "src/main/scala/graft/io/Sinks.scala"
+    val sites = sources.flatMap {
+      case (f, c) if f.startsWith("src/main/") =>
+        // the helper's body: from its `def` to the next one
+        val body = if (f != helper) None else {
+          val start = c.indexOf("def writeAll")
+          Some((start, c.indexOf("def ", start + 1)))
+        }
+        poolCall.findAllMatchIn(c).map(_.start).collect {
+          case at if !body.exists { case (a, b) => a >= 0 && at > a && at < b } => f
+        }
+      case _ => Nil
+    }
+    assert(sites.isEmpty, s"threads or pools outside Sinks.writeAll (fan out through it): $sites")
   }
 
   test("the scan sees code, not comments or strings") {

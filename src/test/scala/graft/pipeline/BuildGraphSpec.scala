@@ -5,12 +5,14 @@ import java.security.MessageDigest
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
+import graft.io.Sinks
 import graft.model.Triple
 import graft.operators.Barrier
 
@@ -170,5 +172,74 @@ class BuildGraphSpec extends SparkSpec {
       while (sorts.size < golden.size && System.nanoTime() < deadline) Thread.sleep(50)
     } finally spark.listenerManager.unregister(listener)
     assert(sorts.asScala.toMap == golden.keys.map(_ -> 1).toMap)
+  }
+
+  test("writeArtifacts fans out: caller's properties and a release:<artifact> label on every job") {
+    val dir = Files.createTempDirectory("fanout").toString
+    val sc = spark.sparkContext
+    val key = "graft.spec.caller"
+    out // built before the listener, so only the writes' jobs are seen
+    // job id -> (caller property, call site); job id -> (start ms, end ms)
+    val props = new ConcurrentHashMap[Int, (String, String)]()
+    val times = new ConcurrentHashMap[Int, (Long, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).map(_.getProperty(k)).orNull
+        props.put(e.jobId, (prop(key), prop("callSite.short")))
+        times.put(e.jobId, (e.time, e.time))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        times.computeIfPresent(e.jobId, (_, t) => (t._1, e.time))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "release")
+      try BuildGraph.writeArtifacts(spark, out, dir) finally sc.setLocalProperty(key, null)
+      // listener events arrive in order: once a later job's start is seen,
+      // every job the release started has been seen too
+      sc.setLocalProperty(key, "sentinel")
+      try spark.range(1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!props.values.asScala.exists(_._1 == "sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    assert(digests(dir) == golden)
+    val jobs = props.asScala.toMap.filter(_._2._1 != "sentinel")
+    assert(jobs.nonEmpty)
+    assert(jobs.values.forall(_._1 == "release"),
+      s"jobs without the caller's local property: ${jobs.filter(_._2._1 != "release")}")
+    val labels = golden.keys.map(n => s"release:$n").toSet
+    assert(jobs.values.map(_._2).toSet == labels)
+    // each artifact's job window [first start, last end]
+    val windows = jobs.groupBy(_._2._2).map { case (label, js) =>
+      val ts = js.keys.map(times.get)
+      label -> (ts.map(_._1).min, ts.map(_._2).max)
+    }
+    val overlapping = for {
+      (a, (a0, a1)) <- windows; (b, (b0, b1)) <- windows
+      if a < b && a0 <= b1 && b0 <= a1
+    } yield (a, b)
+    assert(overlapping.nonEmpty, s"the artifact writes ran one after another: $windows")
+  }
+
+  test("an unbound CURIE prefix fails the release with the turtle sink's own error, after the other writes") {
+    import spark.implicits._
+    val nope = Seq(Triple.uri("NOPE:1", "rdf:type", "owl:Class")).toDS()
+    val direct = intercept[IllegalArgumentException](
+      Sinks.writeTurtle(spark, nope, Files.createTempDirectory("nope").resolve("omim.ttl").toString))
+    assert(direct.getMessage.contains("NOPE"))
+
+    val dir = Files.createTempDirectory("failed-release")
+    val broken = out.copy(triples = out.triples.union(nope))
+    val thrown = intercept[Throwable](BuildGraph.writeArtifacts(spark, broken, dir.toString))
+    assert(thrown.getClass == classOf[IllegalArgumentException], thrown)
+    assert(thrown.getMessage == direct.getMessage)
+    // the other seven writes ran to their end before the failure surfaced
+    golden.keys.filter(_ != "omim.ttl").foreach { n =>
+      assert(Files.exists(dir.resolve(n).resolve("_SUCCESS")), s"$n unfinished")
+    }
+    assert(!Files.exists(dir.resolve("omim.ttl").resolve("_SUCCESS")))
+    val writers = Thread.getAllStackTraces.keySet.asScala.filter(_.getName == Sinks.WriterThreadName)
+    assert(writers.isEmpty, s"writer threads outlived the release: $writers")
   }
 }
