@@ -5,19 +5,32 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 
-/** Approximate-nearest-neighbor search over embedding columns.
+/** Approximate-nearest-neighbor search over embedding columns, the whole
+  * scale ladder:
+  *  - [[bruteForceTopK]]: the exact baseline and the oracle every rung's
+  *    recall is measured against ([[recallAtK]]);
+  *  - [[lshTopK]]: hyperplane LSH, no training;
+  *  - [[ivfTopK]] / [[ivfRangeSearch]]: inverted file — a probe scans only
+  *    its `nprobe` nearest cells ([[kmeansTrain]] trains the cells);
+  *  - [[pqTopK]] and [[ivfPqTopK]]: product-quantized codes scored by
+  *    asymmetric distance (ADC) — m code bytes per vector, not d doubles;
+  *  - each IVF rung persisted as a bucketed index ([[writeIvfIndex]],
+  *    [[writeIvfPqIndex]]) and probed pruned ([[ivfTopKIndexed]],
+  *    [[ivfRangeSearchIndexed]], [[ivfPqTopKIndexed]]), in bulk
+  *    ([[ivfTopKBulk]], [[ivfPqTopKBulk]]) or with an exact re-rank
+  *    ([[ivfPqTopKRerankIndexed]]); appends, deletes and compaction keep
+  *    the index live;
+  *  - shortlist re-rankers over any rung: [[postFilterTopK]],
+  *    [[excludePairsTopK]] and reciprocal-rank fusion ([[rrfFuseByProbe]]).
   *
-  * Two strategies, per the standard scale ladder:
-  *  - [[bruteForceTopK]]: exact baseline. Probe set is broadcast; the corpus
-  *    streams through one map stage computing similarities, then a per-probe
-  *    window picks top-k. Linear in |corpus|×|probes| — right answer when
-  *    the probe set is small, and the correctness oracle for ANN variants.
-  *  - [[ivfTopK]]: inverted-file search. Corpus vectors are assigned to
-  *    their nearest centroid once (map-only vs broadcast centroids); a probe
-  *    only scans the `nprobe` clusters nearest to it, cutting scanned
-  *    volume to ~nprobe/|centroids| of the corpus. The candidate join
-  *    shuffles on the cluster id — at 100 TB the corpus would be written
-  *    bucketed by cluster so the probe join is shuffle-free.
+  * Every top-k operator is three parts. A candidate source yields
+  * (probe, candidate) pairs: the corpus itself, the in-memory IVF join
+  * ([[ivfCandidates]]), a persisted index pruned to the probes' cells
+  * ([[prunedIndex]]), or a bulk index join ([[bulkCandidates]]). A scorer
+  * adds one column: exact cosine ([[cosine]]) or ADC ([[adcResidScore]]
+  * over [[adcTables]]). One tail ranks: [[rankTopK]] over the single
+  * per-key window [[topPerKey]], which also picks each vector's nearest
+  * cells.
   *
   * Every input side is unit-normalized ONCE map-side (O(rows·d)), so each
   * pair comparison is a single codegen'd dot product
@@ -30,18 +43,31 @@ object Similarity {
   private def unitized(df: DataFrame, vec: String, out: String): DataFrame =
     df.withColumn(out, unit(col(vec))).drop(vec)
 
+  /** The one per-key top-n window: rows numbered within each `key` by
+    * (`score` desc, `tie` asc) into `rankCol`, those numbered ≤ `n`
+    * kept. Result tails and nearest-cell picks all rank here. */
+  private def topPerKey(df: DataFrame, key: String, score: String,
+                        tie: String, n: Int, rankCol: String): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+        Window.partitionBy(key).orderBy(col(score).desc, col(tie))))
+      .filter(col(rankCol) <= n)
+
+  /** The tail of every top-k operator: the `k` best rows per probe by
+    * (`score` desc, id), as (probe_id, rank, id, score). */
+  private def rankTopK(df: DataFrame, score: String, k: Int): DataFrame =
+    topPerKey(df, "probe_id", score, "id", k, "rank")
+      .select(col("probe_id"), col("rank"), col("id"), col(score))
+
+  /** Exact-cosine scorer: unit probe `up` · unit candidate `ue`. */
+  private def cosine: Column = dot(col("up"), col("ue"))
+
   /** Exact top-k by cosine. `corpus`: (id, e); `probes`: (probe_id, p).
     * Deterministic tie-break on ascending corpus id. */
-  def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("id"))
-    unitized(corpus, "e", "ue")
+  def bruteForceTopK(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    rankTopK(unitized(corpus, "e", "ue")
       .join(broadcast(unitized(probes, "p", "up")))
       .filter(col("id") =!= col("probe_id"))
-      .withColumn("cos", dot(col("up"), col("ue")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("cos"))
-  }
+      .withColumn("cos", cosine), "cos", k)
 
   /** Recall@k of an approximate kNN result against the exact baseline —
     * the EVALUATE leg of the index lifecycle (the number every ANN
@@ -143,14 +169,9 @@ object Similarity {
     * must be id-unique (it is a set; a duplicated id would fan out
     * shortlist rows and corrupt ranks). */
   def postFilterTopK(shortlist: DataFrame, allowed: DataFrame,
-                     k: Int): DataFrame = {
-    val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("id"))
-    allowed.select(col("id"))
-      .join(broadcast(shortlist.select("probe_id", "id", "cos")), "id")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("cos"))
-  }
+                     k: Int): DataFrame =
+    rankTopK(allowed.select(col("id"))
+      .join(broadcast(shortlist.select("probe_id", "id", "cos")), "id"), "cos", k)
 
   /** PER-PROBE EXCLUSION over an over-fetched shortlist — the external
     * twin of [[ivfTopKIndexed]]'s `pairFilter` for sets the index does
@@ -179,7 +200,7 @@ object Similarity {
     * the two consumers — referenced lazily, a full IVF window+join
     * ranking would run twice per serve call. It is |probes|·R rows,
     * broadcast-sized by contract, so it collects to a local frame (the
-    * materializeProbeSide convention) — which makes this operator
+    * [[prunedIndex]] convention) — which makes this operator
     * EAGER: the shortlist lineage runs at call time, like every
     * indexed probe path. The contract is GUARDED: the collect is
     * bounded by `graft.ann.maxShortlistRows` (default 2M — ~hundreds
@@ -188,7 +209,6 @@ object Similarity {
     * a silent driver OOM (FilteredAnnSpec pins the raise). */
   def excludePairsTopK(shortlist: DataFrame, exclude: DataFrame,
                        k: Int): DataFrame = {
-    val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("id"))
     val sl0 = shortlist.select("probe_id", "id", "cos")
     // limit(bound + 1) rides the single execution: under the bound it
     // returns every row; at bound + 1 the extra row is proof enough to
@@ -219,10 +239,7 @@ object Similarity {
       .join(broadcast(sl.select("probe_id", "id")),
         Seq("probe_id", "id"), "left_semi")
       .distinct()
-    sl.join(broadcast(hits), Seq("probe_id", "id"), "left_anti")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("cos"))
+    rankTopK(sl.join(broadcast(hits), Seq("probe_id", "id"), "left_anti"), "cos", k)
   }
 
   /** RECIPROCAL-RANK FUSION (Cormack/Clarke/Buettcher '09) — the
@@ -343,8 +360,7 @@ object Similarity {
         .as("__dup"))
       .select(col("__dup.__n").as("__max_n"), col("__dup.__leg").as("__max_leg"),
         col("__dup.probe_id").as("__max_probe"), col("__dup.id").as("__max_id"))
-    val w = Window.partitionBy("probe_id").orderBy(col("rrf").desc, col("id"))
-    tagged
+    rankTopK(tagged
       .groupBy("probe_id", "id")
       .agg(sum((col("__w") / (lit(c) + col("rank"))).cast("decimal(28,12)"))
         .cast("double").as("__rrf0"))
@@ -356,10 +372,7 @@ object Similarity {
           col("__max_leg").cast("string"), col("__max_id").cast("string"),
           col("__max_n").cast("string"), col("__max_probe").cast("string")))
           .cast("double"))
-        .otherwise(col("__rrf0")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("rrf"))
+        .otherwise(col("__rrf0"))), "rrf", k)
   }
 
   /** Assign each unit corpus vector to its nearest centroid (cosine; ties
@@ -367,13 +380,26 @@ object Similarity {
     * `extra`: passthrough columns appended after c_id (payload carry). */
   private def assignUnit(ucorpus: DataFrame, ucent: DataFrame,
                          idCol: String, vecCol: String, keep: Int,
-                         extra: Seq[String] = Nil): DataFrame = {
-    val w = Window.partitionBy(idCol).orderBy(col("cos_c").desc, col("c_id"))
-    ucorpus.join(broadcast(ucent))
-      .withColumn("cos_c", dot(col(vecCol), col("uc")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= keep)
+                         extra: Seq[String] = Nil): DataFrame =
+    topPerKey(ucorpus.join(broadcast(ucent))
+        .withColumn("cos_c", dot(col(vecCol), col("uc"))),
+        idCol, "cos_c", "c_id", keep, "rn")
       .select((Seq(idCol, vecCol, "c_id") ++ extra).map(col): _*)
+
+  /** IVF probe side: each unit probe `up` with its `nprobe` nearest unit
+    * centroids `ucent` — (probe_id, up, c_id, extra…). */
+  private def ivfProbeSide(probes: DataFrame, ucent: DataFrame, nprobe: Int,
+                           extra: Seq[String] = Nil): DataFrame =
+    assignUnit(unitized(probes, "p", "up"), ucent, "probe_id", "up", nprobe, extra)
+
+  /** In-memory IVF candidate source: the corpus assigned to its nearest
+    * cell, joined on the cell to each probe's `nprobe` nearest — (c_id,
+    * probe_id, up, id, ue). */
+  private def ivfCandidates(corpus: DataFrame, centroids: DataFrame,
+                            probes: DataFrame, nprobe: Int): DataFrame = {
+    val ucent = unitized(centroids, "c", "uc")
+    val assigned = assignUnit(unitized(corpus, "e", "ue"), ucent, "id", "ue", 1)
+    ivfProbeSide(probes, ucent, nprobe).join(assigned, "c_id")
   }
 
   /** Assign each corpus vector to its nearest centroid. `corpus`: (id, e,
@@ -403,17 +429,20 @@ object Similarity {
   def writeIvfIndex(corpus: DataFrame, centroids: DataFrame,
                     table: String, numBuckets: Int,
                     payload: Seq[String] = Nil): Unit = {
-    dropTableAndDir(corpus.sparkSession, table)
-    // a REBUILD starts a fresh index: stale tombstones from the previous
-    // incarnation must not suppress rows the new corpus legitimately
-    // holds, and an interrupted compaction's staging/backup tables must
-    // not linger as orphans under the new incarnation's side names
-    dropTableAndDir(corpus.sparkSession, tombstoneTable(table))
-    dropTableAndDir(corpus.sparkSession, s"${table}__compact")
-    dropTableAndDir(corpus.sparkSession, s"${table}__old")
+    resetIndex(corpus.sparkSession, table)
     Bucketing.writeBucketed(ivfAssign(corpus, centroids, payload), table,
       "c_id", numBuckets, sort = false)
   }
+
+  /** Start a REBUILD from nothing: drop the index table and the side
+    * tables of its previous incarnation. Stale tombstones must not
+    * suppress rows the new corpus legitimately holds, and an interrupted
+    * compaction's staging/backup tables must not linger as orphans under
+    * the new incarnation's side names. */
+  private def resetIndex(spark: org.apache.spark.sql.SparkSession,
+                         table: String): Unit =
+    Seq(table, tombstoneTable(table), s"${table}__compact", s"${table}__old")
+      .foreach(dropTableAndDir(spark, _))
 
   /** DROP TABLE plus clearing the warehouse location: a previous JVM's
     * orphaned directory survives the (fresh, in-memory) catalog and
@@ -910,78 +939,72 @@ object Similarity {
                      indexFilter: Column = lit(true),
                      probePayload: Seq[String] = Nil,
                      pairFilter: Column = lit(true)): DataFrame = {
-    val spark = probes.sparkSession
-    // a payload name colliding with the index's stored columns would
-    // surface as a deep ambiguous-reference AnalysisException from
-    // inside the join — fail loudly at the API boundary instead, naming
-    // the fix (alias the probe column, the q137 plabel convention).
-    // Guarded on nonEmpty so the default path touches nothing eagerly
-    // (the probe-side guards keep their contract ordering: empty
-    // centroids fail on THEIR require, not on a table lookup)
-    if (probePayload.nonEmpty) {
-      // stored columns AND the names this operator generates or uses
-      // internally: a payload named "cos"/"rank" would be silently
-      // OVERWRITTEN by the scoring withColumns (pairFilter would then
-      // filter the computed value, wrong rows with no error), and the
-      // assignment's internals would mis-bind — same loud reject
-      val reserved = spark.table(table).columns.toSet ++
-        Set("cos", "rank", "up", "cos_c", "rn")
-      val clash = probePayload.filter(reserved)
-      require(clash.isEmpty,
-        s"ivfTopKIndexed: probePayload ${clash.mkString("(", ", ", ")")} " +
-          s"collides with `$table`'s stored columns or this operator's " +
-          "generated columns (cos, rank, up) — alias the probe-side " +
-          "column (e.g. label AS plabel) so pairFilter can reference both " +
-          "sides unambiguously")
-    }
-    val ucent = unitized(centroids, "c", "uc")
-    // ONE execution of the probe-assignment subplan: the collected rows
-    // feed both the bucket-pruning IN-literal and (as a local frame) the
-    // scoring join — probeClusters referenced lazily twice would run its
-    // window+assignment job twice (broadcast-sized by convention)
-    val (probeClusters, clusterIds) = materializeProbeSide(
-      assignUnit(unitized(probes, "p", "up"), ucent, "probe_id", "up", nprobe,
-        extra = probePayload))
-    guardEmptyAssignment(clusterIds, centroids, "ivfTopKIndexed")
-    val index = liveIndexRows(spark, table)
-      .filter(col("c_id").isin(clusterIds: _*))
-      .filter(indexFilter)
-    val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("id"))
-    broadcast(probeClusters).join(index, "c_id")
+    requireNoPayloadClash("ivfTopKIndexed", probePayload,
+      Seq(probes.sparkSession.table(table), unitized(centroids, "c", "uc")),
+      Seq("up", "cos_c", "rn", "cos", "rank"))
+    rankTopK(indexedIvfCandidates(table, centroids, probes, nprobe,
+        "ivfTopKIndexed", probePayload, indexFilter)
       .filter(col("id") =!= col("probe_id"))
       .filter(pairFilter)
-      .withColumn("cos", dot(col("up"), col("ue")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("cos"))
+      .withColumn("cos", cosine), "cos", k)
   }
 
-  /** Disambiguate an empty probe assignment, riding the collect the
-    * indexed paths already pay: empty CENTROIDS are an input error
-    * (every probe of this index would silently return nothing — fail
-    * loudly, the ivfTopKBulk convention); an empty PROBE batch is a
-    * valid no-op ("today's new queries: zero rows") and flows through —
-    * the empty IN-list prunes everything and the result is empty with
-    * the correct schema. The centroid emptiness check only runs on the
-    * already-degenerate path, so the happy path stays lazy. */
-  private def guardEmptyAssignment(clusterIds: Array[Any],
-                                   centroids: DataFrame, op: String): Unit =
-    if (clusterIds.isEmpty) {
-      require(!centroids.isEmpty, s"$op: empty centroid set")
+  /** The one probe-payload guard of the per-probe-filter operators: a
+    * payload name equal to a column of a frame the probes are joined
+    * with (`joined`) surfaces as a deep ambiguous-reference
+    * AnalysisException from inside the join, and one equal to a column
+    * the operator writes itself (`generated`) is silently overwritten —
+    * fail loudly at the API boundary instead, naming the fix (alias the
+    * probe column, the q137 plabel convention). Guarded on nonEmpty so
+    * the default path resolves nothing (the probe-side guards keep their
+    * contract ordering: empty centroids fail on THEIR require). */
+  private def requireNoPayloadClash(op: String, probePayload: Seq[String],
+                                    joined: => Seq[DataFrame],
+                                    generated: Seq[String]): Unit =
+    if (probePayload.nonEmpty) {
+      val reserved = (joined.flatMap(_.columns) ++ generated).distinct
+      val clash = probePayload.filter(reserved.contains)
+      require(clash.isEmpty,
+        s"$op: probePayload ${clash.mkString("(", ", ", ")")} collides " +
+          s"with a column of the frames it is joined with or one this " +
+          s"operator generates ${reserved.mkString("(", ", ", ")")} — alias " +
+          "the probe-side column (e.g. label AS plabel) so pairFilter can " +
+          "reference both sides unambiguously")
     }
 
-  /** Execute a (broadcast-sized by convention) probe-side frame ONCE:
-    * returns it re-wrapped as a local DataFrame plus its distinct
-    * c_id values for bucket pruning. Shared by every indexed probe
-    * path, where the frame is otherwise consumed twice (the pruning
-    * collect and the scoring join). */
-  private def materializeProbeSide(pb: DataFrame): (DataFrame, Array[Any]) = {
+  /** Indexed candidate source: executes the (broadcast-sized by
+    * convention) probe side `pb` ONCE — its rows feed both the
+    * bucket-pruning IN-literal and, re-wrapped as a local frame, the
+    * scoring join, where a lazy frame would run its assignment job twice
+    * — and returns that local frame with the live index rows pruned to
+    * its cells. An empty assignment is disambiguated on the collect
+    * already paid: empty CENTROIDS are an input error (every probe of
+    * this index would silently return nothing — fail loudly, the
+    * ivfTopKBulk convention); an empty PROBE batch is a valid no-op and
+    * flows through — the empty IN-list prunes everything and the result
+    * is empty with the correct schema. */
+  private def prunedIndex(table: String, pb: DataFrame, centroids: DataFrame,
+                          op: String): (DataFrame, DataFrame) = {
+    val spark = pb.sparkSession
     val rows = pb.collect()
     val cIdAt = pb.schema.fieldIndex("c_id")
     val clusterIds = rows.map(_.get(cIdAt)).distinct
-    val local = pb.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), pb.schema)
-    (local, clusterIds)
+    if (clusterIds.isEmpty) require(!centroids.isEmpty, s"$op: empty centroid set")
+    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), pb.schema),
+      liveIndexRows(spark, table).filter(col("c_id").isin(clusterIds: _*)))
+  }
+
+  /** [[prunedIndex]] over an IVF vector index: the probes' `nprobe` cells,
+    * the index rows in them passing `indexFilter`, joined on the cell
+    * with the probe side broadcast — (c_id, probe_id, up, payload…, id,
+    * ue, stored…). */
+  private def indexedIvfCandidates(table: String, centroids: DataFrame,
+                                   probes: DataFrame, nprobe: Int, op: String,
+                                   probePayload: Seq[String] = Nil,
+                                   indexFilter: Column = lit(true)): DataFrame = {
+    val (pb, index) = prunedIndex(table, ivfProbeSide(probes,
+      unitized(centroids, "c", "uc"), nprobe, probePayload), centroids, op)
+    broadcast(pb).join(index.filter(indexFilter), "c_id")
   }
 
   /** IVF ANN: scan only the `nprobe` clusters nearest each probe. Returned
@@ -998,18 +1021,10 @@ object Similarity {
     // requires seeds; seed CTEs are per-label firsts). The paths that
     // already pay a driver-side materialization guard for free:
     // [[ivfTopKIndexed]]/[[ivfRangeSearchIndexed]] via
-    // materializeProbeSide, [[ivfTopKBulk]] via its sizing counts.
-    val ucent = unitized(centroids, "c", "uc")
-    val assigned = assignUnit(unitized(corpus, "e", "ue"), ucent, "id", "ue", 1)
-    val probeClusters =
-      assignUnit(unitized(probes, "p", "up"), ucent, "probe_id", "up", nprobe)
-    val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("id"))
-    probeClusters.join(assigned, "c_id")
+    // [[prunedIndex]], [[ivfTopKBulk]] via its sizing counts.
+    rankTopK(ivfCandidates(corpus, centroids, probes, nprobe)
       .filter(col("id") =!= col("probe_id"))
-      .withColumn("cos", dot(col("up"), col("ue")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("cos"))
+      .withColumn("cos", cosine), "cos", k)
   }
 
   /** BULK probe of a materialized IVF index — the kNN-JOIN shape, where
@@ -1062,39 +1077,44 @@ object Similarity {
     * desired top-1, pass false. */
   def ivfTopKBulk(table: String, centroids: DataFrame, probes: DataFrame,
                   k: Int, nprobe: Int, excludeSelf: Boolean = true,
-                  maxShareFactor: Double = 8.0): DataFrame = {
+                  maxShareFactor: Double = 8.0): DataFrame =
+    rankTopK(bulkCandidates("ivfTopKBulk", table, centroids, probes,
+        excludeSelf, maxShareFactor)(
+        cent => ivfProbeSide(probes, unitized(cent, "c", "uc"), nprobe))
+      .withColumn("cos", cosine), "cos", k)
+
+  /** Bulk candidate source of [[ivfTopKBulk]] and [[ivfPqTopKBulk]]: the
+    * √n sizing guard, then the live index read in place and shuffle-hash
+    * joined on c_id onto `probeSide` (the probe side built over the
+    * centroids), minus self-pairs when `excludeSelf`.
+    *
+    * ONE execution of the centroid lineage: the sizing guard needs the
+    * count and the probe-side broadcast needs the rows — centroids are
+    * broadcast-sized by the very rule the guard enforces, so they are
+    * collected once and handed to `probeSide` as a local frame. A
+    * separate count() would execute a possibly non-trivial lineage (a
+    * training run, a window over the corpus) once for the guard and
+    * AGAIN inside the broadcast build. */
+  private def bulkCandidates(op: String, table: String, centroids: DataFrame,
+                             probes: DataFrame, excludeSelf: Boolean,
+                             maxShareFactor: Double)(
+                             probeSide: DataFrame => DataFrame): DataFrame = {
     val spark = probes.sparkSession
     val (nIndex, _) = indexRowCount(spark, table)
-    // ONE execution of the centroid lineage: the sizing guard needs the
-    // count and the assignment broadcast needs the rows — centroids are
-    // broadcast-sized by the very rule the guard enforces, so collect
-    // once and reuse. A separate count() would execute a possibly
-    // non-trivial lineage (a training run, a window over the corpus)
-    // once for the guard and AGAIN inside the broadcast build.
     val centRows = centroids.collect()
     val nCells = centRows.length.toLong
-    require(nCells > 0, "ivfTopKBulk: empty centroid set")
+    require(nCells > 0, s"$op: empty centroid set")
     require(nCells >= math.sqrt(nIndex.toDouble) / maxShareFactor,
-      s"ivfTopKBulk: $nCells centroids over a $nIndex-row index — average " +
+      s"$op: $nCells centroids over a $nIndex-row index — average " +
         f"per-bucket candidate share ${nIndex.toDouble / nCells}%.0f exceeds " +
         f"$maxShareFactor× the sqrt(n) sizing rule (${math.sqrt(nIndex.toDouble)}%.0f). " +
         "Candidate volume grows as n·nprobe·(n/|centroids|): retrain with " +
         "more cells (|centroids| ∝ sqrt(n)) or pass a larger maxShareFactor " +
         "to knowingly probe the mis-sized regime")
-    val ucent = unitized(spark.createDataFrame(
-      java.util.Arrays.asList(centRows: _*), centroids.schema), "c", "uc")
-    val pAssigned =
-      assignUnit(unitized(probes, "p", "up"), ucent, "probe_id", "up", nprobe)
-    val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("id"))
-    val cand0 = liveIndexRows(spark, table).hint("shuffle_hash")
-      .join(pAssigned, "c_id")
-    val cand = if (excludeSelf) cand0.filter(col("id") =!= col("probe_id"))
-               else cand0
-    cand
-      .withColumn("cos", dot(col("up"), col("ue")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("cos"))
+    val pb = probeSide(spark.createDataFrame(
+      java.util.Arrays.asList(centRows: _*), centroids.schema))
+    val cand = liveIndexRows(spark, table).hint("shuffle_hash").join(pb, "c_id")
+    if (excludeSelf) cand.filter(col("id") =!= col("probe_id")) else cand
   }
 
   /** Index row count for [[ivfTopKBulk]]'s sizing guard: catalog/plan
@@ -1305,16 +1325,13 @@ object Similarity {
     val c = banded(cu, "id", "ue")
     val p = banded(pu, "probe_id", "up")
       .withColumnRenamed("__band", "__band_p").withColumnRenamed("__chunk", "__chunk_p")
-    val wnd = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("id"))
-    p.join(c, col("__band_p") === col("__band") && col("__chunk_p") === col("__chunk"))
+    rankTopK(p
+      .join(c, col("__band_p") === col("__band") && col("__chunk_p") === col("__chunk"))
       .filter(col("id") =!= col("probe_id"))
       .select("probe_id", "id").distinct() // a pair may share several bands
       .join(cu.select(col("id"), col("ue")), "id")
       .join(pu.select(col("probe_id"), col("up")), "probe_id")
-      .withColumn("cos", dot(col("up"), col("ue")))
-      .withColumn("rank", row_number().over(wnd))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("cos"))
+      .withColumn("cos", cosine), "cos", k)
   }
 
   /** IVF range search — the bucketed form of all-pairs near-dup: emit
@@ -1332,16 +1349,11 @@ object Similarity {
     * corpus side should be the bucketed index ([[writeIvfIndex]]). */
   def ivfRangeSearch(corpus: DataFrame, centroids: DataFrame,
                      probes: DataFrame, minCos: Double,
-                     nprobe: Int): DataFrame = {
-    val ucent = unitized(centroids, "c", "uc")
-    val assigned = assignUnit(unitized(corpus, "e", "ue"), ucent, "id", "ue", 1)
-    val probeClusters =
-      assignUnit(unitized(probes, "p", "up"), ucent, "probe_id", "up", nprobe)
-    probeClusters.join(assigned, "c_id")
-      .withColumn("cos", dot(col("up"), col("ue")))
+                     nprobe: Int): DataFrame =
+    ivfCandidates(corpus, centroids, probes, nprobe)
+      .withColumn("cos", cosine)
       .filter(col("cos") >= minCos)
       .select(col("probe_id"), col("id"), col("cos"))
-  }
 
   /** [[ivfRangeSearch]] against a MATERIALIZED [[writeIvfIndex]] table —
     * the at-rest form the range-search scaladoc names: probes assign to
@@ -1362,20 +1374,12 @@ object Similarity {
     * which is noise next to scanning (B−nprobe)/B more buckets. */
   def ivfRangeSearchIndexed(table: String, centroids: DataFrame,
                             probes: DataFrame, minCos: Double,
-                            nprobe: Int): DataFrame = {
-    val spark = probes.sparkSession
-    val ucent = unitized(centroids, "c", "uc")
-    val (probeClusters, clusterIds) = materializeProbeSide(
-      assignUnit(unitized(probes, "p", "up"), ucent, "probe_id", "up", nprobe))
-    guardEmptyAssignment(clusterIds, centroids, "ivfRangeSearchIndexed")
-    val index = liveIndexRows(spark, table)
-      .filter(col("c_id").isin(clusterIds: _*))
-    broadcast(probeClusters).join(index, "c_id")
-      .withColumn("cos", dot(col("up"), col("ue")))
+                            nprobe: Int): DataFrame =
+    indexedIvfCandidates(table, centroids, probes, nprobe, "ivfRangeSearchIndexed")
+      .withColumn("cos", cosine)
       .filter(col("cos") >= minCos)
       .groupBy("probe_id", "id")
       .agg(first(col("cos")).as("cos"))
-  }
 
   /** Deterministic ±1 sign row `k` of the Johnson–Lindenstrauss
     * projection matrix: sign(i) = +1 iff the first md5 byte of
@@ -1415,6 +1419,19 @@ object Similarity {
   private def l2Score(x: Column, c: Column): Column =
     dot(x, c) - lit(0.5) * dot(c, c)
 
+  /** Sort key of a driver-held centroid's integral c_id: centroids
+    * literalized in ascending c_id order make the
+    * [[graft.expressions.NearestCentroidIndexExpr]] kernel's ties to the
+    * smaller INDEX the join form's ties to the smaller c_id. `op` names
+    * the caller when the c_id is not integral. */
+  private def cidKey(v: Any, op: String): Long = v match {
+    case i: Int => i.toLong
+    case l: Long => l
+    case s: Short => s.toLong
+    case b: Byte => b.toLong
+    case other => sys.error(s"$op needs an integral c_id, got $other")
+  }
+
   /** Lloyd k-means under squared-Euclidean assignment on RAW vectors —
     * the PQ subquantizer training rule — with [[kmeansTrain]]'s
     * determinism conventions: ties to the smaller c_id, per-dimension
@@ -1440,14 +1457,6 @@ object Similarity {
     // ties to the smaller c_id; the means are the same decimal(28,12)
     // sums over the same addend multisets, divided by the same counts.
     val cidField = seeds.schema("c_id")
-    def ordKey(v: Any): Long = v match {
-      case i: Int => i.toLong
-      case l: Long => l
-      case s: Short => s.toLong
-      case b: Byte => b.toLong
-      case other => sys.error(
-        s"kmeansTrainL2 needs an integral c_id, got $other")
-    }
     var cent: Seq[(Any, Seq[Double])] =
       seeds.select(col("c_id"), col("c")).collect()
         .map(r => (r.get(0), r.getSeq[Double](1).toSeq)).toSeq
@@ -1462,7 +1471,7 @@ object Similarity {
     for (_ <- 1 to iters if cent.nonEmpty) {
       // ascending-c_id order makes the kernel's ties-to-smaller-INDEX
       // exactly the join form's ties-to-smaller-c_id
-      val ordered = cent.sortBy(p => ordKey(p._1)).toIndexedSeq
+      val ordered = cent.sortBy(p => cidKey(p._1, "kmeansTrainL2")).toIndexedSeq
       import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
       val idx = column(graft.expressions.NearestCentroidIndexExpr(
         expression(col("e")), ordered.map(_._2), 0))
@@ -1612,6 +1621,14 @@ object Similarity {
     * forcing the scan stage out of whole-stage fusion — both gone. */
   def pqEncode(corpus: DataFrame, bk: PqBooks): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    // empty books are pqTrainSeeded's documented degeneration, not a
+    // kernel error: name the subspace and the cause at the operator
+    val emptySub = bk.books.indexWhere(_.isEmpty)
+    require(emptySub < 0,
+      s"pqEncode: subspace $emptySub of ${bk.m} has an empty codebook — none " +
+        "of the PQ seed ids is in the corpus (or the corpus has no non-null " +
+        "vector), so training had no centroid to start from; pass seed ids " +
+        "that are corpus ids")
     val codeCols = (0 until bk.m).map { s =>
       // the kernel's ties-to-smaller-index IS the old struct form's
       // ties-to-smaller-code (codes are book positions); one tight
@@ -1638,15 +1655,7 @@ object Similarity {
     * rank, id, adc). */
   def pqTopK(encoded: DataFrame, probes: DataFrame, bk: PqBooks,
              k: Int): DataFrame = {
-    val tblCols = (0 until bk.m).map { s =>
-      val qs = slice(col("p"), s * bk.w + 1, bk.w)
-      array(bk.books(s).map(c => dot(qs, typedLit(c))): _*).as(s"__t$s")
-    }
-    val pr = probes.select(col("probe_id") +: col("p") +: tblCols: _*)
-    val score = (0 until bk.m)
-      .map(s => element_at(col(s"__t$s"), element_at(col("codes"), s + 1) + 1))
-      .reduce(_ + _)
-    val w = Window.partitionBy("probe_id").orderBy(col("adc").desc, col("id"))
+    val pr = probes.select(col("probe_id") +: col("p") +: adcTables(bk): _*)
     // Cut the skinny (id, codes) frame before the probe join: the
     // broadcast nested-loop join's whole-stage codegen defers stream-side
     // projection variables into the per-build-row loop, so a lazily-
@@ -1658,12 +1667,9 @@ object Similarity {
     // [[ivfPqTopKBulk]]) read codes as table data, so only this in-plan
     // demo/eval path needs the barrier.
     val enc = Barrier.cut(encoded.select(col("id"), col("codes")))
-    enc.join(broadcast(pr))
+    rankTopK(enc.join(broadcast(pr))
       .filter(col("id") =!= col("probe_id"))
-      .withColumn("adc", score)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("adc"))
+      .withColumn("adc", adcResidScore(bk)), "adc", k)
   }
 
   /** IVF-PQ — the composed index every billion-vector system ships
@@ -1756,16 +1762,9 @@ object Similarity {
     // same argmax tie/NaN semantics (ascending-c_id order ≡ ties to
     // smaller c_id), same per-element subtraction values.
     import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-    def ordKey(v: Any): Long = v match {
-      case i: Int => i.toLong
-      case l: Long => l
-      case s: Short => s.toLong
-      case b: Byte => b.toLong
-      case other => sys.error(s"coarseResiduals needs an integral c_id, got $other")
-    }
     val rows = coarse.select(col("c_id"), col("c")).collect()
       .map(r => (r.get(0), r.getSeq[Double](1).toSeq))
-      .sortBy(p => ordKey(p._1)).toIndexedSeq
+      .sortBy(p => cidKey(p._1, "coarseResiduals")).toIndexedSeq
     require(rows.nonEmpty, "coarseResiduals needs at least one coarse centroid")
     val idx = column(graft.expressions.NearestCentroidIndexExpr(
       expression(col("e")), rows.map(_._2), 0))
@@ -1773,7 +1772,7 @@ object Similarity {
       case _: Int => typedLit(rows.map(_._1.asInstanceOf[Int]))
       case _: Long => typedLit(rows.map(_._1.asInstanceOf[Long]))
       case _: Short => typedLit(rows.map(_._1.asInstanceOf[Short]))
-      case _ => typedLit(rows.map(p => ordKey(p._1)))
+      case _ => typedLit(rows.map(p => cidKey(p._1, "coarseResiduals")))
     }
     val centsLit = typedLit(rows.map(_._2))
     corpus
@@ -1789,24 +1788,24 @@ object Similarity {
     * lookup tables — all probe-side column algebra over broadcast
     * centroids and literal codebooks. */
   private def pqProbeSide(probes: DataFrame, coarse: DataFrame,
-                          bk: PqBooks, nprobe: Int): DataFrame = {
-    val wProbe = Window.partitionBy("probe_id").orderBy(col("__sc").desc, col("c_id"))
-    val tblCols = (0 until bk.m).map { s =>
-      val qs = slice(col("p"), s * bk.w + 1, bk.w)
-      array(bk.books(s).map(c => dot(qs, typedLit(c))): _*).as(s"__t$s")
-    }
-    probes.join(broadcast(coarse))
-      .withColumn("__sc", l2Score(col("p"), col("c")))
-      .withColumn("__rn", row_number().over(wProbe))
-      .filter(col("__rn") <= nprobe)
+                          bk: PqBooks, nprobe: Int): DataFrame =
+    topPerKey(probes.join(broadcast(coarse))
+        .withColumn("__sc", l2Score(col("p"), col("c"))),
+        "probe_id", "__sc", "c_id", nprobe, "__rn")
       .withColumn("pc", dot(col("p"), col("c")))
-      .select(Seq(col("probe_id"), col("c_id"), col("pc"), col("p")) ++ tblCols: _*)
+      .select(Seq(col("probe_id"), col("c_id"), col("pc"), col("p")) ++ adcTables(bk): _*)
+
+  /** A probe's m ADC lookup tables `__t0…`: the dot of its subvector
+    * with every centroid of that subspace's book (m·kSub doubles,
+    * probe-side column algebra over the literal codebooks). */
+  private def adcTables(bk: PqBooks): Seq[Column] = (0 until bk.m).map { s =>
+    val qs = slice(col("p"), s * bk.w + 1, bk.w)
+    array(bk.books(s).map(c => dot(qs, typedLit(c))): _*).as(s"__t$s")
   }
 
-  /** The left-associated ADC residual sum `t0 + … + t_{m-1}` — one
+  /** The ADC scorer: the left-associated sum `t0 + … + t_{m-1}` — one
     * lookup per subspace into the probe-side tables, the
-    * oracle-replayable float order shared by the broadcast and bulk
-    * ranking paths. */
+    * oracle-replayable float order shared by every PQ ranking path. */
   private def adcResidScore(bk: PqBooks): Column = (0 until bk.m)
     .map(s => element_at(col(s"__t$s"), element_at(col("codes"), s + 1) + 1))
     .reduce(_ + _)
@@ -1816,15 +1815,10 @@ object Similarity {
     * shuffles on nothing: the probe side broadcasts, candidates
     * stream. */
   private def adcRank(enc: DataFrame, pb: DataFrame, bk: PqBooks,
-                      k: Int): DataFrame = {
-    val wRank = Window.partitionBy("probe_id").orderBy(col("adc").desc, col("id"))
-    enc.join(broadcast(pb), "c_id")
+                      k: Int): DataFrame =
+    rankTopK(enc.join(broadcast(pb), "c_id")
       .filter(col("id") =!= col("probe_id"))
-      .withColumn("adc", col("pc") + adcResidScore(bk))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("adc"))
-  }
+      .withColumn("adc", col("pc") + adcResidScore(bk)), "adc", k)
 
   /** BULK probe of a materialized IVF-PQ index — [[ivfTopKBulk]]'s
     * kNN-JOIN shape on the QUANTIZED ladder: the probe side is a whole
@@ -1851,35 +1845,11 @@ object Similarity {
   def ivfPqTopKBulk(table: String, coarse: DataFrame, probes: DataFrame,
                     bk: PqBooks, k: Int, nprobe: Int,
                     excludeSelf: Boolean = true,
-                    maxShareFactor: Double = 8.0): DataFrame = {
-    val spark = probes.sparkSession
-    val (nIndex, _) = indexRowCount(spark, table)
-    // one execution of the coarse lineage: sizing guard + broadcast side
-    // (the ivfTopKBulk convention)
-    val coarseRows = coarse.collect()
-    val nCells = coarseRows.length.toLong
-    require(nCells > 0, "ivfPqTopKBulk: empty centroid set")
-    require(nCells >= math.sqrt(nIndex.toDouble) / maxShareFactor,
-      s"ivfPqTopKBulk: $nCells coarse cells over a $nIndex-row index — " +
-        f"average per-bucket candidate share ${nIndex.toDouble / nCells}%.0f " +
-        f"exceeds $maxShareFactor× the sqrt(n) sizing rule " +
-        f"(${math.sqrt(nIndex.toDouble)}%.0f); retrain with more cells " +
-        "(|coarse| ∝ sqrt(n)) or pass a larger maxShareFactor to " +
-        "knowingly probe the mis-sized regime")
-    val coarseLocal = spark.createDataFrame(
-      java.util.Arrays.asList(coarseRows: _*), coarse.schema)
-    val pb = pqProbeSide(probes, coarseLocal, bk, nprobe)
-    val wRank = Window.partitionBy("probe_id").orderBy(col("adc").desc, col("id"))
-    val cand0 = liveIndexRows(spark, table).hint("shuffle_hash")
-      .join(pb, "c_id")
-    val cand = if (excludeSelf) cand0.filter(col("id") =!= col("probe_id"))
-               else cand0
-    cand
-      .withColumn("adc", col("pc") + adcResidScore(bk))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("adc"))
-  }
+                    maxShareFactor: Double = 8.0): DataFrame =
+    rankTopK(bulkCandidates("ivfPqTopKBulk", table, coarse, probes,
+        excludeSelf, maxShareFactor)(
+        cent => pqProbeSide(probes, cent, bk, nprobe))
+      .withColumn("adc", col("pc") + adcResidScore(bk)), "adc", k)
 
   /** Build the PRODUCTION IVF-PQ index — the recurring-query shape at
     * 100 TB: coarse-assign the corpus, train residual product codes,
@@ -1901,14 +1871,8 @@ object Similarity {
     val enc = pqEncode(resid, bk)
       .select(col("id"), col("codes"))
       .join(assigned.select(col("id"), col("c_id")), "id")
-    dropTableAndDir(spark, table)
+    resetIndex(spark, table)
     dropTableAndDir(spark, s"${table}_books")
-    // rebuild invalidates the previous incarnation's deletes (writeIvfIndex
-    // convention — stale tombstones must not suppress fresh rows) and
-    // clears any interrupted compaction's staging/backup side tables
-    dropTableAndDir(spark, tombstoneTable(table))
-    dropTableAndDir(spark, s"${table}__compact")
-    dropTableAndDir(spark, s"${table}__old")
     Bucketing.writeBucketed(enc, table, "c_id", numBuckets, sort = false)
     import spark.implicits._
     bk.books.zipWithIndex
@@ -1997,13 +1961,9 @@ object Similarity {
     * code rows. No corpus vector is read and nothing re-encodes. */
   def ivfPqTopKIndexed(table: String, coarse: DataFrame, probes: DataFrame,
                        bk: PqBooks, k: Int, nprobe: Int): DataFrame = {
-    val spark = probes.sparkSession
     // one execution of the probe side (assignment window + m ADC tables)
-    val (pb, clusterIds) =
-      materializeProbeSide(pqProbeSide(probes, coarse, bk, nprobe))
-    guardEmptyAssignment(clusterIds, coarse, "ivfPqTopKIndexed")
-    val enc = liveIndexRows(spark, table)
-      .filter(col("c_id").isin(clusterIds: _*))
+    val (pb, enc) = prunedIndex(table, pqProbeSide(probes, coarse, bk, nprobe),
+      coarse, "ivfPqTopKIndexed")
     adcRank(enc, pb, bk, k)
   }
 
@@ -2079,33 +2039,16 @@ object Similarity {
       s"ivfPqTopKRerankIndexed: rerank=$rerank < k=$k — the shortlist " +
         "cannot be smaller than the answer; use ivfPqTopKIndexed for " +
         "plain ADC ranking")
-    // same boundary guard as ivfTopKIndexed: a payload name colliding
-    // with a corpus column (or the coarse frame inside pqProbeSide)
-    // would surface as a deep ambiguous-reference AnalysisException,
-    // and one colliding with a generated column (cos, rank) would be
-    // silently OVERWRITTEN by the scoring withColumns — both reject
-    // loudly here instead
-    if (probePayload.nonEmpty) {
-      val reserved = corpus.columns.toSet ++
-        Set("cos", "rank", "ue", "up", "c_id", "c", "pc", "__sc", "__rn")
-      val clash = probePayload.filter(reserved)
-      require(clash.isEmpty,
-        s"ivfPqTopKRerankIndexed: probePayload ${clash.mkString("(", ", ", ")")} " +
-          "collides with the corpus frame's columns, the coarse frame's " +
-          "(c_id, c), or this operator's generated columns (cos, rank) — " +
-          "alias the probe-side column (e.g. label AS plabel) so " +
-          "pairFilter can reference both sides unambiguously")
-    }
+    requireNoPayloadClash("ivfPqTopKRerankIndexed", probePayload,
+      Seq(corpus, coarse),
+      Seq("ue", "up", "__sc", "__rn", "pc", "cos", "rank") ++
+        (0 until bk.m).map(s => s"__t$s"))
     val cand = ivfPqTopKIndexed(table, coarse, probes, bk, rerank, nprobe)
       .select(col("probe_id"), col("id"))
-    val w = Window.partitionBy("probe_id").orderBy(col("cos").desc, col("id"))
-    unitized(corpus, "e", "ue")
+    rankTopK(unitized(corpus, "e", "ue")
       .join(broadcast(cand), "id")
       .join(broadcast(unitized(probes, "p", "up")), "probe_id")
-      .withColumn("cos", dot(col("up"), col("ue")))
-      .filter(pairFilter)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("id"), col("cos"))
+      .withColumn("cos", cosine)
+      .filter(pairFilter), "cos", k)
   }
 }

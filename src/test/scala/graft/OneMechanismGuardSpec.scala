@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * durable-barrier conf reaches every cut), JPEG entropy decoders are
   * built only by [[graft.multimodal.JpegCodec]]'s scan layer, which the
   * hierarchical decoder calls, and threads and pools are made only by
-  * [[graft.io.Sinks.writeAll]], the release's one fan-out. Comments and
+  * [[graft.io.Sinks.writeAll]], the release's one fan-out. The ANN
+  * operators of [[graft.operators.Similarity]] rank through one per-key
+  * window and size bulk probes with one √n guard. Comments and
   * string literals are not code, so a scaladoc usage example does not
   * count. */
 class OneMechanismGuardSpec extends AnyFunSuite {
@@ -101,6 +103,20 @@ class OneMechanismGuardSpec extends AnyFunSuite {
       case _ => Nil
     }
     assert(sites.isEmpty, s"threads or pools outside Sinks.writeAll (fan out through it): $sites")
+  }
+
+  test("Similarity ranks through one window (topPerKey) and sizes bulk probes with one guard") {
+    val f = "src/main/scala/graft/operators/Similarity.scala"
+    val c = sources.toMap.apply(f)
+    // the helper's body: from its `def` to the next one
+    val start = c.indexOf("def topPerKey")
+    val end = c.indexOf("def ", start + 1)
+    val outside = """\brow_number\s*\(""".r.findAllMatchIn(c).map(_.start)
+      .filterNot(at => start >= 0 && at > start && at < end).size
+    assert(start >= 0 && outside == 0,
+      s"row_number() outside Similarity.topPerKey ($outside sites): rank through rankTopK/topPerKey")
+    val sizing = """require\s*\([^,]*math\s*\.\s*sqrt""".r.findAllIn(c).size
+    assert(sizing == 1, s"$sizing copies of the bulk sqrt(n) sizing require (one, in bulkCandidates)")
   }
 
   test("the scan sees code, not comments or strings") {

@@ -137,6 +137,14 @@ class FilteredAnnSpec extends SparkSpec {
           probePayload = Seq("label"))
       }
       assert(exClash.getMessage.contains("collides"), exClash.getMessage)
+      // ...and so does one colliding with the unit-centroid frame (uc)
+      // the probes are assigned against
+      val exClashUc = intercept[IllegalArgumentException] {
+        Similarity.ivfTopKIndexed("fann_pp_index", centroids,
+          probes.withColumnRenamed("plabel", "uc"), k = 5, nprobe = 2,
+          probePayload = Seq("uc"))
+      }
+      assert(exClashUc.getMessage.contains("collides"), exClashUc.getMessage)
     } finally {
       spark.sql("DROP TABLE IF EXISTS fann_pp_index")
     }

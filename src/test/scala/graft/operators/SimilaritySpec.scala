@@ -296,6 +296,18 @@ class SimilaritySpec extends SparkSpec {
       corpus, m = 2, dim = 4, Seq(0L, 1L), seedRows, 2).books == bkClean.books)
   }
 
+  test("ivfPqTopK with no seed id in the corpus names the empty codebook, not the kernel") {
+    val coarse = Seq((0, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0))).toDF("c_id", "c")
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.ivfPqTopK(corpus, coarse, probes, m = 2, dim = 2,
+        seedIds = Seq(98L, 99L), iters = 1, k = 3, nprobe = 1)
+    }
+    assert(ex.getMessage.contains("pqEncode: subspace 0 of 2 has an empty codebook"),
+      ex.getMessage)
+    assert(ex.getMessage.contains("none of the PQ seed ids is in the corpus"),
+      ex.getMessage)
+  }
+
   test("property: recallAtK == scan-the-definition reference on random top-k frames (3 seeds)") {
     // the metric q130/q130b gate everything through, fuzzed against a
     // plain-Scala restatement of its contract: per exact-side probe,
