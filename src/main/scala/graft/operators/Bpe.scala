@@ -186,10 +186,6 @@ object Bpe {
     new String(bytes, "UTF-8")
   }
 
-  /** Encode a raw symbol into vocab.bpe byte-level form: " low" → "Ġlow". */
-  def gpt2EncodeSymbol(sym: String): String =
-    sym.getBytes("UTF-8").map(b => gpt2ByteToChar(b & 0xff)).mkString
-
   /** Load a merge table in the published GPT-2 `vocab.bpe` interchange
     * format — optional `#version` header, then one merge per line as two
     * space-separated byte-level symbols, rank = line order — into the
@@ -208,16 +204,6 @@ object Bpe {
           s"malformed vocab.bpe merge line: '$l'")
         s"{${gpt2DecodeSymbol(l.substring(0, sp))}}{${gpt2DecodeSymbol(l.substring(sp + 1))}}"
       }.toSeq
-
-  /** Serialize a wrapped merge table to the vocab.bpe interchange format
-    * (with version header) — the export half of [[loadGpt2Merges]], so a
-    * table trained here loads into any GPT-2-compatible tokenizer. */
-  def writeGpt2Merges(merges: Seq[String]): Seq[String] =
-    "#version: 0.2" +: merges.map { m =>
-      val parts = m.stripPrefix("{").stripSuffix("}").split("\\}\\{", -1)
-      require(parts.length == 2, s"malformed wrapped merge: '$m'")
-      s"${gpt2EncodeSymbol(parts(0))} ${gpt2EncodeSymbol(parts(1))}"
-    }
 
   /** The merge-application chain over a wrapped-state column. One plan
     * NODE per merge — fine to a few hundred merges, but the analyzer

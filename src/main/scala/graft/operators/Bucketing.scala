@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 
 /** Bucketed-table helpers for shuffle-free co-located joins.
   *
@@ -20,12 +20,6 @@ object Bucketing {
       .format("parquet").bucketBy(numBuckets, key)
     (if (sort) w.sortBy(key) else w).saveAsTable(table)
   }
-
-  /** Join two same-bucketed tables on their bucket key — shuffle-free by
-    * construction when bucket counts match. */
-  def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-                   key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 
   /** Z-order (Morton) key of two non-negative dimension columns, `bits`
     * bits each (≤ 31): bit i of `a` lands at output bit 2i, bit i of `b`

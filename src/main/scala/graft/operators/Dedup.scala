@@ -196,53 +196,9 @@ object Dedup {
     labels
   }
 
-  /** End-to-end corpus dedup: exact dups (whitespace/case-normalized) and
-    * near-dups (MinHash-LSH candidates verified by n-gram Jaccard ≥
-    * `jaccardThreshold`) are clustered; one representative (smallest id)
-    * per cluster survives. Returns the deduplicated corpus. */
-  def dedupCorpus(df: DataFrame, text: Column, id: Column,
-                  jaccardThreshold: Double = 0.8): DataFrame = {
-    val base = df.select(id.as("id"), text.as("text"))
-    // exact: same fingerprint -> pair each member with the group min
-    val exactPairs = base
-      .select(col("id"), fingerprint(col("text")).as("fp"))
-      .withColumn("rep", min(col("id")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("fp")))
-      .filter(col("id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"))
-    // near: LSH candidates verified by exact Jaccard
-    val nearPairs = jaccardPairs(base, col("text"), col("id"),
-        lshCandidatePairs(minhashBands(base, col("text"), col("id"))))
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select("id_a", "id_b")
-    val comps = connectedComponents(exactPairs.unionByName(nearPairs))
-    base.join(comps, Seq("id"), "left")
-      .filter(col("comp").isNull || col("comp") === col("id"))
-      .select(col("id"), col("text"))
-  }
-
-  /** Benchmark decontamination — the standard LLM-pipeline hygiene step:
-    * flag every corpus document sharing at least one word `shingleN`-gram
-    * (default 13, the GPT-3/PaLM convention) with a benchmark/eval set,
-    * so eval questions that leaked into the training corpus can be
-    * dropped before training.
-    *
-    * Returns one row per CONTAMINATED corpus doc: (doc_id,
-    * n_shared_grams = distinct benchmark n-grams it contains,
-    * n_bench_docs = distinct benchmark docs it collides with). Clean docs
-    * don't appear (anti-join against this output to keep them).
-    *
-    * Scale shape: each side computes its per-doc DISTINCT shingle set
-    * map-side (one codegen kernel pass, no shuffle), hashes each gram to
-    * the cross-engine 60-bit md5 prefix, and explodes; the only shuffle
-    * is the equi-join ON THE GRAM HASH — and when the benchmark side is
-    * broadcast-sized (the usual case: eval sets are tiny next to a
-    * 100 TB corpus) Catalyst broadcasts it and the corpus side never
-    * shuffles at all (PlanSpec pins this). Cost is linear in corpus
-    * token volume either way. */
   /** Exploded per-doc distinct-gram rows (id, 60-bit gram hash) — the
     * ONE definition of gram hashing every decontamination path shares,
-    * so the exact / bloom-prefiltered / streaming forms can't drift. */
+    * so the exact and bloom-prefiltered forms can't drift. */
   private def gramRows(df: DataFrame, text: Column, id: Column,
                        idAlias: String, gramAlias: String,
                        shingleN: Int): DataFrame =
@@ -355,65 +311,9 @@ object Dedup {
         coalesce(size(col("__cuts")), lit(0)).cast("long").as("n_cut_grams"))
   }
 
-  /** Streaming serving twin of [[duplicateSpans]]: flag duplicated
-    * spans in INCOMING documents against a FROZEN duplicated-gram set
-    * (e.g. last night's corpus scan, as [[flagContaminated]] serves a
-    * frozen benchmark) — STATELESS and map-only, so the same call runs
-    * on a batch DataFrame or a `readStream` one. All the work is
-    * row-local: positional gram hashes (one fused-kernel pass), a
-    * Bloom membership test per gram (supersets the exact set by the
-    * fpp, never misses a true duplicate), and the same gap-≤-L island
-    * merge as the batch operator — folded over the flagged-position
-    * array instead of a window, since one row holds all of its doc's
-    * grams. Adds `n_flagged` (flagged gram starts), `n_dup_spans`
-    * (maximal spans), `n_dup_tokens` (tokens covered by them). */
-  def flagDuplicateSpans(docs: DataFrame, text: Column, bloom: Array[Byte],
-                         spanTokens: Int = 13): DataFrame = {
-    if (bloom == null) // empty frozen set: nothing can be duplicated
-      return docs.withColumn("n_flagged", lit(0L))
-        .withColumn("n_dup_spans", lit(0L))
-        .withColumn("n_dup_tokens", lit(0L))
-    val L = spanTokens.toLong
-    val reserved = Seq("__flagged", "__stats").filter(docs.columns.contains)
-    require(reserved.isEmpty,
-      s"reserved column names in use: ${reserved.mkString(",")}")
-    val grams = shingleHash(
-      column(graft.expressions.OrderedShinglesExpr(expression(text), spanTokens)))
-    // flagged gram START positions, ascending by construction
-    val flagged = filter(
-      transform(grams, (g, i) =>
-        when(bloomMightContain(bloom)(g), i.cast("long")).otherwise(lit(-1L))),
-      p => p >= 0)
-    // fold the island merge over the positions: a new span starts when
-    // the gap exceeds L; coverage grows by min(L, gap) per flagged gram
-    val init = struct(lit(0L).as("spans"), lit(0L).as("toks"),
-      lit(Long.MinValue / 2).as("prev"))
-    // flagged and the fold are BOUND to columns before fan-out: the
-    // three outputs would otherwise carry three textual copies of the
-    // HOF tree, and the PER-ELEMENT lambda work inside them (the md5
-    // per gram, the Bloom probe per gram) is beyond subexpression
-    // elimination's reach — it re-ran 3× per row (SpanFlagBindProbe:
-    // 0.71 → 0.44 s min at sf0.1; contrast duplicates whose expensive
-    // part is a CSE-able codegen subtree, which measure as a wash —
-    // TokenBindProbe, and the q74 matched A/B in SOAK.md)
-    docs
-      .withColumn("__flagged", flagged)
-      .withColumn("__stats", aggregate(col("__flagged"), init, (acc, p) => struct(
-        (acc.getField("spans") +
-          when(p > acc.getField("prev") + L, 1L).otherwise(0L)).as("spans"),
-        (acc.getField("toks") +
-          least(lit(L), p - acc.getField("prev"))).as("toks"),
-        p.as("prev"))))
-      .withColumn("n_flagged", coalesce(size(col("__flagged")).cast("long"), lit(0L)))
-      .withColumn("n_dup_spans", coalesce(col("__stats").getField("spans"), lit(0L)))
-      .withColumn("n_dup_tokens", coalesce(col("__stats").getField("toks"), lit(0L)))
-      .drop("__flagged", "__stats")
-  }
-
-  /** A Bloom filter over any LONG hash column — the generic builder
-    * behind the frozen-set serving twins (bits per the standard
-    * -n·ln(p)/ln(2)² formula). Returns null for an empty input (the
-    * flag operators treat null as "nothing frozen"). */
+  /** A Bloom filter over any LONG hash column (bits per the standard
+    * -n·ln(p)/ln(2)² formula) — the builder behind [[benchGramBloom]].
+    * Returns null for an empty input. */
   def hashBloom(df: DataFrame, c: Column, expectedItems: Long,
                 fpp: Double = 0.01): Array[Byte] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
@@ -426,6 +326,25 @@ object Dedup {
       .head().getAs[Array[Byte]]("bf")
   }
 
+  /** Benchmark decontamination — the standard LLM-pipeline hygiene step:
+    * flag every corpus document sharing at least one word `shingleN`-gram
+    * (default 13, the GPT-3/PaLM convention) with a benchmark/eval set,
+    * so eval questions that leaked into the training corpus can be
+    * dropped before training.
+    *
+    * Returns one row per CONTAMINATED corpus doc: (doc_id,
+    * n_shared_grams = distinct benchmark n-grams it contains,
+    * n_bench_docs = distinct benchmark docs it collides with). Clean docs
+    * don't appear (anti-join against this output to keep them).
+    *
+    * Scale shape: each side computes its per-doc DISTINCT shingle set
+    * map-side (one codegen kernel pass, no shuffle), hashes each gram to
+    * the cross-engine 60-bit md5 prefix, and explodes; the only shuffle
+    * is the equi-join ON THE GRAM HASH — and when the benchmark side is
+    * broadcast-sized (the usual case: eval sets are tiny next to a
+    * 100 TB corpus) Catalyst broadcasts it and the corpus side never
+    * shuffles at all (PlanSpec pins this). Cost is linear in corpus
+    * token volume either way. */
   def decontaminate(corpus: DataFrame, corpusText: Column, corpusId: Column,
                     bench: DataFrame, benchText: Column, benchId: Column,
                     shingleN: Int = 13): DataFrame = {
@@ -467,8 +386,8 @@ object Dedup {
   }
 
   /** Build the benchmark-gram Bloom filter once (driver-held bytes;
-    * broadcast-sized — MBs for millions of grams at 1% fpp). The inputs
-    * to [[bloomMightContain]] / [[flagContaminated]]. */
+    * broadcast-sized — MBs for millions of grams at 1% fpp) — the input
+    * to [[bloomMightContain]] in [[decontaminateBloom]]. */
   def benchGramBloom(bench: DataFrame, benchText: Column, shingleN: Int = 13,
                      expectedGrams: Long = 1000000L,
                      fpp: Double = 0.01): Array[Byte] =
@@ -482,30 +401,6 @@ object Dedup {
     import org.apache.spark.sql.types.BinaryType
     column(BloomFilterMightContain(
       Literal(bloom, BinaryType), XxHash64(Seq(expression(c)), 42L)))
-  }
-
-  /** Per-doc contamination flag from a built gram bloom — STATELESS and
-    * map-only, so the same call runs on a batch DataFrame or a
-    * `readStream` one (the streaming decontamination twin: eval sets are
-    * static, so the bloom is built batch-side once and the stream only
-    * evaluates the codegen membership predicate per doc; no state store,
-    * no watermark). Adds `contaminated` (true when ANY `shingleN`-gram
-    * might be in the benchmark — supersets the exact join by the fpp,
-    * never misses a true hit). */
-  def flagContaminated(docs: DataFrame, text: Column, bloom: Array[Byte],
-                       shingleN: Int = 13): DataFrame = {
-    // an EMPTY benchmark aggregates to a null bloom; without the guard
-    // might_contain(null) would flag every doc null — and the natural
-    // "keep clean" filter (!contaminated) would then drop the whole
-    // corpus instead of keeping it
-    if (bloom == null) return docs.withColumn("contaminated", lit(false))
-    // coalesce: a NULL text null-propagates through the kernel and exists(),
-    // and a null flag would be dropped by the keep-clean !contaminated
-    // filter — batch decontaminate treats the same doc as clean (no grams)
-    docs.withColumn("contaminated",
-      coalesce(exists(
-        shingleHash(column(DistinctShinglesExpr(expression(text), shingleN))),
-        bloomMightContain(bloom)), lit(false)))
   }
 
   /** SemDeDup-style semantic deduplication over an embedding column —
@@ -537,15 +432,6 @@ object Dedup {
       .filter(col("comp").isNull || col("comp") === col("id"))
       .select(col("id"), coalesce(col("comp"), col("id")).as("cluster"))
   }
-
-  /** Portable simhash fingerprints (see TextFunctions.simhashBits).
-    * Tokens are bound to a column first: simhashBits references its
-    * `toks` argument inside the per-BIT lambda, so a nested
-    * tokens(text) would re-tokenize the document once per bit. */
-  def simhashPortable(df: DataFrame, text: Column, id: Column,
-                      bits: Int = 60): DataFrame =
-    df.select(id.as("id"), tokens(text).as("__toks"))
-      .select(col("id"), simhashBits(col("__toks"), bits).as("simhash"))
 
   /** Engine-fast simhash: 64-bit long fingerprint via the codegen kernel
     * (one md5 per token, all 64 bit-votes in one JVM loop — the earlier

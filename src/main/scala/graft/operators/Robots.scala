@@ -114,7 +114,4 @@ object Robots {
     }
     if (best == null) (true, "") else (best.allow, best.pattern)
   }
-
-  def isAllowed(robotsTxt: String, productToken: String, path: String): Boolean =
-    decide(rulesFor(robotsTxt, productToken), path)._1
 }

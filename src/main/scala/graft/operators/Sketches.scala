@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   * always ≥ the true count (collisions only add), within ε·N with the
   * usual (d,w) guarantees. The sketch build is ONE pass over the items
   * (explode to depth (h, bucket) cells, partial-aggregated map-side into
-  * ≤ d·w cells), the result is broadcast-sized by construction, and two
-  * sketches merge by cell-wise addition — the same mergeable-sketch
-  * contract as approx_count_distinct (q56b) and approx_percentile (q43b).
+  * ≤ d·w cells), and the result is broadcast-sized by construction. Two
+  * sketches of one (depth, width, seed) merge by adding `cnt` per
+  * (h, bucket) — the same mergeable-sketch contract as
+  * approx_count_distinct (q56b) and approx_percentile (q43b); a
+  * streaming build keeps exactly that sum as its running aggregate.
   * Hashes are the cross-engine 60-bit md5 prefix so a DuckDB oracle
   * reproduces every cell exactly.
   */
@@ -31,20 +33,6 @@ object Sketches {
         struct(lit(i).as("h"), cmBucket(item, i, width, seed).as("bucket"))): _*)).as("hb"))
       .groupBy(col("hb.h").as("h"), col("hb.bucket").as("bucket"))
       .agg(count(lit(1)).as("cnt"))
-
-  /** Merge two count-min sketches by CELL-WISE ADDITION — the mergeable
-    * contract the scaladoc above promises, as a plan (full-outer on the
-    * ≤ d·w cells, absent cells count 0). merge(build(A), build(B)) ≡
-    * build(A ⧺ B) exactly (addition is associative per cell;
-    * SketchesSpec pins it), so per-partition/per-day sketches roll up
-    * without touching the raw items. */
-  def cmMerge(a: DataFrame, b: DataFrame): DataFrame = {
-    val bb = b.withColumnRenamed("cnt", "cnt_b")
-    a.join(bb, Seq("h", "bucket"), "full_outer")
-      .select(col("h"), col("bucket"),
-        (coalesce(col("cnt"), lit(0L)) + coalesce(col("cnt_b"), lit(0L)))
-          .as("cnt"))
-  }
 
   /** Estimate each candidate's frequency from a built sketch: adds `est`
     * (min over the depth rows). One exploded probe row per (candidate,

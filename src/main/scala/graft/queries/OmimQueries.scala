@@ -213,8 +213,11 @@ object OmimQueries {
 
   /** W1-analog on events + C19: tumbling 1-hour windows with exact decimal
     * sums (float sums are accumulation-order-sensitive; decimals hash-match
-    * across engines). Batch twin of the streaming pipeline
-    * (graft.streaming.EventsStreams — same plan under readStream). */
+    * across engines). Batch twin of
+    * [[graft.streaming.EventsStreams.tumblingCounts]], grouped on
+    * `date_trunc` rather than through its `window()` aggregate: Spark's
+    * tumbling `window()` adds an `isnotnull(ts)` filter that this
+    * grouping does not have. */
   val q35TumblingWindow = QueryDef(
     "q35_tumbling_window",
     (s, d) =>
@@ -701,16 +704,15 @@ object OmimQueries {
     * next to q35 tumbling and q36 sessions: 1-hour windows sliding every
     * 30 minutes, so every event lands in exactly two windows. The oracle
     * derives both window starts arithmetically (epoch-floor to the slide,
-    * minus one slide). Decimal-sum-then-double as in q35. */
+    * minus one slide). Decimal-sum-then-double as in q35; the aggregate
+    * is [[graft.streaming.EventsStreams.windowCounts]], the one the
+    * streaming twins run under a watermark. */
   val q48SlidingWindow = QueryDef(
     "q48_sliding_window",
     (s, d) =>
-      Tables.events(s, d)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(14,2)")).cast("double").as("total"))
-        .select(col("window.start").as("window_start"), col("event_type"),
-          col("n"), col("total"))
+      graft.streaming.EventsStreams.windowCounts(Tables.events(s, d),
+          window(col("ts"), "1 hour", "30 minutes"))
+        .withColumn("total", col("total").cast("double"))
         .orderBy("window_start", "event_type"),
     Some("""
       WITH ev AS (

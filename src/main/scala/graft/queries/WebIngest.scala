@@ -535,9 +535,11 @@ object WebIngest {
     * PSI = Σ (p_cur − p_ref)·ln(p_cur/p_ref). Decile boundaries come
     * from [[graft.operators.Sketches.quantileSketch]] (deterministic,
     * mergeable, O(k) state — the 100 TB path; boundaries collect as ONE
-    * 9-value row), bucketing is a map-side boundary count, and each
-    * version aggregates once. Laplace smoothing — 0.5 per contributing
-    * bucket, (n+0.5)/(N+0.5·B), the engine-wide PSI convention
+    * 9-value row), and each version's bucket counts come from
+    * [[graft.streaming.DriftStreams.psiDriftStream]] (a map-side
+    * boundary count, one aggregate per version). Laplace smoothing —
+    * 0.5 per contributing bucket, (n+0.5)/(N+0.5·B), the engine-wide
+    * PSI convention
     * ([[graft.streaming.DriftStreams.psiFromCounts]]) — keeps empty
     * buckets finite deterministically in both engines; at the 10
     * decile buckets here it equals the classic (n+0.5)/(N+5). The
@@ -563,12 +565,9 @@ object WebIngest {
         ref, col("doc_id"), col("x"), 200, "psi", qs)
         .head() // one row by construction
       val bs = (1 to 9).map(i => bounds.getDouble(i)) // after n_kept
-      def bucket(x: org.apache.spark.sql.Column) =
-        bs.map(b => when(x >= lit(b), 1).otherwise(0)).reduce(_ + _)
-      def dist(df: org.apache.spark.sql.DataFrame, n: String) =
-        df.groupBy(bucket(col("x")).as("bucket"))
-          .agg(count(lit(1)).as(n))
-      val joined = dist(ref, "n_ref").join(dist(cur, "n_cur"), Seq("bucket"), "full_outer")
+      val dist = graft.streaming.DriftStreams.psiDriftStream(_, col("x"), bs)
+      val joined = dist(ref).withColumnRenamed("n_cur", "n_ref")
+        .join(dist(cur), Seq("bucket"), "full_outer")
         .select(col("bucket"),
           coalesce(col("n_ref"), lit(0L)).as("n_ref"),
           coalesce(col("n_cur"), lit(0L)).as("n_cur"))

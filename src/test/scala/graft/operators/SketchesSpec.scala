@@ -150,29 +150,6 @@ class SketchesSpec extends SparkSpec {
       }
   }
 
-  test("cmMerge: merged sketches ≡ the sketch of the concatenated input") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val a = (1L to 800L).map(i => s"t${i % 37}").toDF("tok")
-    val b = (1L to 600L).map(i => s"t${i % 53}").toDF("tok")
-    val skA = Sketches.countMin(a, col("tok"), depth = 3, width = 256, "cm")
-    val skB = Sketches.countMin(b, col("tok"), depth = 3, width = 256, "cm")
-    val merged = Sketches.cmMerge(skA, skB)
-    val mergedSet = merged.as[(Int, Long, Long)].collect().toSet
-    val direct = Sketches.countMin(a.unionByName(b), col("tok"), 3, 256, "cm")
-      .as[(Int, Long, Long)].collect().toSet
-    assert(mergedSet == direct, "cell-wise merge must equal the direct build")
-    // and estimates from the merged sketch never underestimate the truth
-    val cands = (0 until 53).map(i => s"t$i").toDF("tok")
-    val est = Sketches.cmEstimate(cands, col("tok"), merged, 3, 256, "cm")
-      .as[(String, Long)].collect().toMap
-    val truth = a.unionByName(b).groupBy("tok").count()
-      .as[(String, Long)].collect().toMap
-    truth.foreach { case (t, n) =>
-      assert(est(t) >= n, s"merged sketch underestimated '$t'")
-    }
-  }
-
   test("kmvIntersectEstimate: exact below capacity, near-truth above") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -33,8 +33,9 @@ class CorpusStreamsSpec extends SparkSpec {
   }
 
   test("streaming dedupByFingerprint == batch distinct fingerprints, one row each") {
-    val q = CorpusStreams.dedupByFingerprint(
-        CorpusStreams.readDocs(spark, corpusDir))
+    val q = CorpusStreams.dedupByFingerprint(spark.readStream
+        .schema("doc_id BIGINT, text STRING, ingest_ts TIMESTAMP")
+        .parquet(corpusDir))
       .writeStream.format("memory").queryName("dedup_stream")
       .outputMode("append")
       .trigger(Trigger.AvailableNow()).start()
@@ -136,51 +137,6 @@ class CorpusStreamsSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("streaming decontamination flag == batch: no false negatives, fpp-bounded") {
-    import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$sf001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val bench = docs.filter(col("doc_id") % 50 === 0)
-      .select((col("doc_id") + 900000).as("bench_id"),
-        concat_ws(" ", slice(TextFunctions.tokens(col("text")), 6, 20)).as("btext"))
-    // the bloom is built ONCE batch-side (eval sets are static); the
-    // stream side is the stateless map-only membership flag
-    val bloom = Dedup.benchGramBloom(bench, col("btext"),
-      expectedGrams = 100000L, fpp = 0.01)
-    val dir = Files.createTempDirectory("decont-stream").toString
-    docs.coalesce(1).write.mode("overwrite").parquet(dir)
-
-    val q = Dedup.flagContaminated(
-        spark.readStream.schema("doc_id BIGINT, text STRING").parquet(dir),
-        col("text"), bloom)
-      .filter(col("contaminated"))
-      .select("doc_id")
-      .writeStream.format("memory").queryName("decont_stream")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-
-    val flagged = spark.table("decont_stream").as[Long].collect().toSet
-    val exact = Dedup.decontaminate(docs, col("text"), col("doc_id"),
-        bench, col("btext"), col("bench_id"))
-      .select("doc_id").as[Long].collect().toSet
-    assert(exact.subsetOf(flagged),
-      "streaming bloom flag missed a truly contaminated doc (false negative)")
-    // false positives are bounded by the fpp: allow a small absolute slack
-    assert(flagged.size <= exact.size + math.max(5, (docs.count() * 0.03).toInt),
-      s"far more flags (${flagged.size}) than exact hits (${exact.size})")
-    // and the same call on the batch frame gives the identical flag set
-    val batchFlagged = Dedup.flagContaminated(docs, col("text"), bloom)
-      .filter(col("contaminated")).select("doc_id").as[Long].collect().toSet
-    assert(flagged === batchFlagged, "stream and batch flag sets differ")
-
-    // an empty benchmark must flag NOTHING (false, not null — a null flag
-    // would make the keep-clean !contaminated filter drop the corpus)
-    val emptyBloom = Dedup.benchGramBloom(bench.limit(0), col("btext"))
-    val clean = Dedup.flagContaminated(docs, col("text"), emptyBloom)
-    assert(clean.filter(col("contaminated")).count() == 0)
-    assert(clean.filter(!col("contaminated")).count() == docs.count())
-  }
-
   test("streaming count-min build == batch sketch, cell for cell") {
     import graft.operators.Sketches
     // the SAME operator code runs under readStream: the cell grid is a
@@ -208,63 +164,6 @@ class CorpusStreamsSpec extends SparkSpec {
       .as[(Int, Long, Long)].collect().toSet
     assert(streamed === batch, "streaming sketch cells differ from batch")
     assert(streamed.nonEmpty && streamed.size <= 2 * 64)
-  }
-
-  test("streaming duplicate-span flag == batch spans against a frozen gram set") {
-    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
-    import graft.expressions.OrderedShinglesExpr
-    import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$sf001/documents.parquet")
-      .select("doc_id", "text")
-    // the frozen set: the corpus's own duplicated 13-grams (what a
-    // nightly batch scan would freeze for next-day serving)
-    val grams = docs.select(col("doc_id"), posexplode(
-        TextFunctions.shingleHash(
-          column(OrderedShinglesExpr(expression(col("text")), 13))))
-        .as(Seq("pos", "gram_h")))
-    val dup = grams.groupBy("gram_h").agg(count(lit(1)).as("n"))
-      .filter(col("n") >= 2).select("gram_h")
-    val bloom = Dedup.hashBloom(dup, col("gram_h"),
-      expectedItems = 2000, fpp = 1e-6)
-    val flagged = Dedup.flagDuplicateSpans(docs, col("text"), bloom)
-      .select("doc_id", "n_flagged", "n_dup_spans", "n_dup_tokens")
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-    // batch truth from the oracle-gated operator
-    val batch = Dedup.duplicateSpans(docs, col("text"), col("doc_id"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("ns"), sum(col("span_end") - col("span_start")).as("nt"),
-        sum("n_grams").as("nf"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-    assert(batch.nonEmpty, "corpus must contain duplicated spans")
-    // at fpp 1e-6 over ~20k probes the serving flag is exact in practice
-    // (deterministic bloom, pinned): spans, coverage, and flag counts match
-    batch.foreach { case (id, (ns, nt, nf)) =>
-      val (gf, gs, gt) = flagged(id)
-      assert(gs == ns && gt == nt && gf == nf,
-        s"doc $id: serving ($gf,$gs,$gt) != batch ($nf,$ns,$nt)")
-    }
-    flagged.filter(_._2._2 > 0).keys.foreach { id =>
-      assert(batch.contains(id), s"doc $id flagged with no batch span (fp beyond fpp)")
-    }
-    // and the same call runs stateless on a stream, row for row
-    val dir = Files.createTempDirectory("spanflag-stream").toString
-    docs.limit(80).coalesce(1).write.mode("overwrite").parquet(dir)
-    val q = Dedup.flagDuplicateSpans(
-        spark.readStream.schema("doc_id BIGINT, text STRING").parquet(dir),
-        col("text"), bloom)
-      .select("doc_id", "n_flagged", "n_dup_spans", "n_dup_tokens")
-      .writeStream.format("memory").queryName("spanflag_stream")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("spanflag_stream")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val batchCall = Dedup.flagDuplicateSpans(
-        spark.read.parquet(dir), col("text"), bloom)
-      .select("doc_id", "n_flagged", "n_dup_spans", "n_dup_tokens")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(streamed === batchCall, "streaming span flag diverged from batch")
   }
 
   test("PII scrub and URL canonicalization run stateless on a stream == batch") {

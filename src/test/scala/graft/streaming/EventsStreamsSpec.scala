@@ -60,204 +60,9 @@ class EventsStreamsSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
-  // the batch twin both session tests compare against, via the q36
-  // lag+running-sum form: (closed, open) where closed sessions have a
-  // later same-user event > gap after them and open ones are each user's
-  // last session (open tuples carry last_ts for watermark-flush checks)
-  private def batchSessionsTwin: (Set[(Long, Long, Int)], Set[(Long, Long, Int, Long)]) = {
-    val byUser = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy("ts", "event_id")
-    val batchSessions = Tables.events(spark, sf001)
-      .withColumn("prev_ts", lag("ts", 1).over(byUser))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull ||
-          col("ts").cast("double") - col("prev_ts").cast("double") > 1800.0, 1).otherwise(0))
-      .withColumn("session_id", sum("new_session").over(
-        byUser.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .groupBy("user_id", "session_id")
-      .agg(min(col("ts").cast("long")).as("session_start"),
-        count(lit(1)).cast("int").as("n_events"),
-        max(col("ts").cast("long")).as("last_ts"))
-    val wLast = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-    val withMax = batchSessions
-      .withColumn("max_sid", max("session_id").over(wLast))
-    val closed = withMax
-      .filter(col("session_id") < col("max_sid"))
-      .select("user_id", "session_start", "n_events")
-      .as[(Long, Long, Int)].collect().toSet
-    val open = withMax
-      .filter(col("session_id") === col("max_sid"))
-      .select("user_id", "session_start", "n_events", "last_ts")
-      .as[(Long, Long, Int, Long)].collect().toSet
-    (closed, open)
-  }
-
-  test("sessionizeTws (transformWithState) emits closed + watermark-flushed sessions") {
-    // transformWithState needs multi-column-family state stores (state +
-    // timers): point the provider at RocksDB for this query, restore after
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val streamed =
-      try {
-        val q = EventsStreams.sessionizeTws(EventsStreams.readEvents(spark, eventsDir))
-          .writeStream.format("memory").queryName("sessions")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-        assert(q.exception.isEmpty, s"query failed: ${q.exception}")
-        spark.table("sessions").as[(Long, Long, Int)].collect().toSet
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(providerKey, v)
-          case None    => spark.conf.unset(providerKey)
-        }
-      }
-
-    val (closed, open) = batchSessionsTwin
-    // event-time timers: a user's open session flushes once the final
-    // watermark (max event time - 2h delay, ms floor) passes last + gap.
-    // The firing comparison's strictness at an exact ms boundary is
-    // Spark-internal; accept either (boundary users are rare to absent).
-    val maxTsMs = Tables.events(spark, sf001)
-      .agg(max(col("ts"))).head().getTimestamp(0).getTime
-    val wmMs = maxTsMs - 2L * 3600 * 1000
-    def flushed(strict: Boolean) = open.collect {
-      case (u, s, n, last) if (if (strict) (last + 1800) * 1000 < wmMs
-                               else (last + 1800) * 1000 <= wmMs) => (u, s, n)
-    }
-    assert(streamed == closed ++ flushed(strict = true) ||
-      streamed == closed ++ flushed(strict = false),
-      s"streamed=${streamed.size} closed=${closed.size} flushed=${flushed(true).size}")
-    // the timer path must actually have fired for this to be a real pin
-    assert(flushed(strict = true).nonEmpty && (streamed -- closed).nonEmpty)
-  }
-
-  test("sessionize (flatMapGroupsWithState) agrees in batch mode") {
-    // batch execution of the same state machine: every user's rows arrive
-    // in one group call, so the gap-split emits exactly the closed
-    // sessions (the final session stays in never-emitted state, matching
-    // the streaming end-of-stream behavior). Running this operator in
-    // batch keeps the flatMapGroupsWithState surface covered without a
-    // streaming run: FlatMapGroupsWithStateExec's eager PythonSQLMetrics
-    // init NPEs (Spark planning bug) in AvailableNow's final
-    // timeout-check batch — the streaming parity test above runs the
-    // transformWithState twin instead.
-    val batchRun = EventsStreams.sessionize(
-      Tables.events(spark, sf001).select("user_id", "ts", "event_id"))
-      .as[(Long, Long, Int)].collect().toSet
-    val (closed, _) = batchSessionsTwin
-    assert(batchRun == closed)
-    assert(batchRun.nonEmpty)
-  }
-
-  test("funnelTws (transformWithState) == q107 batch funnel for covered users") {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val streamed =
-      try {
-        val q = EventsStreams.funnelTws(EventsStreams.readEvents(spark, eventsDir))
-          .writeStream.format("memory").queryName("funnel")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-        assert(q.exception.isEmpty, s"query failed: ${q.exception}")
-        spark.table("funnel")
-          .as[(Long, Long, Option[Long], Option[Long], Int)].collect()
-          .map(r => r._1 -> r).toMap
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(providerKey, v)
-          case None    => spark.conf.unset(providerKey)
-        }
-      }
-
-    // batch truth: q107's chained-min funnel, converted to micros
-    val batch = graft.queries.TemporalQueries.q107Funnel.fn(spark, sf001)
-      .selectExpr("user_id", "unix_micros(t_view)", "unix_micros(t_click)",
-        "unix_micros(t_purchase)", "stages")
-      .as[(Long, Long, Option[Long], Option[Long], Int)].collect()
-      .map(r => r._1 -> r).toMap
-
-    // a user emits iff the final watermark passed their t1+48h horizon
-    val maxTsUs = Tables.events(spark, sf001)
-      .agg(max(unix_micros(col("ts")))).as[Long].head()
-    val wmMs = maxTsUs / 1000 - 3600 * 1000 // 1h delay, ms floor
-    val horizonUs = 48L * 3600 * 1000000
-    val covered = batch.filter { case (_, r) =>
-      (r._2 + horizonUs) / 1000 + 1 < wmMs }
-    // every covered user must match the batch chain exactly
-    covered.foreach { case (u, want) =>
-      assert(streamed.contains(u), s"user $u not emitted")
-      assert(streamed(u) == want, s"user $u: ${streamed(u)} != $want")
-    }
-    // no spurious users, and every emission matches batch (boundary
-    // users may or may not emit depending on Spark's timer strictness)
-    streamed.foreach { case (u, got) =>
-      assert(batch.contains(u) && batch(u) == got, s"user $u spurious/mismatch")
-    }
-    assert(covered.nonEmpty && streamed.nonEmpty)
-    // the funnel must be non-trivial: some covered user converts fully
-    assert(covered.exists(_._2._5 == 3), "no 3-stage conversion in fixture")
-  }
-
-  test("funnelTws bounds state for view-LESS keys (click-only users clear)") {
-    // user 100 emits clicks but never a view: its per-event state must be
-    // pruned/cleared once the watermark passes its events (fallback
-    // timer), not retained forever (TTL is NONE). user 200 completes a
-    // funnel whose horizon the watermark covers → emits and clears.
-    // user 300's view horizon stays open → exactly ONE state row remains.
-    val t0 = 1700000000000000L // µs
-    val h = 3600L * 1000000
-    val dir = Files.createTempDirectory("funnel-viewless")
-    def write(name: String, rows: Seq[(Long, String, Long)]): Unit =
-      rows.toDF("user_id", "event_type", "tus")
-        .select($"user_id", $"event_type",
-          timestamp_micros($"tus").as("ts"))
-        .coalesce(1).write.parquet(s"$dir/$name")
-    // batch 1: the click-only user + a full funnel
-    write("f1", Seq(
-      (100L, "click", t0), (100L, "click", t0 + 10 * 1000000),
-      (100L, "purchase", t0 + 20 * 1000000),
-      (200L, "view", t0), (200L, "click", t0 + h),
-      (200L, "purchase", t0 + 2 * h)))
-    // batch 2: far-future view pushes the watermark past both horizons
-    write("f2", Seq((300L, "view", t0 + 100 * h)))
-    val src = spark.readStream
-      .schema("user_id BIGINT, event_type STRING, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$dir/f*")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = EventsStreams.funnelTws(src)
-        .writeStream.format("memory").queryName("funnel_viewless")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-      assert(q.exception.isEmpty, s"query failed: ${q.exception}")
-      val out = spark.table("funnel_viewless")
-        .as[(Long, Long, Option[Long], Option[Long], Int)].collect()
-      // only user 200 emits (3 stages); the view-less user must not
-      assert(out.map(_._1).toSet == Set(200L), out.mkString(","))
-      assert(out.head._5 == 3)
-      // state store holds ONLY user 300 (open horizon): the click-only
-      // user's state was cleared by the fallback timer / prune path
-      val stateRows = q.recentProgress.reverse
-        .flatMap(_.stateOperators.headOption).headOption
-        .map(_.numRowsTotal).getOrElse(-1L)
-      assert(stateRows == 1L,
-        s"expected 1 surviving state row (user 300), got $stateRows")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
+  test("q48 on windowCounts builds the optimized plan it built inline") {
+    // md5 recorded while q48 still wrote the aggregate out by hand
+    val q48 = graft.SparkEntry.queries("q48_sliding_window")(spark, sf001)
+    assert(graft.AnnPlanGoldenSpec.planMd5(q48) == "31da36de141ec100e54d1f699fe7e128")
   }
 }
