@@ -103,10 +103,9 @@ object Main {
       case Some(key) =>
         val entryUrl = sys.env.getOrElse("OMIM_API_URL", "https://api.omim.org/api/entry")
         val transport = new HttpTransport(entryUrl, key)
-        def tsv(p: String) = spark.read.option("sep", "\t")
-          .option("header", "true").csv(p)
         val cached = CacheRefresh.CacheTables(
-          mappings = tsv(in.mappingsPath), pubmed = tsv(in.pubmedRefsPath))
+          mappings = graft.io.HeaderedTsv.read(spark, in.mappingsPath),
+          pubmed = graft.io.HeaderedTsv.read(spark, in.pubmedRefsPath))
         val titles = OmimPipeline.parseMimTitles(graft.io.CommentFramedTsv.read(
           spark, in.mimTitlesPath, Some(BuildGraph.TitleColumns)))
         val allMims = titles.select(col("mim"))

@@ -9,10 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (verify with `.explain("formatted")`: PushedFilters / ReadSchema).
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

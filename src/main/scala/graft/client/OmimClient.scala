@@ -1,10 +1,11 @@
 package graft.client
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 /** REST API batch connector (SURVEY.md S3/S4; ref: omim2obo/omim_client.py
   * :75-188): fetch entry documents for MIM ids in batches of 20 with
-  * rate-limit pacing, plus a date-bounded incremental search.
+  * rate-limit pacing. Which ids to fetch — seed or incremental — is
+  * decided by [[CacheRefresh.idsToFetch]].
   *
   * The transport is an interface so tests (and this zero-egress
   * environment) use a stub; a production impl would wrap java.net.http.
@@ -54,13 +55,4 @@ object OmimClient {
       it.grouped(BatchSize).map(batch => FetchResult(batch.toSeq, transport.fetchBatch(batch.toSeq)))
     }
   }
-
-  /** Incremental fetch (S4; ref: omim_client.py:115-147): ids updated in a
-    * date window come from a driver-side paged search (tiny result), then
-    * the distributed fetch + cache upsert handle the rest. The search page
-    * loop stays on the driver by design — it is a single paginated HTTP
-    * conversation, not a distributed concern. */
-  def idsToRefresh(spark: SparkSession, allIds: DataFrame,
-                   cachedIds: DataFrame): DataFrame =
-    allIds.join(cachedIds, allIds.columns.headOption.toSeq, "left_anti")
 }

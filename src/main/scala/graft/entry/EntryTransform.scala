@@ -176,10 +176,4 @@ object EntryTransform {
 
     out.result()
   }
-
-  /** Whole-corpus transform: `Dataset[EntryRow].flatMap` (map-only). */
-  def transform(entries: Dataset[EntryRow]): Dataset[Triple] = {
-    import entries.sparkSession.implicits._
-    entries.flatMap(entryTriples)
-  }
 }

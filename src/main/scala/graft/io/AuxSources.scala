@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Auxiliary sources/utilities from the reference's tool scripts
@@ -39,28 +39,16 @@ object AuxSources {
     if (a.endsWith(">")) a.substring(0, a.length - 1) else a
   }
 
-  /** Column form of [[removeAngleBrackets]]. */
-  def stripAngles(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(regexp_replace(c, "^<", ""), ">$", "")
-
   /** C19 (ref: omim_txt_parser.py:548-552): cache rows needing refresh —
     * fetched strictly before `since` minus one day's precaution (the
     * reference subtracts a day to tolerate publish-lag). */
   def staleCacheRows(cached: DataFrame, sinceDate: String): DataFrame =
     cached.filter(to_date(col("date_fetched")) < date_sub(to_date(lit(sinceDate)), 1))
 
-  /** A11 (ref: omim_txt_parser.py:615-630) as Spark-native observe()
-    * metrics: count rows failing `goodCond` while the data streams through
-    * — no second scan; after the first action `obs.get` yields
-    * bad/total. Call [[assertBadRowRate]] with those. */
-  def observeBadRows(df: DataFrame, goodCond: org.apache.spark.sql.Column,
-                     obs: org.apache.spark.sql.Observation): DataFrame =
-    df.observe(obs,
-      sum(when(goodCond, 0L).otherwise(1L)).as("bad"),
-      count(lit(1)).as("total"))
-
-  /** Fail when bad/total exceeds `maxRate` (mirrors the reference's 1%
-    * HGNC guard, softened to tolerate 1 bad row on tiny fixtures). */
+  /** A11 (ref: omim_txt_parser.py:615-630): fail when bad/total exceeds
+    * `maxRate` (mirrors the reference's 1% HGNC guard, softened to
+    * tolerate 1 bad row on tiny fixtures). The release counts both in one
+    * pass in [[graft.pipeline.OmimPipeline.hgncSymbolIdMap]]. */
   def assertBadRowRate(bad: Long, total: Long, maxRate: Double = 0.01): Unit =
     require(total == 0 || bad <= total * maxRate || bad <= 1,
       s"too many invalid rows: $bad/$total")

@@ -1,8 +1,5 @@
 package graft.io
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
-
 import scala.io.Source
 
 /** S6: the CURIE-prefix configuration scan.
@@ -43,11 +40,6 @@ object CurieMap {
 
   def parse(text: String): Map[String, String] =
     parseLines(text.linesIterator).toMap
-
-  /** Read a curie_map.yaml-shaped file from the local filesystem
-    * (config scan — driver-side by design, like config.py:23). */
-  def load(path: Path): Map[String, String] =
-    parse(new String(Files.readAllBytes(path), StandardCharsets.UTF_8))
 
   /** The reference's full dipper CURIE map, shipped as resource data
     * (data/dipper/curie_map.yaml — 212 bindings incl. the '' base). */

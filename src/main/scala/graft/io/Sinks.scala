@@ -1,6 +1,6 @@
 package graft.io
 
-import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executors, TimeUnit}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,8 +35,12 @@ object Sinks {
     * eight, and Spark's scheduler shares the cores between their jobs. */
   def writeAll(spark: SparkSession, dir: String, writes: Seq[(String, String => Unit)]): Unit = {
     val sc = spark.sparkContext
-    val pool = Executors.newFixedThreadPool(writes.size,
-      (r: Runnable) => new Thread(r, WriterThreadName))
+    val threads = new ConcurrentLinkedQueue[Thread]()
+    val pool = Executors.newFixedThreadPool(writes.size, (r: Runnable) => {
+      val t = new Thread(r, WriterThreadName)
+      threads.add(t)
+      t
+    })
     try {
       val pending = writes.map { case (name, write) =>
         val task: Runnable = () => {
@@ -54,7 +58,9 @@ object Sinks {
       }
     } finally {
       pool.shutdownNow()
-      pool.awaitTermination(1, TimeUnit.MINUTES)
+      // a terminated pool's workers can still be on their way out:
+      // join them, so that no writer thread outlives the call
+      if (pool.awaitTermination(1, TimeUnit.MINUTES)) threads.forEach(_.join())
     }
   }
 

@@ -58,6 +58,13 @@ object CommentFramedTsv {
   }
 }
 
+/** Plain TSVs whose first line is the header (the HGNC table, the API
+  * caches and the curator tables), all columns strings. */
+object HeaderedTsv {
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.option("sep", "\t").option("header", "true").csv(path)
+}
+
 /** SSSOM TSV with `#`-prefixed YAML front-matter → OMIM→MONDO multimap
   * (ref: main.py:87-109, S7/A5). Accepts either (subject,object)
   * orientation; output: (omim_mim, mondo_ids sorted array). */
@@ -111,36 +118,34 @@ object CuratorTables {
 
   private def stripPrefix(c: org.apache.spark.sql.Column) = substring_index(c, ":", -1)
 
+  /** A curator's ORCID as `ORCID:<id>` (a leading `https://orcid.org/`
+    * dropped); null when blank. */
+  private def orcid(c: org.apache.spark.sql.Column) =
+    when(length(trim(coalesce(c, lit("")))) > 0,
+      concat(lit("ORCID:"), regexp_replace(trim(c), "^https://orcid\\.org/", "")))
+
   /** exclusions-disease-gene.tsv → (p_mim, orcid) — ref:
     * get_d2g_exclusions_by_curator (utils.py:70-80). */
   def exclusions(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("sep", "\t").option("header", "true").csv(path)
-      .select(
-        stripPrefix(col("omim_id")).as("p_mim"),
-        when(length(trim(coalesce(col("orcid"), lit("")))) > 0,
-          concat(lit("ORCID:"),
-            regexp_replace(trim(col("orcid")), "^https://orcid\\.org/", "")))
-          .as("excl_orcid"))
+    HeaderedTsv.read(spark, path)
+      .select(stripPrefix(col("omim_id")).as("p_mim"), orcid(col("orcid")).as("excl_orcid"))
 
   /** protected-disease-gene.tsv → (p_mim, gene_mim, hgnc_id, orcid,
     * mondo_id) — ref: get_d2g_protected (utils.py:25-45) +
     * get_protected_mondo_mappings (utils.py:48-67). */
   def protected_(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("sep", "\t").option("header", "true").csv(path)
+    HeaderedTsv.read(spark, path)
       .select(
         stripPrefix(col("phenotype_mim")).as("p_mim"),
         stripPrefix(col("gene_mim")).as("gene_mim"),
         stripPrefix(col("hgnc_id")).as("hgnc_id"),
-        when(length(trim(coalesce(col("orcid"), lit("")))) > 0,
-          concat(lit("ORCID:"),
-            regexp_replace(trim(col("orcid")), "^https://orcid\\.org/", "")))
-          .as("prot_orcid"),
+        orcid(col("orcid")).as("prot_orcid"),
         col("mondo_id"))
 
   /** known_capitalizations.tsv → driver Map (broadcast into UDFs) — ref:
     * get_known_capitalizations (omim_entry_parser.py:27-52). */
   def knownCapitalizations(spark: SparkSession, path: String): Map[String, String] =
-    spark.read.option("sep", "\t").option("header", "true").csv(path)
+    HeaderedTsv.read(spark, path)
       .select("lower_name", "cap_name").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
 }

@@ -44,9 +44,14 @@ object Bpe {
   /** Fuse a wrapped pair: "{a}{g}" → "{ag}". */
   def fused(pair: String): String = pair.replace("}{", "")
 
-  /** Learn `k` merges (wrapped pair strings, rank order). Ties break on
-    * the pair string ascending — binary collation everywhere, so the SQL
-    * oracle learns the identical table.
+  /** Learn `k` merges (wrapped pair strings, rank order), with the
+    * trained model's FINAL vocabulary segmentation as a broadcast-sized
+    * frame (vw, n_sym) — the trainer already holds every distinct word's
+    * symbol sequence when the merge loop ends, so consumers
+    * ([[tokenCounts]]) need neither a second corpus pass to rebuild the
+    * vocabulary nor a k-deep replace chain to re-derive it. Ties break
+    * on the pair string ascending — binary collation everywhere, so the
+    * SQL oracle learns the identical table.
     *
     * Shape: ONE distributed shuffle builds the frequency-weighted
     * distinct-pre-token vocabulary; the merge loop then runs driver-side
@@ -55,15 +60,6 @@ object Bpe {
     * distinct pre-tokens). `maxVocab` fails loudly instead of silently
     * OOMing the driver; corpora over the bound pre-filter rare tokens
     * (raise `minFreq`) or train on a sample, the standard practice. */
-  def train(docs: DataFrame, text: Column, k: Int,
-            minFreq: Long = 1L, maxVocab: Int = 1 << 21): Seq[String] =
-    trainModel(docs, text, k, minFreq, maxVocab)._1
-
-  /** [[train]] plus the trained model's FINAL vocabulary segmentation as
-    * a broadcast-sized frame (vw, n_sym) — the trainer already holds
-    * every distinct word's symbol sequence when the merge loop ends, so
-    * consumers ([[tokenCounts]]) need neither a second corpus pass to
-    * rebuild the vocabulary nor a k-deep replace chain to re-derive it. */
   def trainModel(docs: DataFrame, text: Column, k: Int,
                  minFreq: Long = 1L, maxVocab: Int = 1 << 21)
       : (Seq[String], DataFrame) = {

@@ -433,14 +433,6 @@ object Dedup {
       .select(col("id"), coalesce(col("comp"), col("id")).as("cluster"))
   }
 
-  /** Engine-fast simhash: 64-bit long fingerprint via the codegen kernel
-    * (one md5 per token, all 64 bit-votes in one JVM loop — the earlier
-    * 64-HOF-aggregates form was interpreted and ~50× slower). Not
-    * oracle-portable as a long; covered by hamming-property ScalaTests. */
-  def simhash64(df: DataFrame, text: Column, id: Column): DataFrame =
-    df.select(id.as("id"),
-      column(graft.expressions.Simhash64Expr(expression(text))).as("simhash64"))
-
   /** SimHash banded candidate pairs — the LSH-shaped near-dup join for
     * the simhash family: the `bits`-length portable fingerprint is split
     * into `bands` equal chunks, and two docs become a candidate iff some

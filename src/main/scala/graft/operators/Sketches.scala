@@ -109,9 +109,7 @@ object Sketches {
     * ([[quantileMerge]]; SketchesSpec pins merge ≡
     * sketch-of-concatenation). Merging OVERLAPPING sketches
     * double-counts the shared rows — re-sketch, don't re-merge, after
-    * a re-ingest. Estimates are
-    * nearest-rank (the sample value at 1-based index ceil(q·n)): actual
-    * data values, no interpolation arithmetic to drift cross-engine.
+    * a re-ingest. Estimates are [[nearestRank]] over the sorted sample.
     * Rank error of a k-uniform sample is O(1/√k) (pinned in spec).
     *
     * Plan shape: [[Sampling.quotaPerGroup]]'s WindowGroupLimit keeps
@@ -122,23 +120,40 @@ object Sketches {
   def quantileSketch(df: DataFrame, groupCol: String, key: Column,
                      value: Column, k: Int, seed: String,
                      quantiles: Seq[Double]): DataFrame = {
-    require(quantiles.nonEmpty && quantiles.forall(q => q > 0 && q <= 1))
-    // null values drop BEFORE sampling: collect_list silently skips
-    // nulls, so an unfiltered null would inflate n_kept past len(vs)
-    // and push the nearest-rank index off the end of the sample
-    val hashed = df.select(col(groupCol), kmvHash(key, seed).as("h"),
-      value.cast("double").as("v"))
-      .filter(col("v").isNotNull)
-    val kept = Sampling.quotaPerGroup(hashed, groupCol, k, col("h").asc, col("v").asc)
-    val grouped = kept.groupBy(groupCol)
-      .agg(sort_array(collect_list(col("v"))).as("vs"), count(lit(1)).as("n_kept"))
-    val qCols = quantiles.map { q =>
-      element_at(col("vs"),
-        greatest(lit(1), ceil(lit(q) * col("n_kept")).cast("int")))
-        .as(s"q${math.round(q * 100)}")
-    }
-    grouped.select(col(groupCol) +: col("n_kept") +: qCols: _*)
+    val qCols = quantileCols(quantiles)
+    val hashed = hashedValues(df, Seq(col(groupCol)), key, value, seed)
+    Sampling.quotaPerGroup(hashed, groupCol, k, col("h").asc, col("v").asc)
+      .groupBy(groupCol).agg(sortedValues, keptCount)
+      .select(col(groupCol) +: col("n_kept") +: qCols: _*)
   }
+
+  /** The quantile sketch's input: `lead` columns, the 60-bit hash `h` of
+    * the row key and the value `v` as double. Null values drop BEFORE
+    * sampling: collect_list silently skips nulls, so an unfiltered null
+    * would inflate n_kept past len(vs) and push the nearest-rank index
+    * off the end of the sample. */
+  private def hashedValues(df: DataFrame, lead: Seq[Column], key: Column,
+                           value: Column, seed: String): DataFrame =
+    df.select(lead :+ kmvHash(key, seed).as("h") :+ value.cast("double").as("v"): _*)
+      .filter(col("v").isNotNull)
+
+  /** The kept sample's aggregates: its sorted values and their count. */
+  private val sortedValues = sort_array(collect_list(col("v"))).as("vs")
+  private val keptCount = count(lit(1)).as("n_kept")
+
+  /** One `q<pct>` column per requested quantile over (`vs`, `n_kept`). */
+  private def quantileCols(quantiles: Seq[Double]): Seq[Column] = {
+    require(quantiles.nonEmpty && quantiles.forall(q => q > 0 && q <= 1))
+    quantiles.map(q => nearestRank(col("vs"), col("n_kept"), q).as(s"q${math.round(q * 100)}"))
+  }
+
+  /** Nearest-rank quantile `q` of the ascending array `sorted` holding `n`
+    * values: its element at 1-based index ceil(q·n) — an actual data
+    * value, no interpolation arithmetic to drift cross-engine. The batch
+    * sketches and the streaming estimate
+    * ([[graft.streaming.StreamingSketches.estimate]]) all select with it. */
+  def nearestRank(sorted: Column, n: Column, q: Double): Column =
+    element_at(sorted, greatest(lit(1), ceil(lit(q) * n).cast("int")))
 
   /** KMV set-INTERSECTION estimate from two k-sets — the capability KMV
     * has and HLL doesn't ([[kmvSketch]]'s scaladoc): over the union's
@@ -174,40 +189,25 @@ object Sketches {
     * (n_kept, q<pct>…). */
   def quantileSketchAll(df: DataFrame, key: Column, value: Column, k: Int,
                         seed: String, quantiles: Seq[Double]): DataFrame = {
-    require(quantiles.nonEmpty && quantiles.forall(q => q > 0 && q <= 1))
-    val hashed = df.select(kmvHash(key, seed).as("h"),
-      value.cast("double").as("v"))
-      .filter(col("v").isNotNull)
-    val kept = hashed.orderBy(col("h").asc, col("v").asc).limit(k)
-    val grouped = kept.agg(sort_array(collect_list(col("v"))).as("vs"),
-      count(lit(1)).as("n_kept"))
-    val qCols = quantiles.map { q =>
-      element_at(col("vs"),
-        greatest(lit(1), ceil(lit(q) * col("n_kept")).cast("int")))
-        .as(s"q${math.round(q * 100)}")
-    }
-    grouped.select(col("n_kept") +: qCols: _*)
+    val qCols = quantileCols(quantiles)
+    hashedValues(df, Nil, key, value, seed)
+      .orderBy(col("h").asc, col("v").asc).limit(k)
+      .agg(sortedValues, keptCount)
+      .select(col("n_kept") +: qCols: _*)
   }
 
   /** Merge two quantile-sketch samples ((hash, value) pairs) — k
-    * smallest of the union MULTISET, the driver-side mergeability
-    * primitive. Associative and commutative over sketches of DISJOINT
-    * row shards (the only shape partial aggregation and micro-batch
-    * state merging ever produce); duplicates are kept because the batch
-    * sketch ([[quantileSketch]]'s quotaPerGroup row_number) counts every
-    * row — a `.distinct` here made merged samples diverge from the
-    * batch sketch whenever two rows shared a (hash, value) pair. */
+    * smallest of the union MULTISET, the one mergeability primitive (the
+    * streaming aggregate [[graft.streaming.QuantileSketchAgg]] trims its
+    * buffers with it). Associative and commutative over sketches of
+    * DISJOINT row shards (the only shape partial aggregation and
+    * micro-batch state merging ever produce); duplicates are kept because
+    * the batch sketch ([[quantileSketch]]'s quotaPerGroup row_number)
+    * counts every row — a `.distinct` here made merged samples diverge
+    * from the batch sketch whenever two rows shared a (hash, value) pair. */
   def quantileMerge(a: Seq[(Long, Double)], b: Seq[(Long, Double)],
                     k: Int): Seq[(Long, Double)] =
     (a ++ b).sortBy(identity).take(k)
-
-  /** Nearest-rank estimate from a merged sample (dual of the in-plan
-    * `element_at(vs, ceil(q·n))`). */
-  def quantileEstimate(sample: Seq[(Long, Double)], q: Double): Double = {
-    require(sample.nonEmpty && q > 0 && q <= 1)
-    val vs = sample.map(_._2).sorted
-    vs(math.max(1, math.ceil(q * vs.size).toInt) - 1)
-  }
 
   /** Merge two KMV k-sets (arrays of hashes) and estimate the union's
     * distinct count — the driver-side mergeability primitive the spec

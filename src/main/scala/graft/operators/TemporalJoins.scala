@@ -151,11 +151,30 @@ object TemporalJoins {
       loExpr: Column,
       hiExpr: Column,
       bucketWidth: Long): DataFrame = {
+    val (p, i) = bucketed(points, pointExpr, intervals, loExpr, hiExpr, bucketWidth)
+    p.join(i, bucketMatch).drop(BucketCols: _*)
+  }
+
+  /** The working columns [[rangeJoin]] adds to its sides (and drops). */
+  private[graft] val BucketCols = Seq("__pt", "__pbucket", "__lo", "__hi", "__ibucket")
+
+  /** [[rangeJoin]]'s checks and its two bucketed sides: each point in
+    * one bucket, each non-empty interval exploded to the buckets it
+    * covers. Join them on [[bucketMatch]]; the streaming twin
+    * ([[graft.streaming.TemporalStreams.rangeJoinStream]]) adds its
+    * state-eviction bound to that condition. */
+  private[graft] def bucketed(
+      points: DataFrame,
+      pointExpr: Column,
+      intervals: DataFrame,
+      loExpr: Column,
+      hiExpr: Column,
+      bucketWidth: Long): (DataFrame, DataFrame) = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val shared = points.columns.toSeq.intersect(intervals.columns.toSeq)
     require(shared.isEmpty,
       s"points and intervals share column names: ${shared.mkString(",")} — rename before joining")
-    val reserved = Seq("__pt", "__pbucket", "__lo", "__hi", "__ibucket")
+    val reserved = BucketCols
       .filter(r => points.columns.contains(r) || intervals.columns.contains(r))
     require(reserved.isEmpty, s"reserved column names in use: ${reserved.mkString(",")}")
     val p = points
@@ -169,11 +188,14 @@ object TemporalJoins {
       .withColumn("__ibucket", explode(sequence(
         floor(col("__lo") / bucketWidth).cast("long"),
         floor((col("__hi") - 1) / bucketWidth).cast("long"))))
-    p.join(i,
-        col("__pbucket") === col("__ibucket") &&
-          col("__pt") >= col("__lo") && col("__pt") < col("__hi"))
-      .drop("__pt", "__pbucket", "__lo", "__hi", "__ibucket")
+    (p, i)
   }
+
+  /** The match of two [[bucketed]] sides: the bucket equi-key, refined by
+    * the residual `lo <= point < hi`. */
+  private[graft] def bucketMatch: Column =
+    col("__pbucket") === col("__ibucket") &&
+      col("__pt") >= col("__lo") && col("__pt") < col("__hi")
 
   /** SCD TYPE-2 history build from a change-data stream — the
     * dimension-maintenance shape every warehouse runs: per entity key,

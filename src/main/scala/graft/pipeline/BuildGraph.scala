@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.{SparqlQueries, TripleGen}
-import graft.io.{CommentFramedTsv, CuratorTables, Sinks, Sssom}
+import graft.io.{CommentFramedTsv, CuratorTables, HeaderedTsv, Sinks, Sssom}
 import graft.model.Triple
 import graft.operators.Barrier
 
@@ -88,16 +88,13 @@ object BuildGraph {
       psRaw = CommentFramedTsv.read(spark, in.phenotypicSeriesPath,
         Some(Seq("ps_id", "a", "b"))),
       genemap2 = CommentFramedTsv.read(spark, in.genemap2Path),
-      hgncRaw = spark.read.option("sep", "\t").option("header", "true")
-        .csv(in.hgncPath),
+      hgncRaw = HeaderedTsv.read(spark, in.hgncPath),
       exclusions = CuratorTables.exclusions(spark, in.exclusionsPath),
       protectd = CuratorTables.protected_(spark, in.protectedPath),
       caps = CuratorTables.knownCapitalizations(spark, in.capitalizationsPath),
       omimToMondo = Sssom.readOmimToMondo(spark, in.sssomPath),
-      mappings = spark.read.option("sep", "\t").option("header", "true")
-        .csv(in.mappingsPath),
-      pubmed = spark.read.option("sep", "\t").option("header", "true")
-        .csv(in.pubmedRefsPath)), versionDate)
+      mappings = HeaderedTsv.read(spark, in.mappingsPath),
+      pubmed = HeaderedTsv.read(spark, in.pubmedRefsPath)), versionDate)
 
   /** The REAL stage composition (main.py:227-528) over already-loaded
     * tables — every consumer (file build, q57's in-plan synthesized e2e

@@ -104,14 +104,11 @@ object OmimPipeline {
       .select("p_mim", "gene_mim").distinct()
     val labels = titles.select(col("mim").as("p_mim"), col("pref_titles"))
       .dropDuplicates("p_mim")
-    val idToSymbol = symbolToId.select(
-        regexp_replace(col("hgnc_id"), "^HGNC:", "").as("hgnc_id"), col("symbol"))
-      .dropDuplicates("hgnc_id")
     val synthesizedRaw = protected_
       .select("p_mim", "gene_mim", "hgnc_id")
       .join(broadcast(existing), Seq("p_mim", "gene_mim"), "left_anti")
       .join(broadcast(labels), Seq("p_mim"))
-      .join(broadcast(idToSymbol), Seq("hgnc_id"))
+      .join(broadcast(idToSymbol(symbolToId)), Seq("hgnc_id"))
       .select(
         concat(
           upper(substring(col("pref_titles"), 1, 1)),
@@ -125,6 +122,13 @@ object OmimPipeline {
         .withColumn("is_added_protection", lit(true)))
   }
 
+  /** The HGNC (symbol, id) map keyed by the bare id (the curator tables
+    * store `hgnc_id` without the `HGNC:` prefix), one symbol per id. */
+  private def idToSymbol(symbolToId: DataFrame): DataFrame =
+    symbolToId.select(
+        regexp_replace(col("hgnc_id"), "^HGNC:", "").as("hgnc_id"), col("symbol"))
+      .dropDuplicates("hgnc_id")
+
   /** Same flow for mim2gene (ref: update_mim_file_with_protected,
     * omim_txt_parser.py:174-193): a protected gene whose (mim, symbol)
     * pair is absent gets a synthesized 'gene' row with empty Entrez and
@@ -136,11 +140,8 @@ object OmimPipeline {
       col("hgnc_symbol"), col("ensembl_id"))
     val existing = base.select(col("mim").as("gene_mim"),
       coalesce(col("hgnc_symbol"), lit("")).as("symbol")).distinct()
-    val idToSymbol = symbolToId.select(
-        regexp_replace(col("hgnc_id"), "^HGNC:", "").as("hgnc_id"), col("symbol"))
-      .dropDuplicates("hgnc_id")
     val synthesized = protected_.select("gene_mim", "hgnc_id")
-      .join(broadcast(idToSymbol), Seq("hgnc_id"))
+      .join(broadcast(idToSymbol(symbolToId)), Seq("hgnc_id"))
       .join(broadcast(existing), Seq("gene_mim", "symbol"), "left_anti")
       .select(col("gene_mim").as("mim"), lit("gene").as("entry_type"),
         lit("").as("entrez_id"), col("symbol").as("hgnc_symbol"),

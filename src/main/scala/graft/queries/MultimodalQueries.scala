@@ -195,6 +195,41 @@ object MultimodalQueries {
       ORDER BY media_id
     """))
 
+  /** The constant-block oracle of the 8-bit JPEG decodes (q58d/e/g/k/l):
+    * per-block gray level from [[graft.multimodal.MediaSynth.jpeg]]'s
+    * formula, every statistic recomputed from it. */
+  private lazy val jpegBlocksOracleSql: String = """
+      WITH ids AS (
+        SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
+      d AS (
+        SELECT media_id,
+          (CASE media_id % 3
+             WHEN 0 THEN 8 * (2 + media_id % 5)
+             WHEN 1 THEN 8 * (2 + media_id % 4)
+             ELSE 16 * (1 + media_id % 3) END)::INT AS w,
+          (CASE media_id % 3
+             WHEN 0 THEN 8 * (2 + media_id % 4)
+             WHEN 1 THEN 8 * (2 + media_id % 3)
+             ELSE 16 * (1 + media_id % 2) END)::INT AS h
+        FROM ids),
+      blocks AS (
+        SELECT d.media_id, d.w, d.h,
+               ((d.media_id*37 + 11*gx.x + 23*gy.y + 3*gx.x*gy.y) % 256) AS g
+        FROM d,
+             (SELECT unnest(range(0, 8)) AS x) gx,
+             (SELECT unnest(range(0, 8)) AS y) gy
+        WHERE gx.x < d.w // 8 AND gy.y < d.h // 8)
+      SELECT media_id, 'jpeg' AS format, any_value(w) AS width,
+             any_value(h) AS height, 3 AS channels, 0 AS sample_rate,
+             (3 * any_value(w) * any_value(h))::BIGINT AS n_values,
+             (3 * 64 * sum(g))::BIGINT AS sum_values,
+             min(g)::INT AS min_value, max(g)::INT AS max_value,
+             (64 * sum(g))::BIGINT AS sum_r, (64 * sum(g))::BIGINT AS sum_g,
+             (64 * sum(g))::BIGINT AS sum_b
+      FROM blocks GROUP BY media_id
+      ORDER BY media_id
+    """
+
   /** Baseline JPEG payload decode end to end, pure JVM: byte-valid ITU
     * T.81 baseline files — grayscale, 4:4:4 color, and 4:2:0 subsampled
     * color with DRI/RSTn restart markers — are generated in-plan from
@@ -213,37 +248,7 @@ object MultimodalQueries {
     (s, d) =>
       Multimodal.extractContentStats(
         synthMedia(s, d, 300, graft.multimodal.MediaSynth.jpeg)).toDF().orderBy("media_id"),
-    Some("""
-      WITH ids AS (
-        SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
-      d AS (
-        SELECT media_id,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 5)
-             WHEN 1 THEN 8 * (2 + media_id % 4)
-             ELSE 16 * (1 + media_id % 3) END)::INT AS w,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 4)
-             WHEN 1 THEN 8 * (2 + media_id % 3)
-             ELSE 16 * (1 + media_id % 2) END)::INT AS h
-        FROM ids),
-      blocks AS (
-        SELECT d.media_id, d.w, d.h,
-               ((d.media_id*37 + 11*gx.x + 23*gy.y + 3*gx.x*gy.y) % 256) AS g
-        FROM d,
-             (SELECT unnest(range(0, 8)) AS x) gx,
-             (SELECT unnest(range(0, 8)) AS y) gy
-        WHERE gx.x < d.w // 8 AND gy.y < d.h // 8)
-      SELECT media_id, 'jpeg' AS format, any_value(w) AS width,
-             any_value(h) AS height, 3 AS channels, 0 AS sample_rate,
-             (3 * any_value(w) * any_value(h))::BIGINT AS n_values,
-             (3 * 64 * sum(g))::BIGINT AS sum_values,
-             min(g)::INT AS min_value, max(g)::INT AS max_value,
-             (64 * sum(g))::BIGINT AS sum_r, (64 * sum(g))::BIGINT AS sum_g,
-             (64 * sum(g))::BIGINT AS sum_b
-      FROM blocks GROUP BY media_id
-      ORDER BY media_id
-    """))
+    Some(jpegBlocksOracleSql))
 
   /** Arithmetic-coded (SOF9) JPEG payload decode end to end, pure JVM:
     * real T.81 Annex D/E QM-coder files — adaptive binary contexts over
@@ -261,37 +266,7 @@ object MultimodalQueries {
     (s, d) =>
       Multimodal.extractContentStats(
         synthMedia(s, d, 300, graft.multimodal.MediaSynth.arithJpeg)).toDF().orderBy("media_id"),
-    Some("""
-      WITH ids AS (
-        SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
-      d AS (
-        SELECT media_id,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 5)
-             WHEN 1 THEN 8 * (2 + media_id % 4)
-             ELSE 16 * (1 + media_id % 3) END)::INT AS w,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 4)
-             WHEN 1 THEN 8 * (2 + media_id % 3)
-             ELSE 16 * (1 + media_id % 2) END)::INT AS h
-        FROM ids),
-      blocks AS (
-        SELECT d.media_id, d.w, d.h,
-               ((d.media_id*37 + 11*gx.x + 23*gy.y + 3*gx.x*gy.y) % 256) AS g
-        FROM d,
-             (SELECT unnest(range(0, 8)) AS x) gx,
-             (SELECT unnest(range(0, 8)) AS y) gy
-        WHERE gx.x < d.w // 8 AND gy.y < d.h // 8)
-      SELECT media_id, 'jpeg' AS format, any_value(w) AS width,
-             any_value(h) AS height, 3 AS channels, 0 AS sample_rate,
-             (3 * any_value(w) * any_value(h))::BIGINT AS n_values,
-             (3 * 64 * sum(g))::BIGINT AS sum_values,
-             min(g)::INT AS min_value, max(g)::INT AS max_value,
-             (64 * sum(g))::BIGINT AS sum_r, (64 * sum(g))::BIGINT AS sum_g,
-             (64 * sum(g))::BIGINT AS sum_b
-      FROM blocks GROUP BY media_id
-      ORDER BY media_id
-    """))
+    Some(jpegBlocksOracleSql))
 
   /** Arithmetic-coded sequential JPEG WITH restart markers (SOF9 +
     * DRI/RSTn, T.81 E.2.4) decode end to end: each DRI=2-MCU interval
@@ -306,37 +281,7 @@ object MultimodalQueries {
     (s, d) =>
       Multimodal.extractContentStats(
         synthMedia(s, d, 300, graft.multimodal.MediaSynth.arithRstJpeg)).toDF().orderBy("media_id"),
-    Some("""
-      WITH ids AS (
-        SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
-      d AS (
-        SELECT media_id,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 5)
-             WHEN 1 THEN 8 * (2 + media_id % 4)
-             ELSE 16 * (1 + media_id % 3) END)::INT AS w,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 4)
-             WHEN 1 THEN 8 * (2 + media_id % 3)
-             ELSE 16 * (1 + media_id % 2) END)::INT AS h
-        FROM ids),
-      blocks AS (
-        SELECT d.media_id, d.w, d.h,
-               ((d.media_id*37 + 11*gx.x + 23*gy.y + 3*gx.x*gy.y) % 256) AS g
-        FROM d,
-             (SELECT unnest(range(0, 8)) AS x) gx,
-             (SELECT unnest(range(0, 8)) AS y) gy
-        WHERE gx.x < d.w // 8 AND gy.y < d.h // 8)
-      SELECT media_id, 'jpeg' AS format, any_value(w) AS width,
-             any_value(h) AS height, 3 AS channels, 0 AS sample_rate,
-             (3 * any_value(w) * any_value(h))::BIGINT AS n_values,
-             (3 * 64 * sum(g))::BIGINT AS sum_values,
-             min(g)::INT AS min_value, max(g)::INT AS max_value,
-             (64 * sum(g))::BIGINT AS sum_r, (64 * sum(g))::BIGINT AS sum_g,
-             (64 * sum(g))::BIGINT AS sum_b
-      FROM blocks GROUP BY media_id
-      ORDER BY media_id
-    """))
+    Some(jpegBlocksOracleSql))
 
   /** Progressive ARITHMETIC-coded (SOF10) JPEG payload decode end to
     * end, pure JVM: real T.81 G.2 files — per-scan QM entropy segments
@@ -354,37 +299,7 @@ object MultimodalQueries {
     (s, d) =>
       Multimodal.extractContentStats(
         synthMedia(s, d, 300, graft.multimodal.MediaSynth.progArithJpeg)).toDF().orderBy("media_id"),
-    Some("""
-      WITH ids AS (
-        SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
-      d AS (
-        SELECT media_id,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 5)
-             WHEN 1 THEN 8 * (2 + media_id % 4)
-             ELSE 16 * (1 + media_id % 3) END)::INT AS w,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 4)
-             WHEN 1 THEN 8 * (2 + media_id % 3)
-             ELSE 16 * (1 + media_id % 2) END)::INT AS h
-        FROM ids),
-      blocks AS (
-        SELECT d.media_id, d.w, d.h,
-               ((d.media_id*37 + 11*gx.x + 23*gy.y + 3*gx.x*gy.y) % 256) AS g
-        FROM d,
-             (SELECT unnest(range(0, 8)) AS x) gx,
-             (SELECT unnest(range(0, 8)) AS y) gy
-        WHERE gx.x < d.w // 8 AND gy.y < d.h // 8)
-      SELECT media_id, 'jpeg' AS format, any_value(w) AS width,
-             any_value(h) AS height, 3 AS channels, 0 AS sample_rate,
-             (3 * any_value(w) * any_value(h))::BIGINT AS n_values,
-             (3 * 64 * sum(g))::BIGINT AS sum_values,
-             min(g)::INT AS min_value, max(g)::INT AS max_value,
-             (64 * sum(g))::BIGINT AS sum_r, (64 * sum(g))::BIGINT AS sum_g,
-             (64 * sum(g))::BIGINT AS sum_b
-      FROM blocks GROUP BY media_id
-      ORDER BY media_id
-    """))
+    Some(jpegBlocksOracleSql))
 
   /** Lossless (SOF3, process 14) JPEG payload decode end to end, pure
     * JVM: real Huffman-coded prediction-difference files — all seven
@@ -446,37 +361,7 @@ object MultimodalQueries {
     (s, d) =>
       Multimodal.extractContentStats(
         synthMedia(s, d, 300, graft.multimodal.MediaSynth.progressiveJpeg)).toDF().orderBy("media_id"),
-    Some("""
-      WITH ids AS (
-        SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
-      d AS (
-        SELECT media_id,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 5)
-             WHEN 1 THEN 8 * (2 + media_id % 4)
-             ELSE 16 * (1 + media_id % 3) END)::INT AS w,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 4)
-             WHEN 1 THEN 8 * (2 + media_id % 3)
-             ELSE 16 * (1 + media_id % 2) END)::INT AS h
-        FROM ids),
-      blocks AS (
-        SELECT d.media_id, d.w, d.h,
-               ((d.media_id*37 + 11*gx.x + 23*gy.y + 3*gx.x*gy.y) % 256) AS g
-        FROM d,
-             (SELECT unnest(range(0, 8)) AS x) gx,
-             (SELECT unnest(range(0, 8)) AS y) gy
-        WHERE gx.x < d.w // 8 AND gy.y < d.h // 8)
-      SELECT media_id, 'jpeg' AS format, any_value(w) AS width,
-             any_value(h) AS height, 3 AS channels, 0 AS sample_rate,
-             (3 * any_value(w) * any_value(h))::BIGINT AS n_values,
-             (3 * 64 * sum(g))::BIGINT AS sum_values,
-             min(g)::INT AS min_value, max(g)::INT AS max_value,
-             (64 * sum(g))::BIGINT AS sum_r, (64 * sum(g))::BIGINT AS sum_g,
-             (64 * sum(g))::BIGINT AS sum_b
-      FROM blocks GROUP BY media_id
-      ORDER BY media_id
-    """))
+    Some(jpegBlocksOracleSql))
 
   /** Image near-duplicate detection over REAL decoded pixels — the
     * multimodal dedup step of a training-data pipeline: a corpus of
@@ -930,19 +815,9 @@ object MultimodalQueries {
       ORDER BY media_id
     """))
 
-  /** 12-bit extended-sequential (SOF1) decode — the precision leg of the
-    * JPEG matrix: grayscale DC-only 12-bit frames (level shift 2048,
-    * clamp to [0,4095], DC categories to 15), emitted as the top 8 bits
-    * of each sample. The oracle recomputes jpeg12Block >> 4 per pixel; a
-    * decoder that level-shifts by 128, caps categories at 11, or clamps
-    * to 8 bits before the downshift breaks the hash. */
-  val q58jExtended12Decode = QueryDef(
-    "q58j_extended12_decode",
-    (s, d) =>
-      Multimodal.extractContentStats(
-        synthMedia(s, d, 300, graft.multimodal.MediaSynth.jpeg12))
-        .toDF().orderBy("media_id"),
-    Some("""
+  /** The constant-block oracle of the 12-bit JPEG decodes (q58j/m/n/o/p):
+    * the 12-bit block level downshifted to its top 8 bits. */
+  private lazy val jpeg12BlocksOracleSql: String = """
       WITH ids AS (
         SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
       d AS (
@@ -972,7 +847,21 @@ object MultimodalQueries {
              (64 * sum(g))::BIGINT AS sum_b
       FROM blocks GROUP BY media_id
       ORDER BY media_id
-    """))
+    """
+
+  /** 12-bit extended-sequential (SOF1) decode — the precision leg of the
+    * JPEG matrix: grayscale DC-only 12-bit frames (level shift 2048,
+    * clamp to [0,4095], DC categories to 15), emitted as the top 8 bits
+    * of each sample. The oracle recomputes jpeg12Block >> 4 per pixel; a
+    * decoder that level-shifts by 128, caps categories at 11, or clamps
+    * to 8 bits before the downshift breaks the hash. */
+  val q58jExtended12Decode = QueryDef(
+    "q58j_extended12_decode",
+    (s, d) =>
+      Multimodal.extractContentStats(
+        synthMedia(s, d, 300, graft.multimodal.MediaSynth.jpeg12))
+        .toDF().orderBy("media_id"),
+    Some(jpeg12BlocksOracleSql))
 
   /** 12-bit COLOR extended-sequential (SOF1, 3 components 4:4:4)
     * decode: per-component 12-bit planes, interleaved scan with
@@ -988,37 +877,7 @@ object MultimodalQueries {
       Multimodal.extractContentStats(
         synthMedia(s, d, 300, graft.multimodal.MediaSynth.jpeg12Color))
         .toDF().orderBy("media_id"),
-    Some("""
-      WITH ids AS (
-        SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
-      d AS (
-        SELECT media_id,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 5)
-             WHEN 1 THEN 8 * (2 + media_id % 4)
-             ELSE 16 * (1 + media_id % 3) END)::INT AS w,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 4)
-             WHEN 1 THEN 8 * (2 + media_id % 3)
-             ELSE 16 * (1 + media_id % 2) END)::INT AS h
-        FROM ids),
-      blocks AS (
-        SELECT d.media_id, d.w, d.h,
-               (((d.media_id*151 + 29*gx.x + 17*gy.y + 5*gx.x*gy.y) % 4096) // 16) AS g
-        FROM d,
-             (SELECT unnest(range(0, 8)) AS x) gx,
-             (SELECT unnest(range(0, 8)) AS y) gy
-        WHERE gx.x < d.w // 8 AND gy.y < d.h // 8)
-      SELECT media_id, 'jpeg' AS format, any_value(w) AS width,
-             any_value(h) AS height, 3 AS channels, 0 AS sample_rate,
-             (3 * any_value(w) * any_value(h))::BIGINT AS n_values,
-             (3 * 64 * sum(g))::BIGINT AS sum_values,
-             min(g)::INT AS min_value, max(g)::INT AS max_value,
-             (64 * sum(g))::BIGINT AS sum_r, (64 * sum(g))::BIGINT AS sum_g,
-             (64 * sum(g))::BIGINT AS sum_b
-      FROM blocks GROUP BY media_id
-      ORDER BY media_id
-    """))
+    Some(jpeg12BlocksOracleSql))
 
   /** 12-bit PROGRESSIVE ARITHMETIC (SOF10 at precision 12) decode — the
     * composition of the q58j 12-bit sample path and the q58k G.2
@@ -1038,37 +897,7 @@ object MultimodalQueries {
       Multimodal.extractContentStats(
         synthMedia(s, d, 300, graft.multimodal.MediaSynth.prog12ArithJpeg))
         .toDF().orderBy("media_id"),
-    Some("""
-      WITH ids AS (
-        SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
-      d AS (
-        SELECT media_id,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 5)
-             WHEN 1 THEN 8 * (2 + media_id % 4)
-             ELSE 16 * (1 + media_id % 3) END)::INT AS w,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 4)
-             WHEN 1 THEN 8 * (2 + media_id % 3)
-             ELSE 16 * (1 + media_id % 2) END)::INT AS h
-        FROM ids),
-      blocks AS (
-        SELECT d.media_id, d.w, d.h,
-               (((d.media_id*151 + 29*gx.x + 17*gy.y + 5*gx.x*gy.y) % 4096) // 16) AS g
-        FROM d,
-             (SELECT unnest(range(0, 8)) AS x) gx,
-             (SELECT unnest(range(0, 8)) AS y) gy
-        WHERE gx.x < d.w // 8 AND gy.y < d.h // 8)
-      SELECT media_id, 'jpeg' AS format, any_value(w) AS width,
-             any_value(h) AS height, 3 AS channels, 0 AS sample_rate,
-             (3 * any_value(w) * any_value(h))::BIGINT AS n_values,
-             (3 * 64 * sum(g))::BIGINT AS sum_values,
-             min(g)::INT AS min_value, max(g)::INT AS max_value,
-             (64 * sum(g))::BIGINT AS sum_r, (64 * sum(g))::BIGINT AS sum_g,
-             (64 * sum(g))::BIGINT AS sum_b
-      FROM blocks GROUP BY media_id
-      ORDER BY media_id
-    """))
+    Some(jpeg12BlocksOracleSql))
 
   /** 12-bit SEQUENTIAL ARITHMETIC (SOF9 at precision 12) decode — the
     * remaining sequential leg of the 12-bit matrix
@@ -1085,37 +914,7 @@ object MultimodalQueries {
       Multimodal.extractContentStats(
         synthMedia(s, d, 300, graft.multimodal.MediaSynth.seq12ArithJpeg))
         .toDF().orderBy("media_id"),
-    Some("""
-      WITH ids AS (
-        SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
-      d AS (
-        SELECT media_id,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 5)
-             WHEN 1 THEN 8 * (2 + media_id % 4)
-             ELSE 16 * (1 + media_id % 3) END)::INT AS w,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 4)
-             WHEN 1 THEN 8 * (2 + media_id % 3)
-             ELSE 16 * (1 + media_id % 2) END)::INT AS h
-        FROM ids),
-      blocks AS (
-        SELECT d.media_id, d.w, d.h,
-               (((d.media_id*151 + 29*gx.x + 17*gy.y + 5*gx.x*gy.y) % 4096) // 16) AS g
-        FROM d,
-             (SELECT unnest(range(0, 8)) AS x) gx,
-             (SELECT unnest(range(0, 8)) AS y) gy
-        WHERE gx.x < d.w // 8 AND gy.y < d.h // 8)
-      SELECT media_id, 'jpeg' AS format, any_value(w) AS width,
-             any_value(h) AS height, 3 AS channels, 0 AS sample_rate,
-             (3 * any_value(w) * any_value(h))::BIGINT AS n_values,
-             (3 * 64 * sum(g))::BIGINT AS sum_values,
-             min(g)::INT AS min_value, max(g)::INT AS max_value,
-             (64 * sum(g))::BIGINT AS sum_r, (64 * sum(g))::BIGINT AS sum_g,
-             (64 * sum(g))::BIGINT AS sum_b
-      FROM blocks GROUP BY media_id
-      ORDER BY media_id
-    """))
+    Some(jpeg12BlocksOracleSql))
 
   /** 12-bit PROGRESSIVE HUFFMAN (SOF2 at precision 12) decode — the
     * last composable 12-bit leg
@@ -1133,37 +932,7 @@ object MultimodalQueries {
       Multimodal.extractContentStats(
         synthMedia(s, d, 300, graft.multimodal.MediaSynth.prog12Jpeg))
         .toDF().orderBy("media_id"),
-    Some("""
-      WITH ids AS (
-        SELECT DISTINCT (o_orderkey % 300)::BIGINT AS media_id FROM orders),
-      d AS (
-        SELECT media_id,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 5)
-             WHEN 1 THEN 8 * (2 + media_id % 4)
-             ELSE 16 * (1 + media_id % 3) END)::INT AS w,
-          (CASE media_id % 3
-             WHEN 0 THEN 8 * (2 + media_id % 4)
-             WHEN 1 THEN 8 * (2 + media_id % 3)
-             ELSE 16 * (1 + media_id % 2) END)::INT AS h
-        FROM ids),
-      blocks AS (
-        SELECT d.media_id, d.w, d.h,
-               (((d.media_id*151 + 29*gx.x + 17*gy.y + 5*gx.x*gy.y) % 4096) // 16) AS g
-        FROM d,
-             (SELECT unnest(range(0, 8)) AS x) gx,
-             (SELECT unnest(range(0, 8)) AS y) gy
-        WHERE gx.x < d.w // 8 AND gy.y < d.h // 8)
-      SELECT media_id, 'jpeg' AS format, any_value(w) AS width,
-             any_value(h) AS height, 3 AS channels, 0 AS sample_rate,
-             (3 * any_value(w) * any_value(h))::BIGINT AS n_values,
-             (3 * 64 * sum(g))::BIGINT AS sum_values,
-             min(g)::INT AS min_value, max(g)::INT AS max_value,
-             (64 * sum(g))::BIGINT AS sum_r, (64 * sum(g))::BIGINT AS sum_g,
-             (64 * sum(g))::BIGINT AS sum_b
-      FROM blocks GROUP BY media_id
-      ORDER BY media_id
-    """))
+    Some(jpeg12BlocksOracleSql))
 
   /** ARITHMETIC hierarchical (SOF9/SOF13 inside a DHP pyramid) decode —
     * the QM coder composed with the Annex J multi-frame driver

@@ -913,9 +913,19 @@ object SimilarityQueries {
   /** The gated default configuration (kSub = 16). */
   private lazy val ivfPqCtes: String = ivfPqCtesK(16)
 
-  private lazy val ivfPqOracleSql: String = ivfPqCtes + """
+  /** The top-3 tail of the ADC-scored oracles (over a `ranked` CTE). */
+  private lazy val adcTop3Sql: String = """
       SELECT probe_id, rank, id, round(adc, 9) AS adc
       FROM ranked WHERE rank <= 3
+      ORDER BY probe_id, rank
+    """
+
+  private lazy val ivfPqOracleSql: String = ivfPqCtes + adcTop3Sql
+
+  /** The top-3 tail of the re-ranked oracles (over an `rr` CTE). */
+  private lazy val cosTop3Sql: String = """
+      SELECT probe_id, rank, id, round(cos, 9) AS cos
+      FROM rr WHERE rank <= 3
       ORDER BY probe_id, rank
     """
 
@@ -1079,11 +1089,7 @@ object SimilarityQueries {
           round(col("cos"), 9).as("cos"))
         .orderBy("probe_id", "rank")
     },
-    Some(pqRerankCtes + """
-      SELECT probe_id, rank, id, round(cos, 9) AS cos
-      FROM rr WHERE rank <= 3
-      ORDER BY probe_id, rank
-    """),
+    Some(pqRerankCtes + cosTop3Sql),
     benchSkip = true)
 
   /** INCREMENTAL IVF-PQ maintenance ([[Similarity.appendIvfPqIndex]])
@@ -1127,11 +1133,7 @@ object SimilarityQueries {
         .orderBy("probe_id", "rank")
     },
     Some(ivfPqCtesK(16, trainWhere = "vec_id % 2 = 0",
-      pqSeedWhere = "vec_id % 2 = 0 AND vec_id < 32") + """
-      SELECT probe_id, rank, id, round(adc, 9) AS adc
-      FROM ranked WHERE rank <= 3
-      ORDER BY probe_id, rank
-    """),
+      pqSeedWhere = "vec_id % 2 = 0 AND vec_id < 32") + adcTop3Sql),
     benchSkip = true)
 
   /** BULK kNN join on the QUANTIZED index
@@ -1174,11 +1176,7 @@ object SimilarityQueries {
           round(col("adc"), 9).as("adc"))
         .orderBy("probe_id", "rank")
     },
-    Some(ivfPqCtesK(16, probeWhere = "TRUE") + """
-      SELECT probe_id, rank, id, round(adc, 9) AS adc
-      FROM ranked WHERE rank <= 3
-      ORDER BY probe_id, rank
-    """),
+    Some(ivfPqCtesK(16, probeWhere = "TRUE") + adcTop3Sql),
     benchSkip = true)
 
   /** Recall@3 of the RE-RANKED persisted IVF-PQ index (q127d's flow)
@@ -1646,6 +1644,11 @@ object SimilarityQueries {
     Some(ivfOracle("u.vec_id < 20", candWhere = "a.id % 7 <> 3")),
     benchSkip = true)
 
+  /** The oracle of both PQ delete queries (q134c/q134d): the index
+    * without the tombstoned ids (`vec_id % 7 = 3`). */
+  private lazy val pqDeleteOracleSql: String =
+    ivfPqCtesK(16, candWhere = "cand.vec_id % 7 <> 3") + adcTop3Sql
+
   /** DELETE on the QUANTIZED index — q134's contract proven for the
     * PQ serve path: the q127c flow (train, writeIvfPqIndex, persisted
     * books) with every 7th vector tombstoned
@@ -1673,11 +1676,7 @@ object SimilarityQueries {
           round(col("adc"), 9).as("adc"))
         .orderBy("probe_id", "rank")
     },
-    Some(ivfPqCtesK(16, candWhere = "cand.vec_id % 7 <> 3") + """
-      SELECT probe_id, rank, id, round(adc, 9) AS adc
-      FROM ranked WHERE rank <= 3
-      ORDER BY probe_id, rank
-    """),
+    Some(pqDeleteOracleSql),
     benchSkip = true)
 
   /** COMPACTION on the QUANTIZED index — q134b's contract proven for
@@ -1710,11 +1709,7 @@ object SimilarityQueries {
           round(col("adc"), 9).as("adc"))
         .orderBy("probe_id", "rank")
     },
-    Some(ivfPqCtesK(16, candWhere = "cand.vec_id % 7 <> 3") + """
-      SELECT probe_id, rank, id, round(adc, 9) AS adc
-      FROM ranked WHERE rank <= 3
-      ORDER BY probe_id, rank
-    """),
+    Some(pqDeleteOracleSql),
     benchSkip = true)
 
   /** Index HEALTH report ([[Similarity.indexHealth]]) with
@@ -2176,11 +2171,7 @@ object SimilarityQueries {
           round(col("cos"), 9).as("cos"))
         .orderBy("probe_id", "rank")
     },
-    Some(pqRerankCtes + """
-      SELECT probe_id, rank, id, round(cos, 9) AS cos
-      FROM rr WHERE rank <= 3
-      ORDER BY probe_id, rank
-    """),
+    Some(pqRerankCtes + cosTop3Sql),
     benchSetup = Some(ensureServePq))
 
   /** TIMED filtered-serve stack (q133f's shape over the PERSISTED

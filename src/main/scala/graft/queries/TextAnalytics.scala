@@ -427,7 +427,7 @@ object TextAnalytics {
       b$r AS MATERIALIZED (SELECT pair FROM p$r ORDER BY cnt DESC, pair LIMIT 1),
       v$r AS MATERIALIZED (
         -- pairs run dry before round $r → b$r is empty and the scalar
-        -- subquery is NULL; keep the state (Bpe.train stops early) rather
+        -- subquery is NULL; keep the state (Bpe.trainModel stops early) rather
         -- than letting replace(s, NULL, NULL) null the whole vocabulary
         SELECT w, freq,
                CASE WHEN (SELECT pair FROM b$r) IS NULL THEN s

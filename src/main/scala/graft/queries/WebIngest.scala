@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -446,6 +447,33 @@ object WebIngest {
     * duplicated, or partition-misfiled row changes a digest and cannot
     * hash-match. File-count reduction and preserved partition pruning
     * are pinned in CompactionSpec (file counts aren't SQL-expressible). */
+  /** Per-year row counts and bit_xor row digests of a compacted orders
+    * table — [[yearDigestsOracleSql]] in Spark. */
+  private def yearDigests(orders: DataFrame): DataFrame = {
+    def rowHash(cols: org.apache.spark.sql.Column*) =
+      conv(substring(md5(concat_ws("|", cols: _*)), 1, 15), 16, 10)
+        .cast("long")
+    orders
+      .withColumn("h", rowHash(col("o_orderkey"), col("o_custkey"),
+        round(col("o_totalprice") * 100, 0).cast("long")))
+      .groupBy(col("o_year").cast("int").as("o_year"))
+      .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("digest"))
+      .orderBy("o_year")
+  }
+
+  /** Per-year row counts and bit_xor row digests of `orders` — the
+    * framing-independent answer of both compaction queries (q124/q124b). */
+  private lazy val yearDigestsOracleSql: String = """
+      SELECT year(o_orderdate)::INT AS o_year, count(*) AS n_rows,
+             bit_xor(('0x' || substr(md5(
+               o_orderkey::VARCHAR || '|' || o_custkey::VARCHAR || '|' ||
+               round(o_totalprice * 100)::BIGINT::VARCHAR), 1, 15))::BIGINT)
+               AS digest
+      FROM orders
+      GROUP BY 1
+      ORDER BY o_year
+    """
+
   val q124CompactFiles = QueryDef(
     "q124_compact_files",
     (s, d) => {
@@ -461,26 +489,9 @@ object WebIngest {
       graft.operators.Compaction.compact(s, in, out,
         partitionCols = Seq("o_year"), binKey = "o_orderkey",
         targetBytes = 128L * 1024 * 1024)
-      def rowHash(cols: org.apache.spark.sql.Column*) =
-        conv(substring(md5(concat_ws("|", cols: _*)), 1, 15), 16, 10)
-          .cast("long")
-      s.read.parquet(out)
-        .withColumn("h", rowHash(col("o_orderkey"), col("o_custkey"),
-          round(col("o_totalprice") * 100, 0).cast("long")))
-        .groupBy(col("o_year").cast("int").as("o_year"))
-        .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("digest"))
-        .orderBy("o_year")
+      yearDigests(s.read.parquet(out))
     },
-    Some("""
-      SELECT year(o_orderdate)::INT AS o_year, count(*) AS n_rows,
-             bit_xor(('0x' || substr(md5(
-               o_orderkey::VARCHAR || '|' || o_custkey::VARCHAR || '|' ||
-               round(o_totalprice * 100)::BIGINT::VARCHAR), 1, 15))::BIGINT)
-               AS digest
-      FROM orders
-      GROUP BY 1
-      ORDER BY o_year
-    """))
+    Some(yearDigestsOracleSql))
 
   /** CLUSTERED compaction ([[graft.operators.Compaction.compactClustered]])
     * — the `OPTIMIZE ... ZORDER BY` maintenance shape: the fragmented
@@ -507,26 +518,9 @@ object WebIngest {
       graft.operators.Compaction.compactClustered(s, in, out,
         partitionCols = Seq("o_year"), clusterKey = zkey,
         targetBytes = 128L * 1024 * 1024)
-      def rowHash(cols: org.apache.spark.sql.Column*) =
-        conv(substring(md5(concat_ws("|", cols: _*)), 1, 15), 16, 10)
-          .cast("long")
-      s.read.parquet(out)
-        .withColumn("h", rowHash(col("o_orderkey"), col("o_custkey"),
-          round(col("o_totalprice") * 100, 0).cast("long")))
-        .groupBy(col("o_year").cast("int").as("o_year"))
-        .agg(count(lit(1)).as("n_rows"), expr("bit_xor(h)").as("digest"))
-        .orderBy("o_year")
+      yearDigests(s.read.parquet(out))
     },
-    Some("""
-      SELECT year(o_orderdate)::INT AS o_year, count(*) AS n_rows,
-             bit_xor(('0x' || substr(md5(
-               o_orderkey::VARCHAR || '|' || o_custkey::VARCHAR || '|' ||
-               round(o_totalprice * 100)::BIGINT::VARCHAR), 1, 15))::BIGINT)
-               AS digest
-      FROM orders
-      GROUP BY 1
-      ORDER BY o_year
-    """))
+    Some(yearDigestsOracleSql))
 
   /** Population-stability-index drift detection between corpus versions
     * — the data-quality monitor a training pipeline runs before every

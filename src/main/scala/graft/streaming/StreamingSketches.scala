@@ -19,7 +19,8 @@ import graft.operators.Sketches
   * stream ≡ batch on the final update).
   *
   * Output is the SORTED sample values; consumers take the nearest-rank
-  * element `ceil(q·n)` ([[Sketches.quantileEstimate]] convention).
+  * element `ceil(q·n)` ([[StreamingSketches.estimate]] over
+  * [[Sketches.nearestRank]]).
   *
   * The reduce path amortizes the bound: values append until 2k then
   * trim to the k smallest — O(log k) amortized per row, state ≤ 2k. */
@@ -27,25 +28,20 @@ class QuantileSketchAgg(k: Int)
     extends Aggregator[(Long, Double), Seq[(Long, Double)], Seq[Double]] {
   require(k > 0)
 
-  // multiset take-k (NO distinct): Spark only ever merges buffers over
-  // DISJOINT row subsets, and the batch sketch counts every row — a
-  // distinct here diverged from batch whenever rows shared (hash, value)
-  private def trim(b: Seq[(Long, Double)]): Seq[(Long, Double)] =
-    if (b.length <= k) b else b.sorted.take(k)
-
+  // the buffer appends until 2k, then keeps the k smallest: Spark only
+  // ever merges buffers over DISJOINT row subsets, so the multiset
+  // take-k of Sketches.quantileMerge is the batch sketch's sample
   override def zero: Seq[(Long, Double)] = Vector.empty
 
   override def reduce(b: Seq[(Long, Double)],
-      a: (Long, Double)): Seq[(Long, Double)] = {
-    val appended = b :+ a
-    if (appended.length > 2 * k) trim(appended) else appended
-  }
+      a: (Long, Double)): Seq[(Long, Double)] =
+    if (b.length >= 2 * k) Sketches.quantileMerge(b, Seq(a), k) else b :+ a
 
   override def merge(a: Seq[(Long, Double)],
-      b: Seq[(Long, Double)]): Seq[(Long, Double)] = trim(a ++ b)
+      b: Seq[(Long, Double)]): Seq[(Long, Double)] = Sketches.quantileMerge(a, b, k)
 
   override def finish(r: Seq[(Long, Double)]): Seq[Double] =
-    trim(r).map(_._2).sorted
+    Sketches.quantileMerge(r, Nil, k).map(_._2).sorted
 
   override def bufferEncoder: Encoder[Seq[(Long, Double)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[(Long, Double)]]()
@@ -69,9 +65,6 @@ object StreamingSketches {
     udaf(new QuantileSketchAgg(k), Encoders.product[(Long, Double)])
 
   /** Nearest-rank estimate over the emitted sorted sample. */
-  def estimate(sample: Column, q: Double): Column = {
-    import org.apache.spark.sql.functions._
-    element_at(sample,
-      greatest(lit(1), ceil(lit(q) * size(sample)).cast("int")))
-  }
+  def estimate(sample: Column, q: Double): Column =
+    Sketches.nearestRank(sample, org.apache.spark.sql.functions.size(sample), q)
 }

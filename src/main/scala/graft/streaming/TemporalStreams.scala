@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.TemporalJoins
+
 /** Streaming twins of [[graft.operators.TemporalJoins]] — the continuous
   * forms of the as-of and range joins, completing the streaming suite
   * (every batch operator family now has one: tumbling/sliding/session/
@@ -36,8 +38,9 @@ object TemporalStreams {
   /** Streaming point-in-interval join ([lo, hi), like the batch twin).
     *
     * Spark refuses a stream-stream join on a bare range predicate (no
-    * equality ⇒ unbounded state), so this is the batch operator's
-    * bucketization verbatim on streams: intervals explode to the
+    * equality ⇒ unbounded state), so this runs the batch operator's
+    * checks and bucketization ([[TemporalJoins.bucketed]]) on the
+    * watermarked streams: intervals explode to the
     * fixed-width epoch buckets they cover, points map to exactly one
     * bucket, and the join is EQUI on the bucket id — plus the
     * `lo <= pt <= lo + maxWidth` time-range condition between the two
@@ -65,37 +68,20 @@ object TemporalStreams {
                       intervals: DataFrame, loTime: String, hiTime: String,
                       bucketWidth: Long, maxWidth: Long,
                       horizon: String): DataFrame = {
-    require(bucketWidth > 0, "bucketWidth must be positive")
     require(maxWidth > 0, "maxWidth must be positive")
-    val shared = points.columns.toSeq.intersect(intervals.columns.toSeq)
-    require(shared.isEmpty,
-      s"points and intervals share column names: ${shared.mkString(",")} — rename before joining")
-    val reserved = Seq("__pt", "__pbucket", "__lo", "__hi", "__ibucket")
-      .filter(r => points.columns.contains(r) || intervals.columns.contains(r))
-    require(reserved.isEmpty, s"reserved column names in use: ${reserved.mkString(",")}")
-    val p = points.withWatermark(pointTime, horizon)
-      .withColumn("__pt", col(pointTime).cast("long"))
-      .withColumn("__pbucket", floor(col("__pt") / bucketWidth).cast("long"))
-    val i = intervals.withWatermark(loTime, horizon)
-      // a null hi must DROP the interval like the batch twin (whose null
-      // __hi fails the filter) — least() would skip the null and mint a
-      // full-maxWidth interval instead
-      .filter(col(loTime).isNotNull && col(hiTime).isNotNull)
-      .withColumn("__lo", col(loTime).cast("long"))
-      .withColumn("__hi", least(col(hiTime).cast("long"), col("__lo") + maxWidth))
-      .filter(col("__hi") > col("__lo"))
-      .withColumn("__ibucket", explode(sequence(
-        floor(col("__lo") / bucketWidth).cast("long"),
-        floor((col("__hi") - 1) / bucketWidth).cast("long"))))
-    p.join(i,
-        col("__pbucket") === col("__ibucket") &&
-          // eviction bound between the two WATERMARKED event-time columns,
-          // ±1 s so truncation never excludes an admitted pair
-          col(pointTime) >= col(loTime) - expr("INTERVAL 1 SECONDS") &&
-          col(pointTime) <= col(loTime) + expr(s"INTERVAL ${maxWidth + 1} SECONDS") &&
-          // the actual match predicate, same granularity as the buckets
-          col("__pt") >= col("__lo") && col("__pt") < col("__hi"))
-      .drop("__pt", "__pbucket", "__lo", "__hi", "__ibucket")
+    val lo = col(loTime).cast("long")
+    // a null hi must DROP the interval like the batch twin (whose null
+    // __hi fails the filter) — least() would skip the null and mint a
+    // full-maxWidth interval instead
+    val hi = when(col(hiTime).isNotNull, least(col(hiTime).cast("long"), lo + maxWidth))
+    val (p, i) = TemporalJoins.bucketed(points.withWatermark(pointTime, horizon),
+      col(pointTime), intervals.withWatermark(loTime, horizon), lo, hi, bucketWidth)
+    p.join(i, TemporalJoins.bucketMatch &&
+        // eviction bound between the two WATERMARKED event-time columns,
+        // ±1 s so truncation never excludes an admitted pair
+        col(pointTime) >= col(loTime) - expr("INTERVAL 1 SECONDS") &&
+        col(pointTime) <= col(loTime) + expr(s"INTERVAL ${maxWidth + 1} SECONDS"))
+      .drop(TemporalJoins.BucketCols: _*)
   }
 
   final case class AsofRow(k: String, ts: java.sql.Timestamp, tag: Int,

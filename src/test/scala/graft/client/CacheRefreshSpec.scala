@@ -41,6 +41,15 @@ class CacheRefreshSpec extends SparkSpec {
     }
   }
 
+  test("seed mode anti-joins ids cached in either table") {
+    val all = Seq("1", "2", "3", "3").toDF("mim")
+    val tables = CacheRefresh.CacheTables(
+      mappings = Seq("2").toDF("mim"), pubmed = Seq("3").toDF("mim"))
+    val r = CacheRefresh.idsToFetch(all, tables, sinceDate = None)
+      .as[String].collect().toSeq
+    assert(r == Seq("1"))
+  }
+
   test("seed mode fetches only uncached ids and upserts them") {
     val allMims = Seq("100100", "100300", "614041").toDF("mim")
     val out = CacheRefresh.refresh(spark, cached, allMims, phenos,

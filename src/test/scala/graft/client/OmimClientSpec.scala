@@ -22,11 +22,4 @@ class OmimClientSpec extends SparkSpec {
     assert(parsed.selectExpr("explode(omim.entryList) AS e")
       .selectExpr("e.entry.mimNumber").count() == 2)
   }
-
-  test("idsToRefresh anti-joins cached ids") {
-    val all = Seq("1", "2", "3").toDF("mim")
-    val cached = Seq("2").toDF("mim")
-    val r = OmimClient.idsToRefresh(spark, all, cached).as[String].collect().toSet
-    assert(r == Set("1", "3"))
-  }
 }

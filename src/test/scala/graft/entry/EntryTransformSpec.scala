@@ -10,7 +10,10 @@ class EntryTransformSpec extends SparkSpec {
 
   private lazy val entries =
     EntryTransform.readEntries(spark, "src/test/resources/entries/entry_*.json")
-  private lazy val triples = EntryTransform.transform(entries).collect().toSet
+  private lazy val triples = {
+    import spark.implicits._
+    entries.flatMap(EntryTransform.entryTriples).collect().toSet
+  }
 
   test("reads all 8 fixture entries") {
     assert(entries.count() == 8)

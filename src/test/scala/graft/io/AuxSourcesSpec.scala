@@ -19,9 +19,6 @@ class AuxSourcesSpec extends SparkSpec {
   test("removeAngleBrackets strips wrapping <> only") {
     assert(AuxSources.removeAngleBrackets("<https://x/1>") == "https://x/1")
     assert(AuxSources.removeAngleBrackets("https://x/1") == "https://x/1")
-    val r = Seq("<https://x/2>").toDF("u")
-      .select(AuxSources.stripAngles($"u")).as[String].collect().head
-    assert(r == "https://x/2")
   }
 
   test("staleCacheRows applies the one-day precaution") {
@@ -34,14 +31,16 @@ class AuxSourcesSpec extends SparkSpec {
     assert(stale == Set("100100"))
   }
 
-  test("observeBadRows surfaces metrics without a second scan") {
-    val df = Seq(("a", 1), (null, 2), ("c", 3), (null, 4)).toDF("k", "v")
-    val obs = org.apache.spark.sql.Observation("qc")
-    AuxSources.observeBadRows(df, $"k".isNotNull, obs).collect()
-    val m = obs.get
-    assert(m("bad") == 2L && m("total") == 4L)
-    AuxSources.assertBadRowRate(m("bad").asInstanceOf[Long],
-      m("total").asInstanceOf[Long], maxRate = 0.6)
+  test("the A11 bad-row guard: hgncSymbolIdMap + assertBadRowRate") {
+    val hgnc = Seq(("HGNC:1", "A1"), (null, "B2"), ("HGNC:3", " "), ("HGNC:4", "D4"))
+      .toDF("hgnc_id", "symbol")
+    // 2 bad of 4: over the 1% rate and over the one-row tolerance
+    intercept[IllegalArgumentException](graft.pipeline.OmimPipeline.hgncSymbolIdMap(hgnc))
+    // 1 bad of 3 is tolerated, and the bad row is dropped
+    val oneBad = hgnc.filter($"symbol" =!= " ")
+    assert(graft.pipeline.OmimPipeline.hgncSymbolIdMap(oneBad).as[(String, String)]
+      .collect().toSet == Set(("A1", "HGNC:1"), ("D4", "HGNC:4")))
+    AuxSources.assertBadRowRate(2, 4, maxRate = 0.6)
     intercept[IllegalArgumentException] {
       AuxSources.assertBadRowRate(2, 4, maxRate = 0.1)
     }

@@ -16,7 +16,7 @@ class BpeSpec extends SparkSpec {
     //   "newest low"    → "newest", " low"
     // vocab: low:1, " lower":1, " low":2, newest:1
     val docs = Seq((1L, "low lower low"), (2L, "newest low")).toDF("doc_id", "text")
-    val merges = Bpe.train(docs, col("text"), 4)
+    val merges = Bpe.trainModel(docs, col("text"), 4)._1
     // r1: {l}{o} and {o}{w} both weigh 4 → tie-break ascending picks {l}{o}
     // r2: {lo}{w} weighs 4
     // r3: { }{low} weighs 3
@@ -27,7 +27,7 @@ class BpeSpec extends SparkSpec {
 
   test("merge application is greedy left-to-right fuse-and-skip") {
     val docs = Seq((1L, "aaa")).toDF("doc_id", "text")
-    val merges = Bpe.train(docs, col("text"), 1)
+    val merges = Bpe.trainModel(docs, col("text"), 1)._1
     assert(merges == Seq("{a}{a}"))
     // "aaa" under merge (a,a): fuse positions 0-1, SKIP the fused symbol,
     // leaving ["aa","a"] — never ["aa","aa"] from overlap
@@ -40,7 +40,7 @@ class BpeSpec extends SparkSpec {
     val docs = Seq(
       (1L, "low lower low"), (2L, "newest low"), (3L, "low low low low"))
       .toDF("doc_id", "text")
-    val merges = Bpe.train(docs, col("text"), 6)
+    val merges = Bpe.trainModel(docs, col("text"), 6)._1
     def budgets(ms: Seq[String]): Map[Long, Long] =
       Bpe.tokenCounts(docs, col("text"), col("doc_id"), ms)
         .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("n_bpe")).toMap
@@ -70,7 +70,7 @@ class BpeSpec extends SparkSpec {
           alphabet(rnd.nextInt(alphabet.length))).mkString).mkString(" "))
     }.toDF("doc_id", "text")
     val k = 60
-    val got = Bpe.train(corpus, col("text"), k)
+    val got = Bpe.trainModel(corpus, col("text"), k)._1
     // full-rescan reference: recount every adjacent pair each round —
     // the implementation the incremental index replaced
     val rows = Bpe.vocab(corpus, col("text")).select("w", "freq").collect()

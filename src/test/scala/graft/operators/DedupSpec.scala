@@ -134,7 +134,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash64: identical docs equal, near-dups within small hamming") {
-    val fp = Dedup.simhash64(docs, $"text", $"doc_id").as[(Long, Long)].collect().toMap
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    val fp = docs.select($"doc_id",
+        column(graft.expressions.Simhash64Expr(expression($"text"))))
+      .as[(Long, Long)].collect().toMap
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(hamming(fp(1L), fp(3L)) <= 20, "near-dup simhash64 too far")
     assert(hamming(fp(1L), fp(4L)) >= hamming(fp(1L), fp(3L)))

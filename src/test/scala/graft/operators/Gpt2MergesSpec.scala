@@ -43,7 +43,7 @@ class Gpt2MergesSpec extends SparkSpec {
     // the fixture IS this corpus's table serialized to the published
     // format — training and loading converge on identical wrapped pairs
     val docs = Seq((1L, "low lower low"), (2L, "newest low")).toDF("doc_id", "text")
-    assert(Bpe.train(docs, col("text"), 4) == Bpe.loadGpt2Merges(fixtureLines))
+    assert(Bpe.trainModel(docs, col("text"), 4)._1 == Bpe.loadGpt2Merges(fixtureLines))
   }
 
   test("table-driven application of a loaded file (hand-derived segmentation)") {
@@ -117,7 +117,7 @@ class Gpt2MergesSpec extends SparkSpec {
     // trained here — rank order, Ġ word markers and chained merges
     val corpus = Seq((1L, "low low low lower lower lowest lowest lowest"),
       (2L, "newest newest wider low")).toDF("doc_id", "text")
-    val trained = Bpe.train(corpus, col("text"), 12)
+    val trained = Bpe.trainModel(corpus, col("text"), 12)._1
     val published = Bpe.loadGpt2Merges(Seq("#version: 0.2",
       "l o", "lo w", "Ġ low", "Ġlow e", "s t", "Ġlowe st", "Ġlowe r",
       "e st", "e w", "ew est", "n ewest", "Ġ newest"))

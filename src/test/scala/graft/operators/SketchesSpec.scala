@@ -198,9 +198,10 @@ class SketchesSpec extends SparkSpec {
     val dup = hs.take(1)
     val withDup = Sketches.quantileMerge(dup, dup, k)
     assert(withDup == (dup ++ dup), "duplicate rows must survive the merge")
-    // estimator agrees with the in-plan nearest-rank selection
-    val est = Sketches.quantileEstimate(merged, 0.5)
+    // the one nearest-rank selection over the merged sample's values
     val vs = merged.map(_._2).sorted
+    val est = Seq(vs).toDF("vs")
+      .select(Sketches.nearestRank(col("vs"), size(col("vs")), 0.5)).as[Double].head()
     assert(est == vs(math.ceil(0.5 * k).toInt - 1))
   }
 }
